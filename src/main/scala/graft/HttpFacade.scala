@@ -2,6 +2,8 @@ package graft
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
@@ -37,6 +39,7 @@ import org.apache.spark.sql.DataFrame
 final class HttpFacade(hive: TaskHive) {
 
   @volatile private var server: HttpServer = _
+  @volatile private var pool: ExecutorService = _
 
   /** JSON array of the frame's rows in Spark's canonical encoding. */
   private def toJsonArray(df: DataFrame): String =
@@ -77,12 +80,16 @@ final class HttpFacade(hive: TaskHive) {
       }.toMap
 
   /** Bind and serve; port 0 picks an ephemeral port. Returns the bound
-    * port. Handlers run on a small fixed pool — each request is one
-    * Spark action, and the driver is the bottleneck by design. */
+    * port. Handlers run on a small fixed pool of `graft-http-<n>`
+    * threads — each request is one Spark action, and the driver is the
+    * bottleneck by design. [[stop]] shuts the pool down, so a stopped
+    * facade leaves no thread that keeps the JVM alive. */
   def start(port: Int = 0): Int = synchronized {
     require(server == null, "already started")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    pool = Executors.newFixedThreadPool(4, (r: Runnable) =>
+      new Thread(r, s"graft-http-${HttpFacade.threadIds.incrementAndGet()}"))
+    server.setExecutor(pool)
 
     // JDK context matching is longest-prefix, so "/api/tasks" receives
     // "/api/tasks/{id}" too — branch on the remaining path like
@@ -121,6 +128,15 @@ final class HttpFacade(hive: TaskHive) {
   }
 
   def stop(): Unit = synchronized {
-    if (server != null) { server.stop(0); server = null }
+    if (server != null) {
+      server.stop(0)
+      server = null
+      pool.shutdown()
+      pool = null
+    }
   }
+}
+
+object HttpFacade {
+  private val threadIds = new AtomicInteger(0)
 }

@@ -34,19 +34,31 @@ import graft.sources.Tables
   * callers compose/collect as needed); plans are identical in shape to
   * the oracle-gated queries (status prefix scans = pushed filters,
   * workers always broadcast, limits = TakeOrdered).
+  *
+  * Snapshot lifetime: an instance resolves its directory's file listing
+  * and parquet schemas on first use and serves that snapshot for its
+  * lifetime, so a request pays no listing or schema-inference job. To
+  * see a directory rewritten in place, construct a new `TaskHive` (the
+  * same immutability assumption [[Tables.cachedCount]] documents).
   */
 final class TaskHive private (val spark: SparkSession, val dir: String) {
 
+  // Base relations of the read routes, resolved once per instance (see
+  // "Snapshot lifetime"); each route derives a fresh DataFrame from them.
+  private lazy val tasks = Tables.tasks(spark, dir)
+  private lazy val assignedTasks = Tables.assignedTasks(spark, dir)
+  private lazy val activeWorkers = operators.WorkerOps.activeWorkers(spark, dir)
+
   /** GetTaskByID (api.go:43-111): point lookup incl. worker extract. */
   def getTaskByID(id: String): DataFrame =
-    Tables.assignedTasks(spark, dir)
+    assignedTasks
       .filter(col("id") === id)
       .select("id", "status", "priority", "retry_count", "worker_id")
 
   /** ListTasks (api.go:114-159): one status partition, or all five
     * unioned for the empty filter, globally ordered + limited. */
   def listTasks(status: Option[String] = None, limit: Int = 100): DataFrame = {
-    val t = Tables.tasks(spark, dir).select("id", "status", "priority")
+    val t = tasks.select("id", "status", "priority")
     val filtered = status match {
       case Some(s) => t.filter(col("status") === Exprs.statusCode(lit(s)))
       case None => t
@@ -56,16 +68,15 @@ final class TaskHive private (val spark: SparkSession, val dir: String) {
 
   /** GetTaskStats (api.go:200-240): per-status counts. */
   def getTaskStats(): DataFrame =
-    Tables.tasks(spark, dir).groupBy("status")
+    tasks.groupBy("status")
       .agg(count(lit(1)).as("cnt")).orderBy("status")
 
   /** ListWorkers (api.go:243-277): worker dim + liveness flag. */
-  def listWorkers(): DataFrame =
-    operators.WorkerOps.activeWorkers(spark, dir)
+  def listWorkers(): DataFrame = activeWorkers.toDF()
 
   /** GetWorkerTasks (api.go:280-310): one worker's in-flight tasks. */
   def getWorkerTasks(workerId: String): DataFrame =
-    Tables.assignedTasks(spark, dir)
+    assignedTasks
       .filter(col("status") === Tables.Processing &&
         col("worker_id") === workerId)
       .select("id", "priority", "create_time", "worker_id")
@@ -142,7 +153,7 @@ final class TaskHive private (val spark: SparkSession, val dir: String) {
   def processTasks(): DataFrame = synchronized {
     val mapping = functions.Processors.typeToProcessor
       .filterNot { case (t, _) => userProcs.contains(t) } ++ userProcs.toSeq
-    Tables.tasks(spark, dir)
+    tasks
       .select(col("id"), col("task_type"),
         functions.Processors.dispatch(col("id"), col("task_type"), mapping)
           .as("result"),

@@ -219,9 +219,10 @@ object RetrievalOps {
     // family's plans). Round-18 (verdict item 5): Memo.batchPersist,
     // not a bare persist() — the bare form was never unpersisted, so
     // bench passes 2+ measured a warm cache (CacheManager dedupes by
-    // canonicalized plan across invocations); the ring drains when the
-    // consuming action completes, so every invocation recomputes from
-    // parquet.
+    // canonicalized plan across invocations). The frame stays cached
+    // until the same plan is persisted again (the next invocation drops
+    // the old entry first, so it recomputes from parquet) or is evicted
+    // from the ring.
     val perSource = Memo.batchPersist(spark, Tables.documents(spark, sfDir)
       .groupBy("source")
       .agg(sum(Exprs.tokenCount(col("text")).cast("long")).as("n_tokens")))

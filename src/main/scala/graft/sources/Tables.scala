@@ -75,7 +75,12 @@ object Tables {
     * this chokepoint means they work on ANY session — not just ones
     * built by [[graft.GraftSession]] or callers that registered
     * defensively (round-16 advice: AggOps/CatalogOps/LayoutOps threw
-    * AnalysisException on foreign sessions). */
+    * AnalysisException on foreign sessions).
+    *
+    * Every call resolves the scan afresh: it lists the files and runs a
+    * parquet schema-inference job. A caller that serves many queries
+    * off one directory resolves once and derives its frames from the
+    * result, as [[graft.TaskHive]] does. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     graft.GraftExtensions.register(spark)
     spark.read.parquet(s"$sfDir/$name.parquet")

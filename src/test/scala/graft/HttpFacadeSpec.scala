@@ -57,4 +57,22 @@ class HttpFacadeSpec extends SparkSuite {
       hive.close()
     }
   }
+
+  test("stop() ends the facade's handler threads") {
+    def httpThreads() = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(_.getName.startsWith("graft-http-")).toSeq
+    val hive = TaskHive(spark, sf)
+    val facade = new HttpFacade(hive)
+    val port = facade.start()
+    try {
+      assert(get(port, "/api/stats")._1 == 200)
+      assert(httpThreads().nonEmpty, "handlers run on graft-http-* threads")
+    } finally {
+      facade.stop()
+      hive.close()
+    }
+    val left = httpThreads()
+    left.foreach(_.join(10000L))
+    assert(left.forall(!_.isAlive), s"still alive: ${left.filter(_.isAlive).map(_.getName)}")
+  }
 }

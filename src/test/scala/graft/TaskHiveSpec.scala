@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The user-facing facade must return the same answers as the
@@ -112,6 +114,80 @@ class TaskHiveSpec extends SparkSuite {
     val transitions = spark.read.parquet(s"$dir/out")
     assert(transitions.count() == 3)
     assert(transitions.filter(col("taskId") === "t1").count() == 3)
+  }
+
+  private val TagKey = "graft.spec.tag"
+
+  /** Jobs started on this thread while `body` runs, counted by a
+    * listener keyed on a thread-local tag (so background jobs of other
+    * suites never count). */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"taskhive-spec-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(TagKey) == tag))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(TagKey, tag)
+    try body finally {
+      sc.setLocalProperty(TagKey, null)
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("warm routes build their DataFrames without starting a Spark job") {
+    val h = TaskHive(spark, sf)
+    val worker = "Supplier#000000001"
+    val routes: Seq[() => DataFrame] = Seq(
+      () => h.getTaskByID("42"),
+      () => h.listTasks(Some("processing"), 100),
+      () => h.getTaskStats(),
+      () => h.listWorkers(),
+      () => h.getWorkerTasks(worker),
+      () => h.processTasks())
+    // the first call resolves the base relations: listing plus parquet
+    // schema inference, which starts jobs (proves the counter counts)
+    assert(jobsStartedBy(routes.head()) > 0)
+    routes.foreach(r => r().collect())
+    routes.foreach(r => assert(jobsStartedBy(r()) == 0))
+  }
+
+  test("combining two calls on one instance analyzes and counts as before") {
+    val h = TaskHive(spark, sf)
+    val a = h.listTasks(Some("processing"), 50)
+    val b = h.listTasks(Some("processing"), 20)
+    assert(a.join(b, a("id") === b("id")).count() == 20)
+    val worker = h.listWorkers().select("worker_id").as[String].head()
+    val wt = h.getWorkerTasks(worker)
+    val lw = h.listWorkers()
+    assert(wt.join(lw, wt("worker_id") === lw("worker_id")).count() == 44)
+    assert(h.getTaskByID("42").union(h.getTaskByID("43")).count() == 2)
+  }
+
+  test("an instance serves its first-use snapshot; a new one sees a rewrite") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-hive-snapshot")
+    Seq("orders", "supplier").foreach { t =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"),
+        dir.resolve(s"$t.parquet"))
+    }
+    val before = TaskHive(spark, dir.toString)
+    val oldRows = before.getTaskStats().collect().map(_.getLong(1)).sum
+    assert(before.getTaskByID("1").count() == 1)
+    // rewrite orders in place: only the even keys survive
+    val evens = sources.Tables.orders(spark, sf).filter(col("o_orderkey") % 2 === 0)
+    evens.coalesce(1).write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    val newRows = evens.count()
+    assert(newRows < oldRows)
+    val after = TaskHive(spark, dir.toString)
+    assert(after.getTaskStats().collect().map(_.getLong(1)).sum == newRows)
+    assert(after.getTaskByID("1").count() == 0)
+    assert(after.getTaskByID("2").count() == 1)
+    assert(after.listTasks(None, 10).collect().forall(_.getString(0).toLong % 2 == 0))
   }
 
   test("userProcName stays injective when sanitized forms collide") {
