@@ -12,6 +12,17 @@ import org.apache.spark.sql.SparkSession
   * JVMs — an sbt test fork next to a driver Verify run — never contend
   * on Derby's single-owner lock. Catalog init is lazy: sessions that
   * never touch the catalog pay nothing.
+  *
+  * The `file:` scheme is bound to [[sources.LocalFiles]] for both
+  * Hadoop APIs (`FileSystem` and `FileContext`): without native
+  * `libhadoop`, Hadoop's own local file system forks a `chmod` or
+  * `readlink` process for every checkpoint, state-store and sink file,
+  * ~130 per streaming micro-batch. Caveat: Hadoop caches one
+  * `FileSystem` per (scheme, authority, user) for the whole JVM and
+  * ignores the conf of later lookups, so the `FileSystem` binding only
+  * holds when a session built here creates the JVM's first `file:`
+  * file system. `FileContext` is not cached and always follows the
+  * conf.
   */
 object GraftSession {
 
@@ -23,6 +34,7 @@ object GraftSession {
     // keep derby.log out of the repo working dir
     System.setProperty("derby.stream.error.file", s"/tmp/graft-derby-$pid.log")
     SparkSession.builder()
+      .config(sources.LocalFiles.SparkConf)
       // every graft session carries the native-function surface from
       // birth (round-16); foreign sessions get it from the
       // Tables.table chokepoint (round-17: every fixture-reading

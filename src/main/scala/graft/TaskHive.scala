@@ -191,7 +191,13 @@ final class TaskHive private (val spark: SparkSession, val dir: String) {
   /** Start (taskhive.go:150-212): run the lifecycle state machine over
     * a task-event stream into a checkpointed parquet transition log —
     * Structured Streaming's exactly-once replaces the reference's
-    * leader election, CAS loops and watch threads. */
+    * leader election, CAS loops and watch threads.
+    *
+    * Checkpoint, state-store and sink files go through the session's
+    * `file:` binding. A session built by [[GraftSession]] writes them
+    * without forking processes ([[sources.LocalFiles]]); any other
+    * session keeps Hadoop's local file system, which forks a `chmod` or
+    * `readlink` process per file without native `libhadoop`. */
   def start(events: org.apache.spark.sql.Dataset[streaming.TaskEngine.TaskEvent],
       checkpointDir: String, outDir: String): StreamingQuery =
     streaming.TaskEngine.transitions(spark, events)
