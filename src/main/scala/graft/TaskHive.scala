@@ -38,8 +38,8 @@ import graft.sources.Tables
   * Snapshot lifetime: an instance resolves its directory's file listing
   * and parquet schemas on first use and serves that snapshot for its
   * lifetime, so a request pays no listing or schema-inference job. To
-  * see a directory rewritten in place, construct a new `TaskHive` (the
-  * same immutability assumption [[Tables.cachedCount]] documents).
+  * see a directory rewritten in place, construct a new `TaskHive` (as
+  * a [[graft.operators.Memo]] entry needs `Memo.invalidate`).
   */
 final class TaskHive private (val spark: SparkSession, val dir: String) {
 

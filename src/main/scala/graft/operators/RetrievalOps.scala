@@ -42,8 +42,8 @@ object RetrievalOps {
     // real-corpus vocabulary grew that broadcast without bound (the
     // round-15 verdict's weak item), where the window's exchange is
     // vocab-sized rows through a hash partitioner at any corpus scale
-    // and nothing ever lands on the driver. n_docs stays the eager
-    // metadata-only count-star literal (Tables.cachedCount contract).
+    // and nothing ever lands on the driver. n_docs stays an eager
+    // metadata-only count-star literal.
     val nDocs = docs.count()
     val st = docs
       .select(col("source"), call_function("graft_tokcounts", col("text")))

@@ -376,31 +376,130 @@ object SimilarityOps {
     * no-training plan shape). This is what a search actually costs in
     * production — the fused form's inline Lloyd rounds are index-BUILD
     * work that belongs to the offline half, so benching the fused form
-    * overstated the per-query price ~3×. Memoization follows the
-    * Tables.cachedCount contract (per-session WeakHashMap; fixture
-    * dirs are immutable for a session's lifetime; bounded by the same
-    * clear-past-cap rule). */
-  private val IvfDirCacheCap = 64
-  private val ivfDirCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, String]]()
+    * overstated the per-query price ~3×. The index dir is memoized per
+    * (session, store) in [[Memo]]. */
   def annIvfProbeQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val perSession = ivfDirCache.synchronized {
-      var m = ivfDirCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        ivfDirCache.put(spark, m)
-      }
-      m
-    }
-    if (perSession.size > IvfDirCacheCap) perSession.clear()
-    val dir = perSession.computeIfAbsent(sfDir, _ => {
+    val dir = Memo.cached(spark, s"ivfIndexDir:$sfDir") {
       val d = java.nio.file.Files.createTempDirectory("graft-ivf-idx").toString
       buildIvfIndex(spark, sfDir, d)
       d
-    })
+    }
     annIvfProbe(spark, sfDir, dir)
   }
+
+  // ---------------------------------------------------------------
+  // Banded pair-join routing, shared by every dedup family. A family
+  // supplies its signature frame, bucket-key columns, verify kernel
+  // and output columns; these helpers bound hot-bucket work, in SELF
+  // mode by triangular (ti, tj) tiles and in batch-vs-store (ROLE)
+  // mode by partner-hash shards, both sized from one memoized
+  // bucket-skew statistic.
+  // ---------------------------------------------------------------
+
+  /** A row's slot among `n`: hash(id) mod n — its tile g in
+    * [[tiledSelfJoin]], its shard in [[shardedRoleJoin]]. */
+  private def slotOf(id: String, n: Int): Column =
+    pmod(xxhash64(col(id)), lit(n)).cast("int")
+
+  /** Bucket self-join of `frame` on `keys`, aliased `a`/`b`, with
+    * triangular tiling inside each bucket: a row in tile g is
+    * replicated to tiles (g, tj ≥ g) on the left and (ti ≤ g, g) on the
+    * right, so a pair with tiles g₁ ≤ g₂ meets in EXACTLY one
+    * (ti, tj) = (g₁, g₂) tile — once with roles fixed by tile (not by
+    * id; callers normalize with least/greatest) when g₁ < g₂, in both
+    * orderings when g₁ = g₂, where the id guard keeps one. Output is
+    * tile-count-invariant with no distinct; a hot bucket's c²
+    * enumeration splits across tiles·(tiles+1)/2 tasks for a ~tiles/2×
+    * replication of the narrow bucket rows, and `tiles = 1` is the
+    * untiled join. `frame` may already carry `g` ([[slotOf]]): a
+    * caller that localCheckpoints its frame hashes once before the
+    * checkpoint. `cond` is appended AFTER the cheap id/tile guard, so
+    * the same-tile half that fails id order never pays a verify
+    * kernel placed there. */
+  private[graft] def tiledSelfJoin(frame: DataFrame, id: String,
+      keys: Seq[String], tiles: Int, cond: Column = lit(true)): DataFrame = {
+    val tiled =
+      if (frame.columns.contains("g")) frame
+      else frame.withColumn("g", slotOf(id, tiles))
+    val cols = tiled.columns.toSeq.filter(_ != "g").map(col)
+    val left = tiled.select(cols :+ col("g").as("ti") :+
+      explode(sequence(col("g"), lit(tiles - 1))).as("tj"): _*)
+    val right = tiled.select(cols :+
+      explode(sequence(lit(0), col("g"))).as("ti") :+ col("g").as("tj"): _*)
+    left.alias("a").join(right.alias("b"),
+      (keys :+ "ti" :+ "tj").map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+      (col("a.ti") =!= col("a.tj") || col(s"a.$id") < col(s"b.$id")) && cond)
+  }
+
+  /** Batch-vs-partner join on `keys`, aliased `n` (batch) / `p`
+    * (partner), spread over `shards` partner-hash shards: each partner
+    * row keeps exactly ONE shard (hash of its id) and each batch row is
+    * replicated to all shards, so every pair meets in the partner's one
+    * shard — the plain join's pair set, but a hot key's batch × partner
+    * block splits across `shards` tasks. Replication multiplies only
+    * the batch side, batch-sized by every caller's contract: probe the
+    * batch, never index × index. `shards ≤ 1` is the plain join with no
+    * shard columns — replicating the batch side on a flat histogram is
+    * pure cost (a fixed 32 took BENCH_100x_hard's nightly merge 3.7 →
+    * 8.6 s). */
+  private[graft] def shardedRoleJoin(batch: DataFrame, partner: DataFrame,
+      id: String, keys: Seq[String], shards: Int, cond: Column): DataFrame = {
+    def on(ks: Seq[String]): Column =
+      ks.map(k => col(s"n.$k") === col(s"p.$k")).reduce(_ && _) && cond
+    if (shards <= 1) batch.alias("n").join(partner.alias("p"), on(keys))
+    else
+      batch.withColumn("shard", explode(sequence(lit(0), lit(shards - 1))))
+        .alias("n")
+        .join(partner.withColumn("shard", slotOf(id, shards)).alias("p"),
+          on(keys :+ "shard"))
+  }
+
+  /** The bucket-skew statistic every fanout is sized from: (max c,
+    * max(1, Σc²)) over `frame`'s population histogram on `keys` — one
+    * narrow ANALYZE aggregate per (session, `memoKey`), the number a
+    * real deployment records in table stats. `memoKey` names the store
+    * so [[invalidateSaturationStats]] re-arms it at commit points. */
+  private[graft] def bucketMoments(spark: SparkSession, memoKey: String,
+      frame: => DataFrame, keys: String*): (Double, Double) =
+    Memo.cached(spark, memoKey) {
+      val r = frame.groupBy(keys.head, keys.tail: _*).count()
+        .agg(max("count"), sum(col("count") * col("count"))).head()
+      (r.getLong(0).toDouble, math.max(1L, r.getLong(1)).toDouble)
+    }
+
+  /** STRAGGLER-BOUND tile count: tiling replicates every bucket
+    * ~tiles/2× to split hot ones, so it only pays when the hottest
+    * bucket's c² enumeration exceeds one core's share of the total
+    * work — tiles = ⌈√(cores·max²/Σc²)⌉ clamped to [1, 16]. The 100×
+    * simhash probe measured max 12,600 / Σc² 1.13e10 — hot, but
+    * max²/Σc² = 1.4% < 1/32, so on local[32] tiling is pure tax (a
+    * flat tiles = 8 measured 47.8 → 60.6 s); on a 1000-core cluster the
+    * same histogram yields tiles = 4 and the 1.6e8-comparison straggler
+    * splits. */
+  private[graft] def stragglerTiles(cores: Double,
+      moments: (Double, Double)): Int = {
+    val (maxC, sumSq) = moments
+    val t = math.ceil(math.sqrt(cores * maxC * maxC / sumSq)).toInt
+    math.min(16, math.max(1, t))
+  }
+
+  /** Shard count for the ROLE probes — the straggler-bound argument
+    * without the square root: the hot bucket's c² work serializes on
+    * one task unless split into ≥ cores·max²/Σc² shards (its share of
+    * the total pair work times the cores it should spread over),
+    * clamped to [1, [[RoleShards]]]. 1 on flat histograms (every
+    * synthetic fixture), ~9 on the 24k real corpus (max bucket 13,588
+    * of Σc² 685.5M at 32 cores). */
+  private[graft] def roleShardCount(cores: Double,
+      moments: (Double, Double)): Int = {
+    val (maxC, sumSq) = moments
+    val s = math.ceil(cores * maxC * maxC / sumSq).toInt
+    math.min(RoleShards, math.max(1, s))
+  }
+
+  /** The core count the fanout rules spread work over. */
+  private def cores(spark: SparkSession): Double =
+    spark.sparkContext.defaultParallelism.toDouble
 
   /** Embedding-cosine near-dup pairs: same-label vector pairs above a
     * cosine threshold. Threshold compares the *rounded integer* e4
@@ -415,12 +514,8 @@ object SimilarityOps {
     * table) vanishes — and 100 tables × bucket collisions generate MORE
     * candidate pairs than the n²/2 it replaces. Exact low-threshold
     * all-pairs is inherently quadratic; the scalable form bounds the
-    * work per task instead of (unsoundly) skipping pairs:
-    * each vector lands in bucket g = hash(id) mod B inside its label;
-    * vector in bucket i is replicated to tiles {(i,j): j ≥ i} on the
-    * left and {(j,i): j ≤ i} on the right, so every pair meets in
-    * EXACTLY one (label, ti, tj) tile — no distinct needed. Shuffle is
-    * (B+1)× the vectors; one reducer task handles at most
+    * work per task instead of (unsoundly) skipping pairs: the label
+    * self-join is [[tiledSelfJoin]], one reducer task handles at most
     * (|label|/B)² comparisons, so B tunes task size independently of
     * block size (at 100 TB: B ≈ |label|/√(mem-bounded tile)).
     * Sub-quadratic similarity at scale is the *approximate* path —
@@ -431,8 +526,7 @@ object SimilarityOps {
 
   /** [[embeddingDedup]] with the tile fanout EXPLICIT — the form
     * RewireEquivalenceSpec uses to exercise the multi-tile routing
-    * (ti/tj explode ranges, least/greatest role normalization) at a
-    * forced B > 1 even where the adaptive fanout would choose a
+    * at a forced B > 1 even where the adaptive fanout would choose a
     * degenerate small B at fixture scale (round-12 advice). */
   private[graft] def embeddingDedupTiled(spark: SparkSession, sfDir: String,
       B: Int): DataFrame = {
@@ -448,31 +542,16 @@ object SimilarityOps {
     // squared norms are precomputed ONCE per vector (graft_vnorm2, the
     // same left-to-right fold) and the per-pair work drops to the dot
     // alone (graft_cosine_pre ≡ cosine_sim bit-for-bit on equal-length
-    // vectors — CosineKernelSpec). The cheap id/tile guard sits FIRST
-    // in the join condition so the same-tile half that fails id order
-    // never pays the dot loop.
+    // vectors — CosineKernelSpec). The dot sits in the join condition
+    // after the router's id/tile guard.
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("label"), col("embedding").as("v"),
         call_function("graft_vnorm2", col("embedding")).as("n2"),
-        pmod(xxhash64(col("vec_id")), lit(B)).cast("int").as("g"))
+        slotOf("vec_id", B).as("g"))
       .localCheckpoint()
-    val left = e
-      .select(col("vec_id"), col("label"), col("v"), col("n2"),
-        col("g").as("ti"), explode(sequence(col("g"), lit(B - 1))).as("tj"))
-    val right = e
-      .select(col("vec_id"), col("label"), col("v"), col("n2"),
-        explode(sequence(lit(0), col("g"))).as("ti"), col("g").as("tj"))
-    // Cross-bucket tiles (ti < tj) hold each unordered pair exactly once
-    // with roles fixed by bucket (not by id) — keep all, normalize ids
-    // with least/greatest. Same-bucket tiles (ti = tj) hold both
-    // orderings — id order dedups them.
     val cosE4 = round(call_function("graft_cosine_pre",
       col("a.v"), col("b.v"), col("a.n2"), col("b.n2")) * 10000).cast("long")
-    left.alias("a").join(right.alias("b"),
-        col("a.label") === col("b.label") &&
-        col("a.ti") === col("b.ti") && col("a.tj") === col("b.tj") &&
-        (col("a.ti") =!= col("a.tj") || col("a.vec_id") < col("b.vec_id")) &&
-        cosE4 >= 2500)
+    tiledSelfJoin(e, "vec_id", Seq("label"), B, cosE4 >= 2500)
       .select(least(col("a.vec_id"), col("b.vec_id")).as("a_id"),
         greatest(col("a.vec_id"), col("b.vec_id")).as("b_id"),
         col("a.label").as("label"), cosE4.as("cos_e4"))
@@ -484,24 +563,24 @@ object SimilarityOps {
     * lets the per-task comparison cap (|label|/B)² grow quadratically
     * with the hottest label — at the 100× probe the biggest label
     * block alone is ~10⁹ comparisons over 64 tasks. B is sized from
-    * the measured max label population against a per-task comparison
-    * budget ([[TileTaskBudget]], ~4M cosine evaluations ≈ a few
-    * seconds of one core): B = ⌈maxLabel/√budget⌉, clamped to
-    * [8, 64]. The sizing stat is ONE narrow-column aggregate per
-    * (session, store), memoized like the broadcast-threshold idiom —
-    * at 100 TB it reads the `label` column only, and the same number
-    * is what a real deployment records in table stats. Output is
-    * IDENTICAL for any B (every pair meets in exactly one tile;
-    * RewireEquivalenceSpec pins B-invariance at forced B = 1 vs 16). */
-  private val TileTaskBudget = 4000000L
+    * the hottest label ([[bucketMoments]] over `label`) against a
+    * per-task comparison budget ([[embeddingTiles]]). Output is
+    * IDENTICAL for any B (RewireEquivalenceSpec pins B-invariance at
+    * forced B = 1 vs 16). */
   private def embeddingTileFanout(spark: SparkSession, sfDir: String): Int =
-    Memo.cached(spark, s"embTileFanout:$sfDir") {
-      val maxLabel = Tables.embeddings(spark, sfDir)
-        .groupBy("label").count()
-        .agg(max("count")).head().getLong(0)
-      val b = math.ceil(maxLabel / math.sqrt(TileTaskBudget.toDouble)).toInt
-      math.min(64, math.max(8, b))
-    }
+    embeddingTiles(bucketMoments(spark, s"embTileFanout:$sfDir",
+      Tables.embeddings(spark, sfDir), "label")._1)
+
+  /** Per-task comparison budget of [[embeddingTiles]]: ~4M cosine
+    * evaluations ≈ a few seconds of one core. */
+  private val TileTaskBudget = 4000000L
+
+  /** The embedding tile rule: B = ⌈maxLabel/√budget⌉ clamped to
+    * [8, 64]. */
+  private[graft] def embeddingTiles(maxLabel: Double): Int = {
+    val b = math.ceil(maxLabel / math.sqrt(TileTaskBudget.toDouble)).toInt
+    math.min(64, math.max(8, b))
+  }
 
   private val MinhashPerms = 32
   private val Bands = 8 // 8 bands × 4 rows
@@ -633,28 +712,10 @@ object SimilarityOps {
       tiles = simhashTileFanout(spark, sfDir))
 
   /** ADAPTIVE tile fanout for [[simhashDedup]]'s bucket self-join —
-    * the STRAGGLER-BOUND rule, not a flat constant: tiling replicates
-    * every bucket ~tiles/2× to split hot ones, so it only pays when
-    * the hottest bucket's c² enumeration exceeds one core's share of
-    * the total work. Σc² and max c come from one memoized bucket
-    * histogram (the 100× probe measured max 12,600 / Σc² 1.13e10 —
-    * hot, but max²/Σc² = 1.4% < 1/32, so on local[32] tiling is pure
-    * tax: a flat tiles = 8 measured 47.8 → 60.6 s; on a 1000-core
-    * cluster the same histogram yields tiles = 4 and the single
-    * 1.6e8-comparison straggler splits). tiles =
-    * ⌈√(cores·max²/Σc²)⌉ clamped to [1, 16]; output is
-    * tile-count-invariant (RewireEquivalenceSpec pins it vs naive). */
+    * [[stragglerTiles]] over the (source, band, chunk) histogram. */
   private def simhashTileFanout(spark: SparkSession, sfDir: String): Int =
-    Memo.cached(spark, s"simhashTileFanout:$sfDir") {
-      val r = simhashBandedFrame(spark, sfDir)
-        .groupBy("source", "band", "chunk").count()
-        .agg(max("count"), sum(col("count") * col("count"))).head()
-      val maxC = r.getLong(0).toDouble
-      val sumSq = math.max(1L, r.getLong(1)).toDouble
-      val cores = spark.sparkContext.defaultParallelism.toDouble
-      val t = math.ceil(math.sqrt(cores * maxC * maxC / sumSq)).toInt
-      math.min(16, math.max(1, t))
-    }
+    stragglerTiles(cores(spark), bucketMoments(spark, s"simhashTileFanout:$sfDir",
+      simhashBandedFrame(spark, sfDir), "source", "band", "chunk"))
 
   /** The banded pigeonhole frame (doc_id, source, simhash, band,
     * chunk) — shared with [[graft.CellProbe]]'s bucket-population
@@ -684,41 +745,21 @@ object SimilarityOps {
   }
 
   /** The candidate join + exact Hamming verify over a banded frame,
-    * with [[embeddingDedup]]'s bounded-tile (triangle) scheme inside
-    * each (source, band, chunk) bucket: the 7-bit chunk universe is
-    * FIXED (9 bands × ≤128 values × |sources|), so bucket population
-    * grows linearly with the corpus and an unsharded self-join
-    * serializes each hot bucket's c² enumeration on one core. Tiling
-    * by g = hash(id) mod tiles splits that across ~tiles²/2 tasks —
-    * every pair still meets in exactly one (bucket, ti, tj) tile, so
-    * the output is IDENTICAL. RewireEquivalenceSpec pins tiled ≡
+    * tiled ([[tiledSelfJoin]]) inside each (source, band, chunk)
+    * bucket: the 7-bit chunk universe is FIXED (9 bands × ≤128 values
+    * × |sources|), so bucket population grows linearly with the corpus
+    * and an untiled self-join serializes each hot bucket's c²
+    * enumeration on one core. RewireEquivalenceSpec pins tiled ≡
     * untiled at a FORCED tiles = 4 (the adaptive fanout computes
     * tiles = 1 at fixture scale, so the dispatch-path test alone
-    * would degenerate to the untiled join — round-12 advice);
-    * replication is ~tiles/2× of 4-long rows, noise next to the
-    * enumeration it parallelizes. `tiles = 1` is the untiled
-    * reference form. */
+    * would degenerate to the untiled join — round-12 advice).
+    * `tiles = 1` is the untiled reference form. */
   private[graft] def simhashPairsTiled(banded: DataFrame,
-      tiles: Int): DataFrame = {
-    val g = pmod(xxhash64(col("doc_id")), lit(tiles)).cast("int")
-    val left = banded.withColumn("g", g)
-      .select(col("doc_id"), col("source"), col("simhash"), col("band"),
-        col("chunk"), col("g").as("ti"),
-        explode(sequence(col("g"), lit(tiles - 1))).as("tj"))
-    val right = banded.withColumn("g", g)
-      .select(col("doc_id"), col("source"), col("simhash"), col("band"),
-        col("chunk"), explode(sequence(lit(0), col("g"))).as("ti"),
-        col("g").as("tj"))
-    left.alias("a").join(right.alias("b"),
-        col("a.source") === col("b.source") &&
-        col("a.band") === col("b.band") &&
-        col("a.chunk") === col("b.chunk") &&
-        col("a.ti") === col("b.ti") && col("a.tj") === col("b.tj") &&
-        (col("a.ti") =!= col("a.tj") || col("a.doc_id") < col("b.doc_id")))
+      tiles: Int): DataFrame =
+    tiledSelfJoin(banded, "doc_id", Seq("source", "band", "chunk"), tiles)
       // hamming per band-hit row (deterministic per pair) and the ≤8
       // radius filter BEFORE the pair distinct: non-qualifying bucket
-      // collisions never reach the exchange. Cross-bucket tiles carry
-      // roles fixed by tile (not id) — normalize with least/greatest.
+      // collisions never reach the exchange
       .select(least(col("a.doc_id"), col("b.doc_id")).as("a_id"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("b_id"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
@@ -727,7 +768,6 @@ object SimilarityOps {
       .distinct()
       .select(col("a_id"), col("b_id"), col("hamming").cast("int").as("hamming"))
       .orderBy("a_id", "b_id")
-  }
 
   /** Per-doc 64-bit SimHash, computed by the native
     * `graft_simhash64` expression INSIDE the scan projection — zero
@@ -1418,12 +1458,11 @@ object SimilarityOps {
     *    or cast to double/decimal) — the verdict never depends on it.
     *
     * Scale: q8 + ‖v‖² + cell are one fused scan projection (zero
-    * pre-join shuffle); the within-cell all-pairs reuses
-    * [[embeddingDedup]]'s bounded-tile scheme — every pair meets in
-    * exactly one (cell, ti, tj) tile, a reducer task compares at most
-    * (|cell|/B)², so B caps task size independently of how hot a cell
-    * gets (at 100 TB: raise B and/or P; cells shard by signature
-    * prefix exactly like an IVF index shards by centroid). */
+    * pre-join shuffle); the within-cell all-pairs is
+    * [[tiledSelfJoin]], so a reducer task compares at most (|cell|/B)²
+    * however hot a cell gets (at 100 TB: raise B and/or P; cells shard
+    * by signature prefix exactly like an IVF index shards by
+    * centroid). */
   private val SemCellBits = 8
   private[graft] val SemTauE2 = 30L
   private val SemTiles = 8
@@ -1455,21 +1494,10 @@ object SimilarityOps {
     val e = q8CellFrame(spark, sfDir)
       .select(col("vec_id"),
         call_function("graft_q8pack", col("q8")).as("q8b"),
-        col("na2"), col("cell"),
-        pmod(xxhash64(col("vec_id")), lit(SemTiles)).cast("int").as("g"))
+        col("na2"), col("cell"), slotOf("vec_id", SemTiles).as("g"))
       .localCheckpoint()
-    val left = e.select(col("vec_id"), col("q8b"), col("na2"), col("cell"),
-      col("g").as("ti"), explode(sequence(col("g"), lit(SemTiles - 1))).as("tj"))
-    val right = e.select(col("vec_id"), col("q8b"), col("na2"), col("cell"),
-      explode(sequence(lit(0), col("g"))).as("ti"), col("g").as("tj"))
-    val dot = call_function("graft_q8dotb", col("a.q8b"), col("b.q8b"))
-    // tile routing is by id hash (not id order), so normalize with
-    // least/greatest; same-tile pairs carry both orderings → id order
-    left.alias("a").join(right.alias("b"),
-        col("a.cell") === col("b.cell") &&
-        col("a.ti") === col("b.ti") && col("a.tj") === col("b.tj") &&
-        (col("a.ti") =!= col("a.tj") || col("a.vec_id") < col("b.vec_id")))
-      .withColumn("dot", dot)
+    tiledSelfJoin(e, "vec_id", Seq("cell"), SemTiles)
+      .withColumn("dot", call_function("graft_q8dotb", col("a.q8b"), col("b.q8b")))
       .filter(col("dot") > 0 &&
         col("dot") * col("dot") * 10000L >=
           lit(tauE2 * tauE2) * col("a.na2") * col("b.na2"))
@@ -1498,49 +1526,36 @@ object SimilarityOps {
   def semanticDedup(spark: SparkSession, sfDir: String): DataFrame =
     semanticPairsShared(spark, sfDir).orderBy("a_id", "b_id")
 
-  /** Number of hash-shards a hot q8 cell's candidate enumeration
-    * spreads across in [[semanticPairsRole]] / the incremental verdict
-    * probes. The cell space is a FIXED 256-key universe, so per-cell
-    * population grows linearly with the corpus and a cell-equi join
-    * keyed on `cell` alone lands each hot cell's (batch × cell)
-    * candidate block in ONE task — the round-11 CellProbe measured
-    * max-cell 35,892 at the 100× probe (Σc² ×100 per ×10 data), which
-    * is ~10⁸ q8dot evaluations serialized on a single core. Sharding
-    * re-keys the join on (cell, shard): each PARTNER row keeps exactly
-    * one shard (hash of its id), the batch side is replicated to all
-    * [[RoleShards]] shards — same pair set (every pair meets in the
-    * partner's one shard), identical output, but the hot cell's block
-    * now splits across [[RoleShards]] tasks. Replication multiplies
-    * only the BATCH-sized side (the contract of every caller), so the
-    * extra shuffle is O(batch·S) narrow rows — noise next to the
-    * enumeration it parallelizes. The batch analog of
+  /** Number of partner-hash shards ([[shardedRoleJoin]]) a hot q8
+    * cell's candidate enumeration spreads across in
+    * [[semanticPairsRole]] / the incremental verdict probes. The cell
+    * space is a FIXED 256-key universe, so per-cell population grows
+    * linearly with the corpus and a join keyed on `cell` alone lands
+    * each hot cell's (batch × cell) candidate block in ONE task — the
+    * round-11 CellProbe measured max-cell 35,892 at the 100× probe
+    * (Σc² ×100 per ×10 data), ~10⁸ q8dot evaluations serialized on a
+    * single core. The batch analog of
     * [[graft.streaming.SemanticStream]]'s hot-cell replication. */
   private[graft] val RoleShards = 32
 
   /** ROLE-pair form of the semantic pair stage — qualifying (src, dst)
     * edges between a BATCH-sized cell frame and a partner frame (the
-    * incremental cluster-maintenance input): (cell, shard)-equi join +
-    * the same integer cos² ≥ τ² verify as [[semanticPairs]]. `within`
-    * = both frames are the same batch (id-ordered half to avoid
-    * doubles); otherwise roles are disjoint slices, no order guard.
-    * No triangular tiling: the LEFT side is batch-sized by contract,
-    * so partner-hash sharding alone bounds task size (see
-    * [[RoleShards]]; SemanticDedupSpec pins sharded ≡ unsharded). */
+    * incremental cluster-maintenance input): the cell join sharded by
+    * [[shardedRoleJoin]] + the same integer cos² ≥ τ² verify as
+    * [[semanticPairs]]. `within` = both frames are the same batch
+    * (id-ordered half to avoid doubles); otherwise roles are disjoint
+    * slices, no order guard. No triangular tiling: the batch side is
+    * batch-sized by contract, so sharding alone bounds task size
+    * (SemanticDedupSpec pins sharded ≡ unsharded). */
   private[graft] def semanticPairsRole(newCells: DataFrame,
       partnerCells: DataFrame, within: Boolean,
       tauE2: Long = SemTauE2): DataFrame = {
     val cond =
       if (within) col("p.vec_id") < col("n.vec_id")
       else lit(true)
-    // byte-packed signature through the shard replication (guide §2.3:
-    // the n side is replicated ×RoleShards across the exchange)
-    val n = packCells(newCells).withColumn("shard",
-      explode(sequence(lit(0), lit(RoleShards - 1))))
-    val p = packCells(partnerCells).withColumn("shard",
-      pmod(xxhash64(col("vec_id")), lit(RoleShards)).cast("int"))
-    n.alias("n").join(p.alias("p"),
-        col("n.cell") === col("p.cell") &&
-        col("n.shard") === col("p.shard") && cond)
+    // byte-packed signature through the shard replication (guide §2.3)
+    shardedRoleJoin(packCells(newCells), packCells(partnerCells), "vec_id",
+        Seq("cell"), RoleShards, cond)
       .withColumn("dot", call_function("graft_q8dotb", col("n.q8b"), col("p.q8b")))
       .filter(col("dot") > 0 &&
         col("dot") * col("dot") * 10000L >=
@@ -1560,9 +1575,8 @@ object SimilarityOps {
   }
 
   /** UNSHARDED reference form of [[semanticPairsRole]] — the
-    * comparison pair SemanticDedupSpec pins the sharded plan against
-    * (identical output by the meets-in-one-shard argument; this form
-    * exists so the identity is ASSERTED, not argued). */
+    * comparison pair SemanticDedupSpec pins the sharded plan against,
+    * so [[shardedRoleJoin]]'s identity is ASSERTED, not argued. */
   private[graft] def semanticPairsRoleUnsharded(newCells: DataFrame,
       partnerCells: DataFrame, within: Boolean,
       tauE2: Long = SemTauE2): DataFrame = {
@@ -1649,19 +1663,11 @@ object SimilarityOps {
     // (round-11 advice).
     val newCells = Memo.batchPersist(newCells0.sparkSession, newCells0)
     val dotNP = call_function("graft_q8dotb", col("n.q8b"), col("p.q8b"))
-    // probes are (cell, shard)-sharded like semanticPairsRole: the
-    // fixed 256-cell space makes per-cell population linear in the
-    // store, and an unsharded cell-equi join serializes each hot
-    // cell's batch×cell block on one core (see RoleShards). Signatures
-    // ride the shard replication byte-packed (guide §2.3).
+    // probes are sharded like semanticPairsRole (see RoleShards);
+    // signatures ride the shard replication byte-packed (guide §2.3)
     def minMatch(partner: DataFrame, cond: Column, out: String): DataFrame =
-      packCells(newCells).withColumn("shard",
-          explode(sequence(lit(0), lit(RoleShards - 1)))).alias("n")
-        .join(packCells(partner).withColumn("shard",
-            pmod(xxhash64(col("vec_id")), lit(RoleShards)).cast("int"))
-          .alias("p"),
-          col("n.cell") === col("p.cell") &&
-          col("n.shard") === col("p.shard") && cond)
+      shardedRoleJoin(packCells(newCells), packCells(partner), "vec_id",
+          Seq("cell"), RoleShards, cond)
         .withColumn("dot", dotNP)
         .filter(col("dot") > 0 &&
           col("dot") * col("dot") * 10000L >=
@@ -1736,22 +1742,13 @@ object SimilarityOps {
         posexplode(col("cells")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "subcell")
 
-  /** Adaptive tile fanout for the wide banded self-join — the same
-    * straggler-bound sizing as [[simhashWideTileFanout]] on the
-    * (band, subcell) population histogram (width fixes DIFFUSE
-    * growth; hot clusters need tiling regardless — the measured
-    * round-13 lesson). */
+  /** Adaptive tile fanout for the wide banded self-join —
+    * [[stragglerTiles]] over the (band, subcell) histogram (width fixes
+    * DIFFUSE growth; hot clusters need tiling regardless — the
+    * measured round-13 lesson). */
   private def semanticWideTileFanout(spark: SparkSession, sfDir: String): Int =
-    Memo.cached(spark, s"semWideTileFanout:$sfDir") {
-      val r = semanticWideBandedFrame(spark, sfDir)
-        .groupBy("band", "subcell").count()
-        .agg(max("count"), sum(col("count") * col("count"))).head()
-      val maxC = r.getLong(0).toDouble
-      val sumSq = math.max(1L, r.getLong(1)).toDouble
-      val cores = spark.sparkContext.defaultParallelism.toDouble
-      val t = math.ceil(math.sqrt(cores * maxC * maxC / sumSq)).toInt
-      math.min(16, math.max(1, t))
-    }
+    stragglerTiles(cores(spark), bucketMoments(spark, s"semWideTileFanout:$sfDir",
+      semanticWideBandedFrame(spark, sfDir), "band", "subcell"))
 
   /** Wide semantic near-dup pairs — the narrow family's τ split,
     * mirrored: THIS query runs at the fixture's τ=0.30 stress point
@@ -1760,9 +1757,7 @@ object SimilarityOps {
     * while the incremental verdict runs at the production τ=0.95.
     * Candidates = any band's subcell matches (band-OR), verify = the
     * SAME exact integer cos² ≥ τ² predicate as [[semanticPairs]],
-    * evidence = (dot, floor'd cos²·10⁶). Every pair meets in exactly
-    * one (band, subcell, ti, tj) tile per colliding band; multi-band
-    * collisions collapse in the distinct. Integer-exact end to end —
+    * evidence = (dot, floor'd cos²·10⁶). Integer-exact end to end —
     * hash-green against the DuckDB replay of the same plane
     * arithmetic. */
   def semanticDedupWide(spark: SparkSession, sfDir: String): DataFrame =
@@ -1822,27 +1817,13 @@ object SimilarityOps {
       semanticWidePairsTiled(semanticWideBandedFrame(spark, sfDir),
         semanticWideTileFanout(spark, sfDir), SemTau95))
 
-  /** The tiled wide pair stage ([[simhashWidePairsTiled]]'s routing
-    * with the q8 integer-cosine verify): triangular (ti, tj) tiles by
-    * id hash bound reducer-task size for hot subcells; RewireSpec-style
-    * identity holds by the meets-in-exactly-one-tile argument (the
-    * wide SemanticDedupSpec pins tiled ≡ naive all-pairs). */
+  /** The tiled wide pair stage: [[tiledSelfJoin]] on (band, subcell)
+    * with the q8 integer-cosine verify; multi-band collisions collapse
+    * in the distinct (the wide SemanticDedupSpec pins tiled ≡ naive
+    * all-pairs). */
   private[graft] def semanticWidePairsTiled(banded: DataFrame,
-      tiles: Int, tauE2: Long): DataFrame = {
-    val g = pmod(xxhash64(col("vec_id")), lit(tiles)).cast("int")
-    val left = banded.withColumn("g", g)
-      .select(col("vec_id"), col("q8b"), col("na2"), col("band"),
-        col("subcell"), col("g").as("ti"),
-        explode(sequence(col("g"), lit(tiles - 1))).as("tj"))
-    val right = banded.withColumn("g", g)
-      .select(col("vec_id"), col("q8b"), col("na2"), col("band"),
-        col("subcell"), explode(sequence(lit(0), col("g"))).as("ti"),
-        col("g").as("tj"))
-    left.alias("a").join(right.alias("b"),
-        col("a.band") === col("b.band") &&
-        col("a.subcell") === col("b.subcell") &&
-        col("a.ti") === col("b.ti") && col("a.tj") === col("b.tj") &&
-        (col("a.ti") =!= col("a.tj") || col("a.vec_id") < col("b.vec_id")))
+      tiles: Int, tauE2: Long): DataFrame =
+    tiledSelfJoin(banded, "vec_id", Seq("band", "subcell"), tiles)
       .withColumn("dot",
         call_function("graft_q8dotb", col("a.q8b"), col("b.q8b")))
       .filter(col("dot") > 0 &&
@@ -1853,31 +1834,23 @@ object SimilarityOps {
         col("dot"),
         expr("dot * dot * 1000000 DIV (a.na2 * b.na2)").as("cos2_e6"))
       .distinct()
-  }
 
   /** ROLE-pair form over the WIDE banded frames — qualifying (src,
     * dst) edges between a BATCH-sized banded frame and a partner
-    * banded frame: (band, subcell, shard)-equi join + the exact
-    * integer verify, partner-hash sharding spreading hot subcells
-    * exactly like [[semanticPairsRole]] (same [[RoleShards]], same
-    * meets-in-the-partner's-one-shard identity). Multi-band collisions
-    * emit duplicate edges — harmless: the components merge's
-    * spanning-forest sparsifier collapses them without an exchange
-    * (round-15; callers used to pay a pair-distinct here). */
+    * banded frame: the (band, subcell) join sharded by
+    * [[shardedRoleJoin]] (same [[RoleShards]] as [[semanticPairsRole]])
+    * + the exact integer verify. Multi-band collisions emit duplicate
+    * edges — harmless: the components merge's spanning-forest
+    * sparsifier collapses them without an exchange (round-15; callers
+    * used to pay a pair-distinct here). */
   private[graft] def semanticPairsRoleWide(newBanded: DataFrame,
       partnerBanded: DataFrame, within: Boolean,
       tauE2: Long = SemTau95): DataFrame = {
     val cond =
       if (within) col("p.vec_id") < col("n.vec_id")
       else lit(true)
-    val n = newBanded.withColumn("shard",
-      explode(sequence(lit(0), lit(RoleShards - 1))))
-    val p = partnerBanded.withColumn("shard",
-      pmod(xxhash64(col("vec_id")), lit(RoleShards)).cast("int"))
-    n.alias("n").join(p.alias("p"),
-        col("n.band") === col("p.band") &&
-        col("n.subcell") === col("p.subcell") &&
-        col("n.shard") === col("p.shard") && cond)
+    shardedRoleJoin(newBanded, partnerBanded, "vec_id",
+        Seq("band", "subcell"), RoleShards, cond)
       .withColumn("dot", call_function("graft_q8dotb", col("n.q8b"), col("p.q8b")))
       .filter(col("dot") > 0 &&
         col("dot") * col("dot") * 10000L >=
@@ -1887,10 +1860,8 @@ object SimilarityOps {
   }
 
   /** UNSHARDED reference form of [[semanticPairsRoleWide]] — the
-    * comparison pair the wide spec pins the sharded plan against
-    * (identical edge set by the meets-in-the-partner's-one-shard
-    * argument; asserted, not argued — the [[semanticPairsRoleUnsharded]]
-    * convention). */
+    * comparison pair the wide spec pins the sharded plan against (the
+    * [[semanticPairsRoleUnsharded]] convention). */
   private[graft] def semanticPairsRoleWideUnsharded(newBanded: DataFrame,
       partnerBanded: DataFrame, within: Boolean,
       tauE2: Long = SemTau95): DataFrame = {
@@ -2068,19 +2039,12 @@ object SimilarityOps {
     * pair distinct — since round 10 the whole family works this way
     * (native graft_sigmatch; see minhashDedup's note).
     *
-    * PARTNER-HASH SHARDED (round-15, the verdict's one measured
-    * hot-cluster straggler): this was the ONE pair family whose probe
-    * joined on (band, bucket) alone, so a hot band bucket — the
-    * round-14 real corpus's license/changelog mirror cluster — landed
-    * its whole batch×bucket candidate block in ONE task
+    * PARTNER-HASH SHARDED ([[shardedRoleJoin]], round-15 — the
+    * verdict's one measured hot-cluster straggler): a join on (band,
+    * bucket) alone landed a hot band bucket — the round-14 real
+    * corpus's license/changelog mirror cluster — in ONE task
     * (`fuzzy_clusters_incremental` 12.4 s on 24k real docs vs 3.7 s on
-    * 500k synthetic). Same treatment as [[semanticPairsRole]]: each
-    * PARTNER row keeps exactly one of [[RoleShards]] shards (hash of
-    * its id), the batch side replicates to all shards, the join re-keys
-    * on (band, bucket, shard) — identical edge set (every pair meets in
-    * the partner's one shard; PolyDedupSpec pins sharded ≡ unsharded),
-    * but the hot bucket's enumeration now splits across RoleShards
-    * tasks. Replication multiplies only the batch-sized side. */
+    * 500k synthetic). PolyDedupSpec pins sharded ≡ unsharded. */
   private[graft] def minhashPolyPairsRole(newBanded: DataFrame,
       partnerBanded: DataFrame, within: Boolean,
       shards: Int = RoleShards): DataFrame =
@@ -2094,52 +2058,28 @@ object SimilarityOps {
     * collapses them in the same narrow pass that contracts cliques —
     * so the per-pair distinct would be a clique-sized exchange bought
     * for nothing (round-15 real corpus: 33.7M verified edges from 24k
-    * docs). Pair-REPORTING surfaces keep the distinct form. */
+    * docs). Pair-REPORTING surfaces keep the distinct form. `shards`
+    * comes from [[polyRoleShardFanout]]: 1 on flat histograms. */
   private[graft] def minhashPolyPairsRoleEdges(newBanded: DataFrame,
       partnerBanded: DataFrame, within: Boolean,
       shards: Int = RoleShards): DataFrame = {
     graft.GraftExtensions.register(newBanded.sparkSession)
     val cond =
-      if (within) col("b.doc_id") < col("a.doc_id")
-      else col("a.doc_id") =!= col("b.doc_id")
+      if (within) col("p.doc_id") < col("n.doc_id")
+      else col("n.doc_id") =!= col("p.doc_id")
     val matches =
-      call_function("graft_sigmatch", col("a.sig"), col("b.sig"))
-    // shards = 1 (flat bucket histograms — the adaptive fanout's
-    // verdict on every synthetic fixture) skips the shard columns
-    // entirely: the round-15 fixed-32 replication of the batch side
-    // cost the hard-100× nightly merge 2.3× on a corpus with NO hot
-    // bucket to spread (BENCH_100x_hard 3.7 → 8.6 s, caught by the
-    // per-round artifact diff; see [[polyRoleShardFanout]]).
-    if (shards <= 1)
-      newBanded.alias("a").join(partnerBanded.alias("b"),
-          col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") && cond)
-        .withColumn("est",
-          round(lit(1000.0) * matches / PolyPerms).cast("long"))
-        .filter(col("est") >= 500)
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("src"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("dst"))
-    else {
-      val n = newBanded.withColumn("shard",
-        explode(sequence(lit(0), lit(shards - 1))))
-      val p = partnerBanded.withColumn("shard",
-        pmod(xxhash64(col("doc_id")), lit(shards)).cast("int"))
-      n.alias("a").join(p.alias("b"),
-          col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.shard") === col("b.shard") && cond)
-        .withColumn("est",
-          round(lit(1000.0) * matches / PolyPerms).cast("long"))
-        .filter(col("est") >= 500)
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("src"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("dst"))
-    }
+      call_function("graft_sigmatch", col("n.sig"), col("p.sig"))
+    shardedRoleJoin(newBanded, partnerBanded, "doc_id",
+        Seq("band", "bucket"), shards, cond)
+      .withColumn("est",
+        round(lit(1000.0) * matches / PolyPerms).cast("long"))
+      .filter(col("est") >= 500)
+      .select(least(col("n.doc_id"), col("p.doc_id")).as("src"),
+        greatest(col("n.doc_id"), col("p.doc_id")).as("dst"))
   }
 
   /** UNSHARDED reference form of [[minhashPolyPairsRole]] — the
-    * comparison pair PolyDedupSpec pins the sharded plan against
-    * (identical edge set by the meets-in-the-partner's-one-shard
-    * argument; asserted, not argued — the
+    * comparison pair PolyDedupSpec pins the sharded plan against (the
     * [[semanticPairsRoleUnsharded]] convention). */
   private[graft] def minhashPolyPairsRoleUnsharded(newBanded: DataFrame,
       partnerBanded: DataFrame, within: Boolean): DataFrame = {
@@ -2184,81 +2124,38 @@ object SimilarityOps {
     minhashPolyPairsTiled(polyBandedBuckets(spark, sfDir),
       polyTileFanout(spark, sfDir))
 
-  /** Adaptive tile fanout for the poly-MinHash banded self-join — the
-    * straggler-bound sizing every other pair family already carries
-    * ([[simhashTileFanout]] / [[simhashWideTileFanout]] /
-    * [[semanticWideTileFanout]]): tiles ≈ ⌈√(cores · max_c² / Σc²)⌉
-    * from the (band, bucket) population histogram — 1 when the
+  /** Adaptive tile fanout for the poly-MinHash banded self-join —
+    * [[stragglerTiles]] over the (band, bucket) histogram: 1 when the
     * histogram is flat (the sf fixtures: zero overhead on the healthy
     * path), up to 16 when one bucket dominates (the real corpus's
-    * mirror cluster). One ANALYZE aggregate per (session, store),
-    * memoized like the other fanouts. */
-  /** One memoized (max c, Σc²) ANALYZE over the poly (band, bucket)
-    * histogram — shared by [[polyTileFanout]] and
-    * [[polyRoleShardFanout]] so the corpus is signed once per
-    * (session, store) for both sizing decisions. */
+    * mirror cluster). */
+  private[graft] def polyTileFanout(spark: SparkSession, sfDir: String): Int =
+    stragglerTiles(cores(spark), polyBucketMoments(spark, sfDir))
+
+  /** Adaptive shard count for the fuzzy ROLE probes —
+    * [[roleShardCount]] over the same histogram, so one corpus signing
+    * buys both sizing decisions. */
+  private[graft] def polyRoleShardFanout(spark: SparkSession,
+      sfDir: String): Int =
+    roleShardCount(cores(spark), polyBucketMoments(spark, sfDir))
+
   private def polyBucketMoments(spark: SparkSession,
       sfDir: String): (Double, Double) =
-    Memo.cached(spark, s"polyBucketMoments:$sfDir") {
-      val r = polyBandedBuckets(spark, sfDir)
-        .groupBy("band", "bucket").count()
-        .agg(max("count"), sum(col("count") * col("count"))).head()
-      (r.getLong(0).toDouble, math.max(1L, r.getLong(1)).toDouble)
-    }
+    bucketMoments(spark, s"polyBucketMoments:$sfDir",
+      polyBandedBuckets(spark, sfDir), "band", "bucket")
 
-  private[graft] def polyTileFanout(spark: SparkSession, sfDir: String): Int = {
-    val (maxC, sumSq) = polyBucketMoments(spark, sfDir)
-    val cores = spark.sparkContext.defaultParallelism.toDouble
-    val t = math.ceil(math.sqrt(cores * maxC * maxC / sumSq)).toInt
-    math.min(16, math.max(1, t))
-  }
-
-  /** Adaptive shard count for the fuzzy ROLE probes — the
-    * straggler-bound argument without the square root: the hot
-    * bucket's c² work serializes on one task unless split into
-    * ≥ cores·max_c²/Σc² shards (the share of total pair work the one
-    * bucket holds, times the core count it should spread over). 1 on
-    * flat histograms (every synthetic fixture: the probe join keeps
-    * its plain (band, bucket) key and the batch side never
-    * replicates), ~9 on the 24k real corpus (max bucket 13,588 of
-    * Σc² 685.5M at 32 cores), capped at [[RoleShards]]. Same memoized
-    * ANALYZE as the tile fanout — one corpus signing buys both. */
-  private[graft] def polyRoleShardFanout(spark: SparkSession,
-      sfDir: String): Int = {
-    val (maxC, sumSq) = polyBucketMoments(spark, sfDir)
-    val cores = spark.sparkContext.defaultParallelism.toDouble
-    val s = math.ceil(cores * maxC * maxC / sumSq).toInt
-    math.min(RoleShards, math.max(1, s))
-  }
-
-  /** The tiled poly-MinHash pair stage — [[simhashWidePairsTiled]]'s
-    * triangular (ti, tj) routing with the signature-agreement
-    * estimate: every pair meets in exactly one (band, bucket, ti, tj)
-    * tile per colliding band (multi-band collisions collapse in the
-    * distinct), so a hot bucket's c² enumeration splits across
-    * tiles·(tiles+1)/2 tasks instead of serializing on one.
-    * PolyDedupSpec pins tiled ≡ untiled (forced fanouts). est per
-    * band-hit row, BEFORE the distinct (deterministic per pair — see
-    * minhashDedup's note): the distinct exchanges 3 longs per row
-    * instead of ids + two 32-long signatures. */
+  /** The tiled poly-MinHash pair stage — [[tiledSelfJoin]] on (band,
+    * bucket) with the signature-agreement estimate; multi-band
+    * collisions collapse in the distinct. PolyDedupSpec pins tiled ≡
+    * untiled (forced fanouts). est per band-hit row, BEFORE the
+    * distinct (deterministic per pair — see minhashDedup's note): the
+    * distinct exchanges 3 longs per row instead of ids + two 32-long
+    * signatures. */
   private[graft] def minhashPolyPairsTiled(banded: DataFrame,
       tiles: Int): DataFrame = {
     graft.GraftExtensions.register(banded.sparkSession)
     val matches = call_function("graft_sigmatch", col("a.sig"), col("b.sig"))
-    val g = pmod(xxhash64(col("doc_id")), lit(tiles)).cast("int")
-    val left = banded.withColumn("g", g)
-      .select(col("doc_id"), col("sig"), col("band"), col("bucket"),
-        col("g").as("ti"),
-        explode(sequence(col("g"), lit(tiles - 1))).as("tj"))
-    val right = banded.withColumn("g", g)
-      .select(col("doc_id"), col("sig"), col("band"), col("bucket"),
-        explode(sequence(lit(0), col("g"))).as("ti"),
-        col("g").as("tj"))
-    left.alias("a").join(right.alias("b"),
-        col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") &&
-        col("a.ti") === col("b.ti") && col("a.tj") === col("b.tj") &&
-        (col("a.ti") =!= col("a.tj") || col("a.doc_id") < col("b.doc_id")))
+    tiledSelfJoin(banded, "doc_id", Seq("band", "bucket"), tiles)
       .select(least(col("a.doc_id"), col("b.doc_id")).as("a_id"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("b_id"),
         round(lit(1000.0) * matches / PolyPerms).cast("long")
@@ -2730,56 +2627,34 @@ object SimilarityOps {
         posexplode(col("chunks")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
 
-  /** Adaptive tile fanout for the WIDE banded self-join — the same
-    * straggler-bound sizing as [[simhashTileFanout]]. A first cut
-    * shipped the wide form untiled on the theory that the 2⁷× larger
-    * chunk universe IS the load-spreading — the plain 100× fixture
-    * falsified that within the hour: its ~100-replica hamming-0 twin
-    * clusters (and a 31-word closed vocabulary's few distinct majority
-    * profiles) concentrate in hot buckets REGARDLESS of how wide the
-    * key space is, and the untiled join serialized their c²
-    * enumeration (measured: the 100× probe pass went 220 → 695 s).
-    * Wide universe fixes DIFFUSE population growth; tiling fixes HOT
-    * CLUSTERS — a corpus can need both, so both forms carry both. */
+  /** Adaptive tile fanout for the WIDE banded self-join —
+    * [[stragglerTiles]] over the (source, band, chunk) histogram. A
+    * first cut shipped the wide form untiled on the theory that the 2⁷×
+    * larger chunk universe IS the load-spreading — the plain 100×
+    * fixture falsified that within the hour: its ~100-replica
+    * hamming-0 twin clusters (and a 31-word closed vocabulary's few
+    * distinct majority profiles) concentrate in hot buckets REGARDLESS
+    * of how wide the key space is, and the untiled join serialized
+    * their c² enumeration (measured: the 100× probe pass went 220 →
+    * 695 s). Wide universe fixes DIFFUSE population growth; tiling
+    * fixes HOT CLUSTERS — a corpus can need both, so both forms carry
+    * both. */
   private def simhashWideTileFanout(spark: SparkSession, sfDir: String): Int =
-    Memo.cached(spark, s"simhashWideTileFanout:$sfDir") {
-      val r = simhashWideBandedFrame(spark, sfDir)
-        .groupBy("source", "band", "chunk").count()
-        .agg(max("count"), sum(col("count") * col("count"))).head()
-      val maxC = r.getLong(0).toDouble
-      val sumSq = math.max(1L, r.getLong(1)).toDouble
-      val cores = spark.sparkContext.defaultParallelism.toDouble
-      val t = math.ceil(math.sqrt(cores * maxC * maxC / sumSq)).toInt
-      math.min(16, math.max(1, t))
-    }
+    stragglerTiles(cores(spark), bucketMoments(spark, s"simhashWideTileFanout:$sfDir",
+      simhashWideBandedFrame(spark, sfDir), "source", "band", "chunk"))
 
-  /** [[simhashPairsTiled]] for the wide 9-chunk signature: identical
-    * tile routing (every pair meets in exactly one (bucket, ti, tj)
-    * tile — RewireEquivalenceSpec pins tiled ≡ untiled ≡ naive
-    * all-pairs), hamming = Σ per-chunk popcount of the carried chunk
-    * arrays (chunks partition the bits). */
+  /** [[simhashPairsTiled]] for the wide 9-chunk signature: the same
+    * [[tiledSelfJoin]] (RewireEquivalenceSpec pins tiled ≡ untiled ≡
+    * naive all-pairs), hamming = Σ per-chunk popcount of the carried
+    * chunk arrays (chunks partition the bits). */
   private[graft] def simhashWidePairsTiled(banded: DataFrame,
       tiles: Int): DataFrame = {
-    val g = pmod(xxhash64(col("doc_id")), lit(tiles)).cast("int")
-    val left = banded.withColumn("g", g)
-      .select(col("doc_id"), col("source"), col("chunks"), col("band"),
-        col("chunk"), col("g").as("ti"),
-        explode(sequence(col("g"), lit(tiles - 1))).as("tj"))
-    val right = banded.withColumn("g", g)
-      .select(col("doc_id"), col("source"), col("chunks"), col("band"),
-        col("chunk"), explode(sequence(lit(0), col("g"))).as("ti"),
-        col("g").as("tj"))
     // native fused loop (graft.functions.ChunkHamming): the HOF form
     // ran interpreted per enumerated candidate — the scale currency
     // (hard 100×: ~116M candidates → 652k pairs)
     val ham = call_function("graft_hamming_chunks",
       col("a.chunks"), col("b.chunks"))
-    left.alias("a").join(right.alias("b"),
-        col("a.source") === col("b.source") &&
-        col("a.band") === col("b.band") &&
-        col("a.chunk") === col("b.chunk") &&
-        col("a.ti") === col("b.ti") && col("a.tj") === col("b.tj") &&
-        (col("a.ti") =!= col("a.tj") || col("a.doc_id") < col("b.doc_id")))
+    tiledSelfJoin(banded, "doc_id", Seq("source", "band", "chunk"), tiles)
       .select(least(col("a.doc_id"), col("b.doc_id")).as("a_id"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("b_id"),
         ham.as("hamming"))

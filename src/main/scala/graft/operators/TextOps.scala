@@ -208,11 +208,6 @@ object TextOps {
     learned.result()
   }
 
-  private val TrainedCacheCap = 64
-  private val trainedCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String, Long)]]]()
-
   /** Learned merge tables BY STORE, for [[graft.Oracles]] to generate
     * the token_count_bpe_trained DuckDB replace-chain from the SAME
     * table the encoder folds over (round-12 judge item 2: the static
@@ -229,17 +224,9 @@ object TextOps {
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
 
   private def trainedMerges(spark: SparkSession, sfDir: String): Seq[(String, String, Long)] = {
-    val perSession = trainedCache.synchronized {
-      var m = trainedCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String, Long)]]()
-        trainedCache.put(spark, m)
-      }
-      m
+    val learned = Memo.cached(spark, s"trainedMerges:$sfDir") {
+      bpeTrainMerges(spark, sfDir, 12)
     }
-    if (perSession.size > TrainedCacheCap) perSession.clear()
-    val learned =
-      perSession.computeIfAbsent(sfDir, _ => bpeTrainMerges(spark, sfDir, 12))
     trainedMergesByStore.put(sfDir, learned.map { case (l, r, _) => (l, r) })
     learned
   }

@@ -133,6 +133,7 @@ object ExcelDataSource {
     private var cellType = ""
     private var cellRef = ""
     private var inV = false
+    private var inIs = false
     private val v = new StringBuilder
     private var pending: Vector[String] = _
 
@@ -145,7 +146,18 @@ object ExcelDataSource {
       idx - 1
     }
 
-    /** Parse forward until one complete row is buffered (or EOF). */
+    /** The current cell's value, placed at its declared column (gaps →
+      * empty string). */
+    private def place(raw: String): Unit = {
+      val value = if (cellType == "s") shared(raw.toInt) else raw
+      val at = if (cellRef.nonEmpty) colIndex(cellRef) else row.length
+      while (row.length < at) row += ""
+      row += value
+    }
+
+    /** Parse forward until one complete row is buffered (or EOF). A
+      * value is a `<v>` (number, or shared-string index when t="s") or
+      * an inline string's `<is>`, whose `<t>` runs concatenate. */
     private def advance(): Unit =
       while (pending == null && xml.hasNext) {
         xml.next() match {
@@ -155,18 +167,15 @@ object ExcelDataSource {
               cellType = Option(xml.getAttributeValue(null, "t")).getOrElse("")
               cellRef = Option(xml.getAttributeValue(null, "r")).getOrElse("")
             case "v" => inV = true; v.clear()
+            case "is" => inIs = true; v.clear()
+            case "t" if inIs => inV = true
             case _ =>
           }
           case XMLStreamConstants.CHARACTERS if inV => v.append(xml.getText)
           case XMLStreamConstants.END_ELEMENT => xml.getLocalName match {
-            case "v" =>
-              inV = false
-              val raw = v.toString
-              val value = if (cellType == "s") shared(raw.toInt) else raw
-              // place at the cell's declared column (gaps → empty string)
-              val at = if (cellRef.nonEmpty) colIndex(cellRef) else row.length
-              while (row.length < at) row += ""
-              row += value
+            case "v" => inV = false; place(v.toString)
+            case "t" if inIs => inV = false
+            case "is" => inIs = false; place(v.toString)
             case "row" => pending = row.toVector
             case _ =>
           }

@@ -86,43 +86,20 @@ object Tables {
     spark.read.parquet(s"$sfDir/$name.parquet")
   }
 
-  /** Memoized driver-side row count of a fixture table, scoped PER
-    * SESSION via a WeakHashMap (dead sessions release their entries —
-    * no unbounded growth, no identity-hash collisions across GC'd
-    * sessions). Strategy picks ([[graft.operators.TextOps
-    * .ngramJaccard]]) and dim-modulo parameters ([[assignedTasks]]) need
-    * one scalar per table; without the cache every query invocation
-    * re-ran a count job — parquet-footer-cheap locally, but at 100 TB
-    * each count is an object-store listing + footer sweep costing
-    * seconds of driver latency PER QUERY.
-    *
-    * Cache contract: fixture dirs are immutable for a session's
-    * lifetime (the driver regenerates testdata only between rounds).
-    * A deployment with mutable tables would key this by snapshot/commit
-    * id the way a lakehouse catalog does.
-    *
-    * Size bound: a long-lived session touching MANY sfDirs (a
-    * multi-tenant notebook server) would otherwise grow the per-session
-    * map without limit, so it is cleared past [[CountCacheCap]] entries
-    * — counts are cheap to re-derive; the cap trades a rare re-count
-    * for a hard memory bound. */
-  private val CountCacheCap = 1024
-  private val countCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]]()
-  def cachedCount(spark: SparkSession, sfDir: String, name: String): Long = {
-    val perSession = countCache.synchronized {
-      var m = countCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
-        countCache.put(spark, m)
-      }
-      m
+  /** Memoized driver-side row count of a fixture table, one
+    * [[graft.operators.Memo]] entry per (session, table): it dies with
+    * the session or with `Memo.invalidate` after an in-place rewrite,
+    * like every other memoized artifact. Strategy picks
+    * ([[graft.operators.TextOps.ngramJaccard]]) and dim-modulo
+    * parameters ([[assignedTasks]]) need one scalar per table; without
+    * the memo every query invocation re-ran a count job —
+    * parquet-footer-cheap locally, but at 100 TB each count is an
+    * object-store listing + footer sweep costing seconds of driver
+    * latency PER QUERY. */
+  def cachedCount(spark: SparkSession, sfDir: String, name: String): Long =
+    graft.operators.Memo.cached(spark, s"count:$name:$sfDir") {
+      table(spark, sfDir, name).count()
     }
-    if (perSession.size > CountCacheCap) perSession.clear()
-    perSession.computeIfAbsent(
-      (sfDir, name), _ => table(spark, sfDir, name).count())
-  }
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

@@ -35,28 +35,11 @@ object CurationStream {
 
   /** Hashed distinct eval-set shingles, computed batch-side once per
     * benchmark release (xxhash64 — 8-byte currency, matching the
-    * stream side's hashed compare). Memoized per (session, sfDir) —
-    * same pattern as Tables.cachedCount — so repeated spec/bench calls
-    * pay the eval-set collect once per JVM, not per call. */
-  private val hashCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, Array[Long]]]()
-  // eval-set arrays are dim-sized but not tiny; bound the per-session
-  // map so a session sweeping many sfDirs can't accumulate them —
-  // same contract as Tables.CountCacheCap (clear + re-derive is cheap)
-  private val HashCacheCap = 64
-
-  def benchShingleHashes(spark: SparkSession, sfDir: String): Array[Long] = {
-    val perSession = hashCache.synchronized {
-      var m = hashCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-        hashCache.put(spark, m)
-      }
-      m
-    }
-    if (perSession.size > HashCacheCap) perSession.clear()
-    perSession.computeIfAbsent(sfDir, _ => {
+    * stream side's hashed compare). Memoized per (session, sfDir) in
+    * [[graft.operators.Memo]], so repeated spec/bench calls pay the
+    * eval-set collect once. */
+  def benchShingleHashes(spark: SparkSession, sfDir: String): Array[Long] =
+    graft.operators.Memo.cached(spark, s"benchShingleHashes:$sfDir") {
       graft.GraftExtensions.register(spark)
       import spark.implicits._
       graft.sources.Tables.documents(spark, sfDir)
@@ -66,8 +49,7 @@ object CurationStream {
         .distinct()
         .select(xxhash64(col("tok")))
         .as[Long].collect().sorted
-    })
-  }
+    }
 
   /** Quality gate + decontamination + fingerprint, the SINGLE
     * definition both public forms dedup behind — the gates must never

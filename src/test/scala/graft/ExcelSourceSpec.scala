@@ -3,10 +3,69 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** S1/S2/S3: the custom xlsx DataSource V2 against the reference's own
-  * input file (read-only fixture). */
+  * input file (read-only fixture), and against small workbooks written
+  * here with java.util.zip so the zip + StAX reader runs on any host. */
 class ExcelSourceSpec extends SparkSuite {
 
   private val SpiderXlsx = "/root/reference/spider.xlsx"
+
+  /** Minimal xlsx: only the entries the reader opens, plus any extra
+    * sheets. `rows` are `<row>` bodies of sheet 1. */
+  private def xlsx(shared: Seq[String], rows: Seq[String],
+      extra: Map[String, String] = Map.empty): String = {
+    val f = java.nio.file.Files.createTempFile("graft-excel", ".xlsx")
+    f.toFile.deleteOnExit()
+    val zip = new java.util.zip.ZipOutputStream(java.nio.file.Files.newOutputStream(f))
+    def put(name: String, body: String): Unit = {
+      zip.putNextEntry(new java.util.zip.ZipEntry(name))
+      zip.write(body.getBytes("UTF-8"))
+      zip.closeEntry()
+    }
+    val ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    def sheet(rs: Seq[String]): String =
+      s"""<?xml version="1.0" encoding="UTF-8"?><worksheet xmlns="$ns"><sheetData>""" +
+        rs.zipWithIndex.map { case (r, i) => s"""<row r="${i + 1}">$r</row>""" }.mkString +
+        "</sheetData></worksheet>"
+    try {
+      put("xl/sharedStrings.xml",
+        s"""<?xml version="1.0" encoding="UTF-8"?><sst xmlns="$ns" count="${shared.size}">""" +
+          shared.map(t => s"<si><t>$t</t></si>").mkString + "</sst>")
+      put("xl/worksheets/sheet1.xml", sheet(rows))
+      extra.foreach { case (n, rs) => put(n, sheet(Seq(rs))) }
+    } finally zip.close()
+    f.toString
+  }
+
+  test("generated xlsx: shared and inline strings, empty cells, sheet 2 ignored") {
+    val path = xlsx(
+      shared = Seq("name", "kind", "alpha", "gamma"),
+      rows = Seq(
+        """<c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c>""" +
+          """<c r="C1" t="inlineStr"><is><t>note</t></is></c>""",
+        """<c r="A2" t="s"><v>2</v></c><c r="B2" t="inlineStr"><is><t>x</t></is></c>""" +
+          """<c r="C2"><v>42</v></c>""",
+        """<c r="A3" t="inlineStr"><is><r><t>be</t></r><r><t>ta</t></r></is></c>""" +
+          """<c r="B3"/><c r="C3" t="s"><v>3</v></c>""",
+        """<c r="A4" t="inlineStr"><is><t>delta</t></is></c>"""),
+      extra = Map("xl/worksheets/sheet2.xml" ->
+        """<c r="A1" t="inlineStr"><is><t>other</t></is></c>"""))
+    assert(sources.ExcelDataSource.readRows(path) == Vector(
+      Vector("name", "kind", "note"), Vector("alpha", "x", "42"),
+      Vector("beta", "", "gamma"), Vector("delta")))
+    val df = spark.read.format("graft-excel").load(path)
+    assert(df.columns.toSeq == Seq("name", "kind", "note"))
+    val rows = df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(rows.toSeq == Seq(("alpha", "x", "42"), ("beta", "", "gamma"),
+      ("delta", null, null)))
+  }
+
+  test("generated xlsx: a header-only sheet has the header's schema and no rows") {
+    val path = xlsx(shared = Seq("a", "b"),
+      rows = Seq("""<c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c>"""))
+    val df = spark.read.format("graft-excel").load(path)
+    assert(df.columns.toSeq == Seq("a", "b"))
+    assert(df.count() == 0)
+  }
 
   test("reads spider.xlsx: 657 data rows x 9 string columns, header as names") {
     val df = spark.read.format("graft-excel").load(SpiderXlsx)

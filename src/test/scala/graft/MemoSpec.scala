@@ -206,4 +206,26 @@ class MemoSpec extends SparkSuite {
       "re-invocation must recompute the batch frame, not read pass 1's cache")
     Memo.invalidate(spark) // leave the session clean for other suites
   }
+
+  test("Memo.invalidate re-arms Tables.cachedCount after an in-place rewrite") {
+    // the per-session caches beside Memo (row counts, eval-set hashes,
+    // IVF index dirs, trained BPE merges) are Memo entries, so the
+    // documented staleness hook reaches them: ngramJaccard picks its
+    // regime from this count
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo-count").toString
+    val path = s"$dir/documents.parquet"
+    val docs = sources.Tables.table(spark, sf, "documents")
+    try {
+      docs.write.parquet(path)
+      val n0 = sources.Tables.cachedCount(spark, dir, "documents")
+      assert(n0 == docs.count())
+      val fewer = docs.filter(col("doc_id") % 2 === 0)
+      fewer.write.mode("overwrite").parquet(path)
+      Memo.invalidate(spark)
+      val n1 = sources.Tables.cachedCount(spark, dir, "documents")
+      assert(n1 == fewer.count() && n1 < n0,
+        s"stale count after invalidate: $n1 (was $n0)")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
 }
