@@ -7,11 +7,14 @@ import org.apache.spark.sql.SparkSession
   * metastore wiring (BASELINE.json north star: "Spark SQL + Hive
   * metastore integration").
   *
-  * The metastore is embedded Derby (offline-friendly); database and
-  * warehouse paths are per-JVM (pid-keyed under /tmp) so concurrent
-  * JVMs — an sbt test fork next to a driver Verify run — never contend
-  * on Derby's single-owner lock. Catalog init is lazy: sessions that
-  * never touch the catalog pay nothing.
+  * The metastore is embedded Derby (offline-friendly), held in memory:
+  * each JVM has its own, so concurrent JVMs — an sbt test fork next to
+  * a driver Verify run — never contend on Derby's single-owner lock,
+  * and nothing of it is left on disk. The warehouse directory is
+  * per-JVM too (pid-keyed under /tmp) and is removed, with the Derby
+  * log and Hive's session resources directory, when the JVM exits.
+  * Catalog init is lazy: sessions that never touch the catalog pay
+  * nothing.
   *
   * The `file:` scheme is bound to [[sources.LocalFiles]] for both
   * Hadoop APIs (`FileSystem` and `FileContext`): without native
@@ -27,12 +30,24 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   private lazy val pid = ProcessHandle.current().pid()
+  private lazy val warehouse = s"/tmp/graft-warehouse-$pid"
+  private lazy val derbyLog = s"/tmp/graft-derby-$pid.log"
+  // Hive's per-session resources directory, else `/tmp/<uuid>_resources`
+  private lazy val hiveResources = s"/tmp/graft-hive-resources-$pid"
+
+  // Runs after Spark's own shutdown hook (Hadoop priority 40), which
+  // stops the context, and before Hadoop closes its file systems (10).
+  private lazy val removeAtExit: Unit =
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() =>
+      Seq(warehouse, derbyLog, hiveResources).foreach(p =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))), 20)
 
   /** Builder with the engine conf applied; callers add master/app
     * specifics and `getOrCreate()`. */
   def builder(shufflePartitions: Int): SparkSession.Builder = {
+    removeAtExit
     // keep derby.log out of the repo working dir
-    System.setProperty("derby.stream.error.file", s"/tmp/graft-derby-$pid.log")
+    System.setProperty("derby.stream.error.file", derbyLog)
     SparkSession.builder()
       .config(sources.LocalFiles.SparkConf)
       // every graft session carries the native-function surface from
@@ -46,9 +61,10 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"/tmp/graft-warehouse-$pid")
+      .config("spark.sql.warehouse.dir", warehouse)
       .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=/tmp/graft-metastore-$pid;create=true")
+        "jdbc:derby:memory:graft-metastore;create=true")
+      .config("spark.hadoop.hive.downloaded.resources.dir", hiveResources)
       .enableHiveSupport()
   }
 }

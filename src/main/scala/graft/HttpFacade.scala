@@ -35,6 +35,15 @@ import org.apache.spark.sql.DataFrame
   * A production deployment would put this shell on the driver of a
   * long-running session (or swap it for Livy/Connect); the engine
   * surface underneath is unchanged.
+  *
+  * Served once per facade: `GET /api/stats` and `GET /api/workers`
+  * take no parameter, and a [[TaskHive]] serves its first-use snapshot
+  * for its whole life (its "Snapshot lifetime"), so their query answers
+  * the same rows on every call. The facade runs each of them on the
+  * route's first request and serves the stored body from then on, with
+  * no Spark job. The body is the same bytes the query gives, so this is
+  * exact. A first request that fails stores nothing and the next one
+  * runs the query again. Every other route runs its query per request.
   */
 final class HttpFacade(hive: TaskHive) {
 
@@ -44,6 +53,9 @@ final class HttpFacade(hive: TaskHive) {
   /** JSON array of the frame's rows in Spark's canonical encoding. */
   private def toJsonArray(df: DataFrame): String =
     df.toJSON.collect().mkString("[", ",", "]")
+
+  private lazy val statsBody = toJsonArray(hive.getTaskStats())
+  private lazy val workersBody = toJsonArray(hive.listWorkers())
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
@@ -81,9 +93,9 @@ final class HttpFacade(hive: TaskHive) {
 
   /** Bind and serve; port 0 picks an ephemeral port. Returns the bound
     * port. Handlers run on a small fixed pool of `graft-http-<n>`
-    * threads — each request is one Spark action, and the driver is the
-    * bottleneck by design. [[stop]] shuts the pool down, so a stopped
-    * facade leaves no thread that keeps the JVM alive. */
+    * threads — each request is at most one Spark action, and the driver
+    * is the bottleneck by design. [[stop]] shuts the pool down, so a
+    * stopped facade leaves no thread that keeps the JVM alive. */
   def start(port: Int = 0): Int = synchronized {
     require(server == null, "already started")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
@@ -112,11 +124,11 @@ final class HttpFacade(hive: TaskHive) {
       }
     })
     server.createContext("/api/stats", (ex: HttpExchange) => handle(ex) {
-      (200, toJsonArray(hive.getTaskStats()))
+      (200, statsBody)
     })
     server.createContext("/api/workers", (ex: HttpExchange) => handle(ex) {
       val path = ex.getRequestURI.getPath.stripPrefix("/api/workers")
-      if (path.isEmpty || path == "/") (200, toJsonArray(hive.listWorkers()))
+      if (path.isEmpty || path == "/") (200, workersBody)
       else {
         val id = path.stripPrefix("/")
         if (id.isEmpty) (400, """{"error":"worker id required"}""")

@@ -33,21 +33,53 @@ import graft.sources.Tables
   * Every method returns a lazy DataFrame (the Spark-first contract:
   * callers compose/collect as needed); plans are identical in shape to
   * the oracle-gated queries (status prefix scans = pushed filters,
-  * workers always broadcast, limits = TakeOrdered).
+  * limits = TakeOrdered), except that a task's worker comes from the
+  * instance's worker mapping, not a broadcast join (see below).
   *
   * Snapshot lifetime: an instance resolves its directory's file listing
   * and parquet schemas on first use and serves that snapshot for its
   * lifetime, so a request pays no listing or schema-inference job. To
   * see a directory rewritten in place, construct a new `TaskHive` (as
   * a [[graft.operators.Memo]] entry needs `Memo.invalidate`).
+  *
+  * Worker mapping: the same holds for the `s_suppkey → worker_id`
+  * mapping behind [[getTaskByID]] and [[getWorkerTasks]]. An instance
+  * collects it once, on first use, and derives each processing task's
+  * `worker_id` from it by an array lookup, with the same answer as
+  * [[Tables.assignedTasks]]' broadcast join. The join rebuilt its
+  * broadcast on every request, a Spark job of its own. The mapping
+  * holds the same `(s_suppkey, worker_id)` pairs that the broadcast
+  * shipped on every request, in fewer than 2 × |supplier| slots, so it
+  * adds no new scale limit. A `supplier` table that repeats an
+  * `s_suppkey` would give the join several rows per task and cannot be
+  * a mapping: first use throws `IllegalArgumentException` instead.
   */
 final class TaskHive private (val spark: SparkSession, val dir: String) {
 
   // Base relations of the read routes, resolved once per instance (see
   // "Snapshot lifetime"); each route derives a fresh DataFrame from them.
   private lazy val tasks = Tables.tasks(spark, dir)
-  private lazy val assignedTasks = Tables.assignedTasks(spark, dir)
   private lazy val activeWorkers = operators.WorkerOps.activeWorkers(spark, dir)
+
+  /** [[Tables.assignedTasks]] with the broadcast join replaced by a
+    * lookup in the instance's worker mapping (see "Worker mapping"). */
+  private[graft] lazy val assignedTasks: DataFrame = {
+    val sup = Tables.workers(spark, dir)
+      .select(col("s_suppkey").cast("long"), col("worker_id")).collect()
+    // the join's modulus is the supplier row count, null keys included
+    val n = sup.length
+    val keyed = sup.filterNot(_.isNullAt(0)).map(r => r.getLong(0) -> r.getString(1))
+    val repeated = keyed.groupBy(_._1).collect { case (k, v) if v.length > 1 => k }
+    require(repeated.isEmpty, s"$dir/supplier.parquet repeats s_suppkey " +
+      s"${repeated.toSeq.sorted.take(5).mkString(", ")}: a task would have several workers")
+    // o_orderkey % n lies in (-n, n), so only those keys can match; slot
+    // k + n - 1 holds key k's worker. An array index, not a map literal:
+    // Spark looks a map key up by scanning every key.
+    val slots = new Array[String](math.max(2 * n - 1, 0))
+    for ((k, w) <- keyed if k > -n && k < n) slots((k + n - 1).toInt) = w
+    tasks.withColumn("worker_id", when(col("status") === Tables.Processing,
+      get(typedLit(slots.toSeq), (col("o_orderkey") % n.toLong + (n - 1)).cast("int"))))
+  }
 
   /** GetTaskByID (api.go:43-111): point lookup incl. worker extract. */
   def getTaskByID(id: String): DataFrame =

@@ -52,7 +52,7 @@ class BigramSurprisalSpec extends SparkSuite {
         col("n_chars"))
     val scrambled = base.withColumn("text",
       array_join(reverse(split(col("text"), " ")), " "))
-    val dir = java.nio.file.Files.createTempDirectory("graft-bigram").toString
+    val dir = tempDir("graft-bigram").toString
     base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val un0 = TextOps.unigramSurprisal(spark, dir).collect().map(_.toSeq)
     val bi0 = TextOps.bigramSurprisal(spark, dir).collect().map(_.toSeq)

@@ -14,7 +14,7 @@ import graft.operators.TextOps
 class BoilerplateStreamSpec extends SparkSuite {
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   // 12-token docs → two 10-token-chunk rows each; "b0..b9" is the
   // shared boilerplate chunk (in both existing docs), the tails are

@@ -95,7 +95,7 @@ class ExcelSourceSpec extends SparkSuite {
 
   test("X3 ticker: AvailableNow drains the dir; a later run ingests only new files") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory("graft-excel-stream").toFile
+    val dir = tempDir("graft-excel-stream").toFile
     val out = s"${dir.getPath}/out"
     val ckpt = s"${dir.getPath}/ckpt"
     def runOnce(): Unit = {
@@ -131,7 +131,7 @@ class ExcelSourceSpec extends SparkSuite {
 
   test("batch read of a directory unions all xlsx files (one partition per file)") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory("graft-excel-batch").toFile
+    val dir = tempDir("graft-excel-batch").toFile
     Files.copy(Paths.get(SpiderXlsx), Paths.get(s"${dir.getPath}/a.xlsx"))
     Files.copy(Paths.get(SpiderXlsx), Paths.get(s"${dir.getPath}/b.xlsx"))
     val df = spark.read.format("graft-excel").load(dir.getPath)

@@ -182,7 +182,7 @@ class GraphOpsSpec extends SparkSuite {
     // executor loss recomputes instead of failing. Same labels either way.
     val local = operators.GraphOps.dedupClusters(spark, sf).collect()
       .map(_.toSeq).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("graft-ckpt").toString
     spark.conf.set("spark.graft.checkpointDir", dir)
     // the memoized cluster artifact captured localCheckpoint mode —
     // drop it so the reliable path actually re-runs the fixpoint

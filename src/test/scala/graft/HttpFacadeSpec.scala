@@ -58,6 +58,59 @@ class HttpFacadeSpec extends SparkSuite {
     }
   }
 
+  /** One warm request per route, then the Spark jobs each route starts
+    * for a request with a value it has not seen yet. */
+  test("a warm request starts at most one Spark job; stats and workers start none") {
+    val hive = TaskHive(spark, sf)
+    val facade = new HttpFacade(hive)
+    val port = facade.start()
+    def jobs(path: String, code: Int = 200): Int =
+      jobsOfQueriesFrom(classOf[HttpFacade]) {
+        assert(get(port, path)._1 == code, path)
+      }
+    try {
+      val ids = hive.listTasks(Some("processing"), 2).collect().map(_.getString(0))
+      val workers = hive.listWorkers().collect().map(_.getString(0)).take(2)
+        .map(java.net.URLEncoder.encode(_, "UTF-8"))
+      // the first stats request runs its query: the counter sees it
+      assert(jobs("/api/stats") > 0)
+      Seq(s"/api/tasks/${ids(0)}", "/api/tasks?status=pending&limit=5",
+        "/api/workers", s"/api/workers/${workers(0)}").foreach(get(port, _))
+      assert(jobs("/api/tasks/no_such_task", 404) == 1)
+      assert(jobs(s"/api/tasks/${ids(1)}") == 1)
+      assert(jobs("/api/tasks?status=processing&limit=5") == 1)
+      assert(jobs(s"/api/workers/${workers(1)}") <= 3)
+      assert(jobs("/api/stats") == 0)
+      assert(jobs("/api/workers") == 0)
+    } finally {
+      facade.stop()
+      hive.close()
+    }
+  }
+
+  test("20 new task ids and 20 new worker ids compile no new classes") {
+    val hive = TaskHive(spark, "/root/testdata/sf0.01")
+    val facade = new HttpFacade(hive)
+    val port = facade.start()
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    try {
+      val ids = hive.listTasks(None, 22).collect().map(_.getString(0))
+      val workers = hive.listWorkers().collect().map(_.getString(0)).take(22)
+        .map(java.net.URLEncoder.encode(_, "UTF-8"))
+      assert(ids.distinct.length == 22 && workers.distinct.length == 22)
+      val paths = ids.map(id => s"/api/tasks/$id") ++ workers.map(w => s"/api/workers/$w")
+      // warm-up: two values of each route
+      Seq(paths(0), paths(1), paths(22), paths(23)).foreach(p => assert(get(port, p)._1 == 200))
+      val before = compiles
+      (paths.slice(2, 22) ++ paths.slice(24, 44)).foreach(p => assert(get(port, p)._1 == 200, p))
+      assert(compiles - before == 0)
+    } finally {
+      facade.stop()
+      hive.close()
+    }
+  }
+
   test("stop() ends the facade's handler threads") {
     def httpThreads() = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
       .filter(_.getName.startsWith("graft-http-")).toSeq

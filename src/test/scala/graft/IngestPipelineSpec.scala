@@ -33,7 +33,7 @@ class IngestPipelineSpec extends SparkSuite {
     val chunks = batchDocs.grouped((batchDocs.length / 3).max(1)).toSeq
     assert(chunks.length >= 3, "need a multi-batch replay")
 
-    val base = java.nio.file.Files.createTempDirectory("graft-ingest").toString
+    val base = tempDir("graft-ingest").toString
     val art = IngestPipeline.buildArtifacts(spark,
       sources.Tables.documents(spark, sf).filter(col("doc_id") % 5 =!= 0)
         .select(col("doc_id"), col("text")),
@@ -70,7 +70,7 @@ class IngestPipelineSpec extends SparkSuite {
     // persisted index on every trigger. The executed plan must show a
     // broadcast join with the index side free of Exchange below the
     // join (scanning the InMemoryRelation in place).
-    val base = java.nio.file.Files.createTempDirectory("graft-ingest3").toString
+    val base = tempDir("graft-ingest3").toString
     val art = IngestPipeline.buildArtifacts(spark,
       sources.Tables.documents(spark, sf).filter(col("doc_id") % 5 =!= 0)
         .select(col("doc_id"), col("text")),
@@ -107,7 +107,7 @@ class IngestPipelineSpec extends SparkSuite {
   test("a retried micro-batch overwrites only its own landing partition") {
     val s = spark
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-ingest2").toString
+    val base = tempDir("graft-ingest2").toString
     Seq((1L, "a"), (2L, "b")).toDF("doc_id", "v")
       .write.mode("overwrite").parquet(s"$base/ignore") // warm dirs
     val b0 = Seq((10L, "x")).toDF("doc_id", "v")

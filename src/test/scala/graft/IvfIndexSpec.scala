@@ -11,7 +11,7 @@ import graft.operators.SimilarityOps
 class IvfIndexSpec extends SparkSuite {
 
   test("probe over a persisted index ≡ annIvfTopk, with no training in the plan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = tempDir("graft-ivf").toString
     SimilarityOps.buildIvfIndex(spark, sf, dir)
 
     // layout: cells is written partitioned by cid — one directory per
@@ -76,7 +76,7 @@ class IvfIndexSpec extends SparkSuite {
     val docs = sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
     val isNew = pmod(col("doc_id"), lit(5)) === 0
-    val dir = java.nio.file.Files.createTempDirectory("graft-sigidx").toString
+    val dir = tempDir("graft-sigidx").toString
     // ingestion-side: the existing corpus's signatures persisted once
     SimilarityOps.buildSigIndex(spark, docs.filter(!isNew), dir)
     // nightly-side: sign only the batch, probe the stored index
@@ -95,7 +95,7 @@ class IvfIndexSpec extends SparkSuite {
     val docs = sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
     val isNew = pmod(col("doc_id"), lit(5)) === 0
-    val dir = java.nio.file.Files.createTempDirectory("graft-sigidx-b").toString
+    val dir = tempDir("graft-sigidx-b").toString
     SimilarityOps.buildSigIndex(spark, docs.filter(!isNew), dir)
     SimilarityOps.buildSigIndexBucketed(spark, docs.filter(!isNew), "graft.sig_index_spec")
 
@@ -136,7 +136,7 @@ class IvfIndexSpec extends SparkSuite {
 
   test("ivfIndexInsert appends a batch without retraining; assignments verified independently") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-ins").toString
+    val dir = tempDir("graft-ivf-ins").toString
     val e = SimilarityOps.ivfEmbeddings(spark, sf)
     val isBatch = pmod(col("vec_id"), lit(7)) === 0
     // build on the standing corpus, then insert the day's batch

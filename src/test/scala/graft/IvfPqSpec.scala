@@ -23,7 +23,7 @@ class IvfPqSpec extends SparkSuite {
   }
 
   test("stored-index probe is bit-identical to the fused query") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+    val dir = tempDir("graft-ivfpq").toString
     SimilarityOps.buildIvfPqIndex(spark, sf, dir)
     val fused = SimilarityOps.annIvfPqTopk(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -43,7 +43,7 @@ class IvfPqSpec extends SparkSuite {
   }
 
   test("stored codes match a plain-Scala PQ encoder over the stored codebook") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq2").toString
+    val dir = tempDir("graft-ivfpq2").toString
     SimilarityOps.buildIvfPqIndex(spark, sf, dir)
     val cb = spark.read.parquet(s"$dir/codebook").collect()
       .map(r => (r.getAs[Int]("j"), r.getAs[Int]("k")) -> r.getSeq[Long](2))
@@ -77,7 +77,7 @@ class IvfPqSpec extends SparkSuite {
   }
 
   test("ivfPqIndexInsert appends a batch without retraining") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq3").toString
+    val dir = tempDir("graft-ivfpq3").toString
     val existing = spark.read.parquet(s"$sf/embeddings.parquet")
       .filter(col("vec_id") % 5 =!= 0)
     val batch = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -85,7 +85,7 @@ class IvfPqSpec extends SparkSuite {
       .select(col("vec_id"), col("embedding"))
     // build from the existing slice only, then insert the batch
     // (buildIvfPqIndex reads a fixture DIR; write the slice as one)
-    val sliceDir = java.nio.file.Files.createTempDirectory("graft-ivfpq3s").toString
+    val sliceDir = tempDir("graft-ivfpq3s").toString
     existing.write.mode("overwrite").parquet(s"$sliceDir/embeddings.parquet")
     SimilarityOps.buildIvfPqIndex(spark, sliceDir, dir)
     SimilarityOps.ivfPqIndexInsert(spark, batch, dir)

@@ -14,7 +14,7 @@ class JsonlCorpusSpec extends SparkSuite {
   private val goodText = ("tok " * 30).trim
 
   private def writeFixture(): String = {
-    val dir = Files.createTempDirectory("graft-jsonl").toString
+    val dir = tempDir("graft-jsonl").toString
     val lines = Seq(
       s"""{"doc_id": 1, "source": "web", "text": "$goodText"}""",
       s"""{"doc_id": 2, "source": "web", "text": "$goodText extra"}""",
@@ -72,7 +72,7 @@ class JsonlCorpusSpec extends SparkSuite {
   }
 
   test("curation dedup state survives a restart: duplicate across the restart is dropped") {
-    val dir = Files.createTempDirectory("graft-jsonl-restart").toString
+    val dir = tempDir("graft-jsonl-restart").toString
     val in = s"$dir/in"; val out = s"$dir/out"; val ckpt = s"$dir/ckpt"
     Files.createDirectories(java.nio.file.Paths.get(in))
     def writeFile(name: String, lines: Seq[String]): Unit =

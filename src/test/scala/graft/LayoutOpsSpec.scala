@@ -11,7 +11,7 @@ import graft.operators.LayoutOps
 class LayoutOpsSpec extends SparkSuite {
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    tempDir(s"graft-$tag").toString
 
   private def dataFiles(dir: String): Seq[java.io.File] =
     new java.io.File(dir).listFiles().toSeq

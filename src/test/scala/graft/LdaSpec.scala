@@ -37,7 +37,7 @@ class LdaSpec extends SparkSuite {
   }
 
   test("LDA separates the engineered corpus (accuracy >= 0.9)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lda").toString
+    val dir = tempDir("graft-lda").toString
     engineered(dir)
     val got = TextOps.qualityLda(spark, dir).collect()
     assert(got.length == 120)
@@ -55,7 +55,7 @@ class LdaSpec extends SparkSuite {
   }
 
   test("distributed training equals an independent plain-Scala solve") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lda2").toString
+    val dir = tempDir("graft-lda2").toString
     engineered(dir)
     // independent reference: features and statistics recomputed from
     // the raw text on the driver, same closed form

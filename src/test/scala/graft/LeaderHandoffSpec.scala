@@ -45,7 +45,7 @@ class LeaderHandoffSpec extends SparkSuite {
   }
 
   test("second engine instance takes over the checkpoint exactly-once; concurrent start is fenced") {
-    val root = Files.createTempDirectory("graft-handoff").toString
+    val root = tempDir("graft-handoff").toString
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     Files.createDirectories(Paths.get(in))
 
@@ -133,7 +133,7 @@ class LeaderHandoffSpec extends SparkSuite {
     // (stopActiveRunOnRestart=true) is exactly that: starting the
     // query on an active checkpoint stops the old run and the new run
     // takes over; at no point do two runs own the checkpoint.
-    val root = Files.createTempDirectory("graft-depose").toString
+    val root = tempDir("graft-depose").toString
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     Files.createDirectories(Paths.get(in))
     def startInstance(instance: SparkSession): StreamingQuery = {

@@ -27,7 +27,7 @@ class LiveStateSpec extends SparkSuite {
   }
 
   test("getLiveTaskStatus reads the running engine's state and tracks it batch to batch") {
-    val root = Files.createTempDirectory("graft-live").toString
+    val root = tempDir("graft-live").toString
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     Files.createDirectories(Paths.get(in))
     val s = spark

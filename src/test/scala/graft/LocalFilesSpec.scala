@@ -101,7 +101,7 @@ class LocalFilesSpec extends SparkSuite {
     }
 
   test("files and directories get the stock modes, bytes and .crc sidecars through both APIs") {
-    val root = Files.createTempDirectory("graft-localfiles")
+    val root = tempDir("graft-localfiles")
     val apis: Seq[(String, Writer, Writer)] = Seq(
       ("FileSystem", viaFileSystem(stockFs), viaFileSystem(oursFs)),
       ("FileContext", viaFileContext(stockFc), viaFileContext(oursFc)))
@@ -121,7 +121,7 @@ class LocalFilesSpec extends SparkSuite {
   }
 
   test("getFileLinkStatus agrees with Hadoop's for a file, a symlink, a dangling symlink and a missing path") {
-    val root = Files.createTempDirectory("graft-links")
+    val root = tempDir("graft-links")
     val file = root.resolve("file")
     Files.write(file, data)
     val link = Files.createSymbolicLink(root.resolve("link"), file)
@@ -159,7 +159,7 @@ class LocalFilesSpec extends SparkSuite {
   }
 
   test("a sticky-bit 01777 directory still gets its mode through Hadoop's chmod") {
-    val root = Files.createTempDirectory("graft-sticky")
+    val root = tempDir("graft-sticky")
     val sticky = perm(oct("1777"))
     val (sFs, oFs) = (stockFs, oursFs)
     for ((name, fs) <- Seq("stock" -> sFs, "ours" -> oFs)) {
@@ -176,7 +176,7 @@ class LocalFilesSpec extends SparkSuite {
 
   test("a TaskHive.start stream forks no chmod or readlink process; file: resolves to the fork-free classes") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-forks")
+    val root = tempDir("graft-forks")
     val in = Files.createDirectories(root.resolve("in"))
     for (i <- 1 to 3) Files.write(in.resolve(s"events-$i.json"), Seq(
       s"""{"taskId":"t$i","kind":"submit","workerId":null,"seq":${3 * i}}""",

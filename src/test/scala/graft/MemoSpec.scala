@@ -138,8 +138,7 @@ class MemoSpec extends SparkSuite {
     }
 
     // 1. the PQ lifecycle: build (rebuild semantics) then insert
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-memo-rearm").toString
+    val dir = tempDir("graft-memo-rearm").toString
     SimilarityOps.buildIvfPqIndex(spark, sf, dir)
 
     seed(dir)
@@ -160,8 +159,7 @@ class MemoSpec extends SparkSuite {
     assert(cbRebuilt, "REBUILD at the same path must re-arm the codebook memo")
 
     // 2. IVF insert
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft-memo-rearm-ivf").toString
+    val dir2 = tempDir("graft-memo-rearm-ivf").toString
     SimilarityOps.buildIvfIndex(spark, sf, dir2)
     seed(dir2)
     SimilarityOps.ivfIndexInsert(spark, batch, dir2)
@@ -213,19 +211,17 @@ class MemoSpec extends SparkSuite {
     // documented staleness hook reaches them: ngramJaccard picks its
     // regime from this count
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-memo-count").toString
+    val dir = tempDir("graft-memo-count").toString
     val path = s"$dir/documents.parquet"
     val docs = sources.Tables.table(spark, sf, "documents")
-    try {
-      docs.write.parquet(path)
-      val n0 = sources.Tables.cachedCount(spark, dir, "documents")
-      assert(n0 == docs.count())
-      val fewer = docs.filter(col("doc_id") % 2 === 0)
-      fewer.write.mode("overwrite").parquet(path)
-      Memo.invalidate(spark)
-      val n1 = sources.Tables.cachedCount(spark, dir, "documents")
-      assert(n1 == fewer.count() && n1 < n0,
-        s"stale count after invalidate: $n1 (was $n0)")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    docs.write.parquet(path)
+    val n0 = sources.Tables.cachedCount(spark, dir, "documents")
+    assert(n0 == docs.count())
+    val fewer = docs.filter(col("doc_id") % 2 === 0)
+    fewer.write.mode("overwrite").parquet(path)
+    Memo.invalidate(spark)
+    val n1 = sources.Tables.cachedCount(spark, dir, "documents")
+    assert(n1 == fewer.count() && n1 < n0,
+      s"stale count after invalidate: $n1 (was $n0)")
   }
 }

@@ -12,7 +12,7 @@ import graft.streaming.MergeSink
 class MergeSinkSpec extends SparkSuite {
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   test("streamed compacted view equals batch max_by compaction") {
     val s = spark

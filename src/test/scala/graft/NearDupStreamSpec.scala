@@ -125,7 +125,7 @@ class NearDupStreamSpec extends SparkSuite {
 
     val docs = sources.Tables.documents(spark, sf).select("doc_id", "text")
     val isNew = pmod(col("doc_id"), lit(5)) === 0
-    val dir = java.nio.file.Files.createTempDirectory("graft-idx-stream").toString
+    val dir = tempDir("graft-idx-stream").toString
     operators.SimilarityOps.buildSigIndex(spark, docs.filter(!isNew), dir)
 
     val arrivals = docs.filter(isNew).orderBy("doc_id")

@@ -31,7 +31,7 @@ class ScaleProbeSpec extends SparkSuite {
   private val Reps = 3
 
   private lazy val hardDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sphard").toString
+    val dir = tempDir("graft-sphard").toString
     ScaleProbe.build(spark, sf, dir, Reps, hard = true)
     dir
   }
@@ -116,7 +116,7 @@ class ScaleProbeSpec extends SparkSuite {
     // documents the mechanism the hard mode exists to break — if the
     // plain probe ever stops manufacturing cross-replica twins, the
     // BASELINE adjudication tables need re-reading
-    val dir = java.nio.file.Files.createTempDirectory("graft-spplain").toString
+    val dir = tempDir("graft-spplain").toString
     ScaleProbe.build(spark, sf, dir, 2, hard = false)
     val sh = SimilarityOps.simhashes(spark, dir)
       .select(col("doc_id"), col("simhash")).collect()

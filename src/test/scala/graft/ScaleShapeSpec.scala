@@ -12,7 +12,7 @@ import graft.sources.Tables
 class ScaleShapeSpec extends SparkSuite {
 
   test("status-partitioned table prunes partitions on status filters") {
-    val dir = Files.createTempDirectory("graft_parts").toString
+    val dir = tempDir("graft_parts").toString
     Tables.tasks(spark, sf)
       .write.mode("overwrite").partitionBy("status").parquet(dir)
     val pending = spark.read.parquet(dir).filter(col("status") === 0)

@@ -132,7 +132,7 @@ class SemanticDedupSpec extends SparkSuite {
 
   test("stored vector index probe is bit-identical to the in-plan derivation") {
     import graft.sources.Tables
-    val dir = java.nio.file.Files.createTempDirectory("graft-vecidx").toString
+    val dir = tempDir("graft-vecidx").toString
     val all = Tables.embeddings(spark, sf)
     SimilarityOps.buildVecIndex(spark,
       all.filter(pmod(col("vec_id"), lit(5)) =!= 0), s"$dir/idx")

@@ -192,7 +192,7 @@ class SemanticStreamSpec extends SparkSuite {
 
   test("stream-static index probe matches every replayed vector to its original") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-semidx").toString
+    val dir = tempDir("graft-semidx").toString
     val base = sources.Tables.embeddings(spark, sf).select("vec_id", "embedding")
     operators.SimilarityOps.buildVecIndex(spark, base, s"$dir/idx")
     // replay with fresh ids and IDENTICAL embeddings: every probe must

@@ -114,7 +114,7 @@ class StarContractSpec extends SparkSuite {
   }
 
   test("reliable-checkpoint mode (spark.graft.checkpointDir) yields the same answer") {
-    val dir = java.nio.file.Files.createTempDirectory("star-ckpt").toString
+    val dir = tempDir("star-ckpt").toString
     val g = (1L until 40L).map(i => (i, i + 1)) ++ Seq((100L, 101L))
     val plain = run(g)
     spark.conf.set("spark.graft.checkpointDir", dir)

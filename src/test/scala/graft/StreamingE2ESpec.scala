@@ -37,7 +37,7 @@ class StreamingE2ESpec extends SparkSuite {
   }
 
   test("file source → TaskEngineTws → checkpointed parquet survives kill+restart exactly-once") {
-    val root = Files.createTempDirectory("graft-e2e").toString
+    val root = tempDir("graft-e2e").toString
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     Files.createDirectories(Paths.get(in))
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
@@ -149,7 +149,7 @@ class StreamingE2ESpec extends SparkSuite {
     // events fixture (complete mode: every window emitted at drain)
     val sfDir = "/root/testdata/sf0.001"
     // the file stream source wants a directory, not a single file
-    val dir = Files.createTempDirectory("graft-unify").toString
+    val dir = tempDir("graft-unify").toString
     Files.copy(Paths.get(s"$sfDir/events.parquet"),
       Paths.get(dir, "events.parquet"))
     val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema

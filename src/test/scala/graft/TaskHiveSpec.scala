@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The user-facing facade must return the same answers as the
@@ -102,7 +101,7 @@ class TaskHiveSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-hive-start").toString
+    val dir = tempDir("graft-hive-start").toString
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[streaming.TaskEngine.TaskEvent]
     input.addData(
@@ -114,30 +113,6 @@ class TaskHiveSpec extends SparkSuite {
     val transitions = spark.read.parquet(s"$dir/out")
     assert(transitions.count() == 3)
     assert(transitions.filter(col("taskId") === "t1").count() == 3)
-  }
-
-  private val TagKey = "graft.spec.tag"
-
-  /** Jobs started on this thread while `body` runs, counted by a
-    * listener keyed on a thread-local tag (so background jobs of other
-    * suites never count). */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"taskhive-spec-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(TagKey) == tag))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(TagKey, tag)
-    try body finally {
-      sc.setLocalProperty(TagKey, null)
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
   }
 
   test("warm routes build their DataFrames without starting a Spark job") {
@@ -170,7 +145,7 @@ class TaskHiveSpec extends SparkSuite {
   }
 
   test("an instance serves its first-use snapshot; a new one sees a rewrite") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hive-snapshot")
+    val dir = tempDir("graft-hive-snapshot")
     Seq("orders", "supplier").foreach { t =>
       java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"),
         dir.resolve(s"$t.parquet"))
@@ -188,6 +163,82 @@ class TaskHiveSpec extends SparkSuite {
     assert(after.getTaskByID("1").count() == 0)
     assert(after.getTaskByID("2").count() == 1)
     assert(after.listTasks(None, 10).collect().forall(_.getString(0).toLong % 2 == 0))
+  }
+
+  /** `a` and `b` hold the same rows with the same multiplicities. */
+  private def assertSameRows(a: DataFrame, b: DataFrame, what: String): Unit = {
+    assert(a.exceptAll(b).count() == 0, s"$what: rows only in TaskHive's answer")
+    assert(b.exceptAll(a).count() == 0, s"$what: rows only in the join's answer")
+  }
+
+  test("the worker mapping equals Tables.assignedTasks' join, every task and worker") {
+    // every task and worker through the frame at both scales; through
+    // the API calls every worker and a dozen ids at sf0.001, two of each
+    // at sf0.01 (a worker's call is 3 Spark jobs)
+    Seq(sf -> true, "/root/testdata/sf0.01" -> false).foreach { case (dir, all) =>
+      val h = TaskHive(spark, dir)
+      val joined = sources.Tables.assignedTasks(spark, dir)
+      // the frame that getTaskByID and getWorkerTasks filter
+      assertSameRows(h.assignedTasks, joined, s"$dir every task")
+      val rows = joined.select("id", "status", "priority", "retry_count", "worker_id",
+        "create_time").collect().toSeq.sortBy(_.getString(0))
+      def task(r: Row) = Row(r.toSeq.take(5): _*)
+      // point lookups: processing and other tasks, a processing task the
+      // join leaves without a worker (if any), absent and non-canonical ids
+      val (processing, other) = rows.partition(_.getInt(1) == sources.Tables.Processing)
+      val ids = (if (all) processing.take(3) ++ other.take(2) ++
+        processing.filter(_.isNullAt(4)).take(1) else processing.take(1) ++ other.take(1))
+        .map(_.getString(0)) ++
+        (if (all) Seq("007", "", "-1", " 42", "42.0", "999999999") else Nil)
+      ids.foreach { id =>
+        assert(h.getTaskByID(id).collect().toSeq == rows.filter(_.getString(0) == id).map(task),
+          s"$dir task '$id'")
+      }
+      // workers: the same rows in the same order as the join's answer
+      val byWorker = processing.filterNot(_.isNullAt(4)).groupBy(_.getString(4))
+        .view.mapValues(_.map(r => Row(r.getString(0), r.getInt(2), r.get(5), r.getString(4))))
+        .toMap
+      val workers = h.listWorkers().select("worker_id").as[String].collect()
+      assert(byWorker.nonEmpty && byWorker.keySet.subsetOf(workers.toSet))
+      (if (all) workers ++ Seq("", "Supplier#999999999") else workers.take(2)).foreach { w =>
+        assert(h.getWorkerTasks(w).collect().toSeq == byWorker.getOrElse(w, Nil),
+          s"$dir worker '$w'")
+      }
+    }
+  }
+
+  test("the worker mapping equals the join on negative, null and unmatchable keys") {
+    val dir = tempDir("graft-hive-keys").toString
+    val orders = sources.Tables.orders(spark, sf)
+    orders.withColumn("o_orderkey",
+        (col("o_orderkey") - 750).cast(orders.schema("o_orderkey").dataType))
+      .write.parquet(s"$dir/orders.parquet")
+    // 12 suppliers: keys -4..5, one null key and key 40, which no
+    // o_orderkey % 12 can reach
+    val sup = sources.Tables.supplier(spark, sf)
+    val keyType = sup.schema("s_suppkey").dataType
+    sup.withColumn("s_suppkey", (col("s_suppkey") - 5).cast(keyType))
+      .union(sup.orderBy("s_suppkey").limit(2).withColumn("s_suppkey",
+        when(col("s_suppkey") === 1, lit(null)).otherwise(lit(40)).cast(keyType)))
+      .coalesce(1).write.parquet(s"$dir/supplier.parquet")
+    val h = TaskHive(spark, dir)
+    assert(h.assignedTasks.filter(col("o_orderkey") < 0 && col("worker_id").isNotNull)
+      .count() > 0)
+    assertSameRows(h.assignedTasks, sources.Tables.assignedTasks(spark, dir), "shifted keys")
+  }
+
+  test("a supplier table that repeats an s_suppkey fails loudly") {
+    val dir = tempDir("graft-hive-dupsup")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/orders.parquet"),
+      dir.resolve("orders.parquet"))
+    val sup = sources.Tables.supplier(spark, sf)
+    sup.union(sup.orderBy("s_suppkey").limit(1)).coalesce(1)
+      .write.parquet(s"$dir/supplier.parquet")
+    val h = TaskHive(spark, dir.toString)
+    Seq(() => h.getTaskByID("1"), () => h.getWorkerTasks("Supplier#000000001")).foreach { r =>
+      val e = intercept[IllegalArgumentException](r())
+      assert(e.getMessage.contains("repeats s_suppkey"), e.getMessage)
+    }
   }
 
   test("userProcName stays injective when sanitized forms collide") {
