@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Diagnostic (like BucketProbe/JaccardProbe): head-to-head of the two
+/** Diagnostic: head-to-head of the two
   * components engines on ENGINEERED pair-graph topologies at probe
   * scale — the evidence behind the auto dispatch in
   * [[graft.operators.GraphOps.components]].

@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   * a driver Verify run — never contend on Derby's single-owner lock,
   * and nothing of it is left on disk. The warehouse directory is
   * per-JVM too (pid-keyed under /tmp) and is removed, with the Derby
-  * log and Hive's session resources directory, when the JVM exits.
+  * log, Hive's session resources directory and every [[tempDir]],
+  * when the JVM exits.
   * Catalog init is lazy: sessions that never touch the catalog pay
   * nothing.
   *
@@ -35,12 +36,27 @@ object GraftSession {
   // Hive's per-session resources directory, else `/tmp/<uuid>_resources`
   private lazy val hiveResources = s"/tmp/graft-hive-resources-$pid"
 
+  // Paths removed, with everything in them, when the JVM exits.
+  private val exitPaths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   // Runs after Spark's own shutdown hook (Hadoop priority 40), which
   // stops the context, and before Hadoop closes its file systems (10).
-  private lazy val removeAtExit: Unit =
+  private lazy val removeAtExit: Unit = {
+    Seq(warehouse, derbyLog, hiveResources).foreach(exitPaths.add)
     org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() =>
-      Seq(warehouse, derbyLog, hiveResources).foreach(p =>
+      exitPaths.forEach(p =>
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))), 20)
+  }
+
+  /** A fresh directory under the JVM's temp dir that is removed, with
+    * everything in it, when the JVM exits: the home of an artifact a
+    * session builds once and then reads, such as a stored index. */
+  private[graft] def tempDir(prefix: String): String = {
+    removeAtExit
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    exitPaths.add(d)
+    d
+  }
 
   /** Builder with the engine conf applied; callers add master/app
     * specifics and `getOrCreate()`. */

@@ -47,7 +47,7 @@ import org.apache.spark.sql.functions._
   *     get near-parallel vectors. Labels = hash(package) mod 50, the
   *     domain-partition shape the hard fixture models.
   *  5. the [[Bench100x.top]] probe set + dispatcher decisions +
-  *     CellProbe bucket histograms over the result.
+  *     `graft.Profile --skew` bucket histograms over the result.
   *
   * Usage: runMain graft.RealCorpus [outDir] [mode]
   * (default outDir /tmp/realcorpus, mode `all`; mode `build` stops

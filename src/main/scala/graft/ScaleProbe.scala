@@ -234,9 +234,9 @@ object ScaleProbe {
   * real head-heavy corpus would not have. This runs the same
   * [[Bench100x.top]] probe set over hard 10×/100× fixtures (same
   * 3-pass timing loop) and writes BENCH_10x_hard.json /
-  * BENCH_100x_hard.json; PairProbe over the same dirs supplies the
-  * qualifying-pair counts for the BASELINE.md candidate-vs-output
-  * table.
+  * BENCH_100x_hard.json; `graft.Profile` over the same dirs supplies
+  * the qualifying-pair counts (each pair query's `rows`) for the
+  * BASELINE.md candidate-vs-output table.
   *
   * Usage: runMain graft.BenchHard [which] — which ∈ {10, 100, both}.
   */

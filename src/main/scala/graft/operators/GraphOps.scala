@@ -638,35 +638,10 @@ object GraphOps {
     * probe plan against stored parquet. */
   private def clusterIndexDir(spark: SparkSession, sfDir: String): String =
     Memo.cached(spark, s"clusterIndexDir:$sfDir") {
-      val d = java.nio.file.Files
-        .createTempDirectory("graft-cluster-idx")
-      deleteOnExit(d)
-      buildClusterIndex(spark, sfDir, d.toString)
-      d.toString
+      val d = graft.GraftSession.tempDir("graft-cluster-idx")
+      buildClusterIndex(spark, sfDir, d)
+      d
     }
-
-  /** JVM-exit cleanup for the session-scoped index temp dirs (round-9
-    * advice: each (session, sfDir) otherwise leaks a full parquet index
-    * set on disk, accumulating across bench runs and test sessions).
-    * One hook, one global list — registration is cheap and idempotent
-    * per directory. */
-  private val exitDirs =
-    java.util.Collections.synchronizedList(
-      new java.util.ArrayList[java.nio.file.Path])
-  private lazy val exitHook: Unit = // lazy = register the hook once
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      exitDirs.forEach { root =>
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(root).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount)
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: Throwable => () }
-      }))
-  private def deleteOnExit(dir: java.nio.file.Path): Unit = {
-    exitHook
-    exitDirs.add(dir)
-  }
 
   /** The nightly chunk-family cluster-maintenance QUERY — re-pointed
     * (round-9) at the STORED [[buildClusterIndex]] parquet: the index

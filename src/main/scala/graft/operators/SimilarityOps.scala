@@ -380,7 +380,7 @@ object SimilarityOps {
     * (session, store) in [[Memo]]. */
   def annIvfProbeQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = Memo.cached(spark, s"ivfIndexDir:$sfDir") {
-      val d = java.nio.file.Files.createTempDirectory("graft-ivf-idx").toString
+      val d = graft.GraftSession.tempDir("graft-ivf-idx")
       buildIvfIndex(spark, sfDir, d)
       d
     }
@@ -454,18 +454,54 @@ object SimilarityOps {
           on(keys :+ "shard"))
   }
 
+  /** `frame`'s population histogram on `keys`, summarized: occupied
+    * buckets, the largest bucket c and Σc² — the size of the bucket
+    * self-join's candidate enumeration. One narrow aggregate, not
+    * memoized: [[bucketMoments]] memoizes it for the fanout rules, and
+    * `graft.Profile --skew` reports it. */
+  private[graft] def bucketHistogram(frame: DataFrame,
+      keys: Seq[String]): (Long, Long, Long) = {
+    val r = frame.groupBy(keys.map(col): _*).count()
+      .agg(count(lit(1)), coalesce(max("count"), lit(0L)),
+        coalesce(sum(col("count") * col("count")), lit(0L))).head()
+    (r.getLong(0), r.getLong(1), r.getLong(2))
+  }
+
   /** The bucket-skew statistic every fanout is sized from: (max c,
-    * max(1, Σc²)) over `frame`'s population histogram on `keys` — one
-    * narrow ANALYZE aggregate per (session, `memoKey`), the number a
-    * real deployment records in table stats. `memoKey` names the store
-    * so [[invalidateSaturationStats]] re-arms it at commit points. */
+    * max(1, Σc²)) of [[bucketHistogram]] — one narrow ANALYZE aggregate
+    * per (session, `memoKey`), the number a real deployment records in
+    * table stats. `memoKey` names the store so
+    * [[invalidateSaturationStats]] re-arms it at commit points. */
   private[graft] def bucketMoments(spark: SparkSession, memoKey: String,
       frame: => DataFrame, keys: String*): (Double, Double) =
     Memo.cached(spark, memoKey) {
-      val r = frame.groupBy(keys.head, keys.tail: _*).count()
-        .agg(max("count"), sum(col("count") * col("count"))).head()
-      (r.getLong(0).toDouble, math.max(1L, r.getLong(1)).toDouble)
+      val (_, maxC, sumSq) = bucketHistogram(frame, keys)
+      (maxC.toDouble, math.max(1L, sumSq).toDouble)
     }
+
+  /** A family whose pair join is sized from [[bucketMoments]]: the
+    * population frame and bucket keys its fanout rule reads, memoized
+    * under `memo:<store>`. */
+  private[graft] final case class BucketFamily(name: String, memo: String,
+      frame: (SparkSession, String) => DataFrame, keys: Seq[String]) {
+    def moments(spark: SparkSession, sfDir: String): (Double, Double) =
+      bucketMoments(spark, s"$memo:$sfDir", frame(spark, sfDir), keys: _*)
+  }
+
+  private val SimhashBuckets = BucketFamily("simhash", "simhashTileFanout",
+    simhashBandedFrame, Seq("source", "band", "chunk"))
+  private val SimhashWideBuckets = BucketFamily("simhash_wide",
+    "simhashWideTileFanout", simhashWideBandedFrame, Seq("source", "band", "chunk"))
+  private val SemanticWideBuckets = BucketFamily("semantic_wide",
+    "semWideTileFanout", semanticWideBandedFrame, Seq("band", "subcell"))
+  private val PolyBuckets = BucketFamily("minhash_poly", "polyBucketMoments",
+    polyBandedBuckets, Seq("band", "bucket"))
+  private val EmbeddingLabels = BucketFamily("embedding_label",
+    "embTileFanout", (s, d) => Tables.embeddings(s, d), Seq("label"))
+
+  /** Every [[BucketFamily]], in the order `Profile --skew` reports them. */
+  private[graft] val bucketFamilies: Seq[BucketFamily] = Seq(SimhashBuckets,
+    SimhashWideBuckets, SemanticWideBuckets, PolyBuckets, EmbeddingLabels)
 
   /** STRAGGLER-BOUND tile count: tiling replicates every bucket
     * ~tiles/2× to split hot ones, so it only pays when the hottest
@@ -568,8 +604,7 @@ object SimilarityOps {
     * IDENTICAL for any B (RewireEquivalenceSpec pins B-invariance at
     * forced B = 1 vs 16). */
   private def embeddingTileFanout(spark: SparkSession, sfDir: String): Int =
-    embeddingTiles(bucketMoments(spark, s"embTileFanout:$sfDir",
-      Tables.embeddings(spark, sfDir), "label")._1)
+    embeddingTiles(EmbeddingLabels.moments(spark, sfDir)._1)
 
   /** Per-task comparison budget of [[embeddingTiles]]: ~4M cosine
     * evaluations ≈ a few seconds of one core. */
@@ -631,14 +666,7 @@ object SimilarityOps {
         array((0 until MinhashPerms).map(i => col(s"h$i")): _*).as("signature"))
   }
 
-  /** MinHash+LSH near-dup pairs: docs sharing any band bucket, with
-    * estimated Jaccard = fraction of matching permutation minima. */
-  /** The xxhash pipeline's banded frame (doc_id, signature, band,
-    * bucket) — shared with BucketProbe's skew measurement. */
-  private[graft] def xxhashBandedBuckets(spark: SparkSession, sfDir: String): DataFrame =
-    xxhashBandedOf(minhashSignatures(spark, sfDir))
-
-  /** Banding alone over a (doc_id, signature) frame — split out
+  /** MinHash banding over a (doc_id, signature) frame — split out
     * (round-17) so [[minhashDedup]] can materialize the 32-perm
     * signature pass once for both self-join sides. */
   private[graft] def xxhashBandedOf(sigs: DataFrame): DataFrame = {
@@ -652,6 +680,8 @@ object SimilarityOps {
         col("pos").as("band"), col("col").as("bucket"))
   }
 
+  /** MinHash+LSH near-dup pairs: docs sharing any band bucket, with
+    * estimated Jaccard = fraction of matching permutation minima. */
   def minhashDedup(spark: SparkSession, sfDir: String): DataFrame = {
     graft.GraftExtensions.register(spark)
     // localCheckpoint: one text scan + 32-perm signature pass feeds
@@ -714,13 +744,11 @@ object SimilarityOps {
   /** ADAPTIVE tile fanout for [[simhashDedup]]'s bucket self-join —
     * [[stragglerTiles]] over the (source, band, chunk) histogram. */
   private def simhashTileFanout(spark: SparkSession, sfDir: String): Int =
-    stragglerTiles(cores(spark), bucketMoments(spark, s"simhashTileFanout:$sfDir",
-      simhashBandedFrame(spark, sfDir), "source", "band", "chunk"))
+    stragglerTiles(cores(spark), SimhashBuckets.moments(spark, sfDir))
 
   /** The banded pigeonhole frame (doc_id, source, simhash, band,
-    * chunk) — shared with [[graft.CellProbe]]'s bucket-population
-    * histogram (the round-11 adjudication of simhash_dedup's 100×
-    * line). */
+    * chunk) — the population [[simhashTileFanout]] and
+    * `Profile --skew` measure. */
   private[graft] def simhashBandedFrame(spark: SparkSession,
       sfDir: String): DataFrame =
     simhashBandedOf(simhashes(spark, sfDir))
@@ -1367,8 +1395,7 @@ object SimilarityOps {
     * exactly the offline half. */
   def annIvfPqProbeQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = Memo.cached(spark, s"ivfPqIndexDir:$sfDir") {
-      val d = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-idx").toString
+      val d = graft.GraftSession.tempDir("graft-ivfpq-idx")
       buildIvfPqIndex(spark, sfDir, d)
       d
     }
@@ -1747,8 +1774,7 @@ object SimilarityOps {
     * DIFFUSE growth; hot clusters need tiling regardless — the
     * measured round-13 lesson). */
   private def semanticWideTileFanout(spark: SparkSession, sfDir: String): Int =
-    stragglerTiles(cores(spark), bucketMoments(spark, s"semWideTileFanout:$sfDir",
-      semanticWideBandedFrame(spark, sfDir), "band", "subcell"))
+    stragglerTiles(cores(spark), SemanticWideBuckets.moments(spark, sfDir))
 
   /** Wide semantic near-dup pairs — the narrow family's τ split,
     * mirrored: THIS query runs at the fixture's τ=0.30 stress point
@@ -2014,8 +2040,7 @@ object SimilarityOps {
   /** The poly pipeline's banded frame (doc_id, sig, band, bucket) —
     * bucket = the band's signature slice itself (array equality in the
     * join; Murmur3 hashes arrays fine), no re-hash, so the oracle's
-    * slice-equality is literally the same predicate. Shared with
-    * BucketProbe's skew measurement. */
+    * slice-equality is literally the same predicate. */
   private[graft] def polyBandedBuckets(spark: SparkSession, sfDir: String): DataFrame =
     polyBandedBucketsOf(spark,
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
@@ -2141,8 +2166,7 @@ object SimilarityOps {
 
   private def polyBucketMoments(spark: SparkSession,
       sfDir: String): (Double, Double) =
-    bucketMoments(spark, s"polyBucketMoments:$sfDir",
-      polyBandedBuckets(spark, sfDir), "band", "bucket")
+    PolyBuckets.moments(spark, sfDir)
 
   /** The tiled poly-MinHash pair stage — [[tiledSelfJoin]] on (band,
     * bucket) with the signature-agreement estimate; multi-band
@@ -2640,8 +2664,7 @@ object SimilarityOps {
     * fixes HOT CLUSTERS — a corpus can need both, so both forms carry
     * both. */
   private def simhashWideTileFanout(spark: SparkSession, sfDir: String): Int =
-    stragglerTiles(cores(spark), bucketMoments(spark, s"simhashWideTileFanout:$sfDir",
-      simhashWideBandedFrame(spark, sfDir), "source", "band", "chunk"))
+    stragglerTiles(cores(spark), SimhashWideBuckets.moments(spark, sfDir))
 
   /** [[simhashPairsTiled]] for the wide 9-chunk signature: the same
     * [[tiledSelfJoin]] (RewireEquivalenceSpec pins tiled ≡ untiled ≡

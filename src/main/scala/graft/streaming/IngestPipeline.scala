@@ -213,8 +213,7 @@ object IngestPipeline {
     * probes and the final verdict all replay in DuckDB. */
   def pipelineIngest(spark: SparkSession, sfDir: String): DataFrame = {
     val art = Memo.cached(spark, s"ingestArtifacts:$sfDir") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-ingest-art").toString
+      val dir = graft.GraftSession.tempDir("graft-ingest-art")
       buildArtifacts(spark,
         Tables.documents(spark, sfDir).filter(col("doc_id") % 5 =!= 0)
           .select(col("doc_id"), col("text")),

@@ -1,8 +1,8 @@
 package org.apache.spark
 
 /** Blocks until every listener event posted so far has been delivered
-  * (the bus is private to Spark, hence this package), so a spec reads
-  * listener counters only after the events it cares about arrived. */
+  * (the bus is private to Spark, hence this package), so a listener's
+  * counters are read only after the events they count arrived. */
 object ListenerBusDrain {
   def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
 }

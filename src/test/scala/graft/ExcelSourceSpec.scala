@@ -67,6 +67,54 @@ class ExcelSourceSpec extends SparkSuite {
     assert(df.count() == 0)
   }
 
+  /** A generated workbook with header (id, name) and one data row per
+    * `(id, name)`, as inline strings. */
+  private def idNames(rows: (String, String)*): String = {
+    def row(cells: (String, String)): String =
+      s"""<c r="A1" t="inlineStr"><is><t>${cells._1}</t></is></c>""" +
+        s"""<c r="B1" t="inlineStr"><is><t>${cells._2}</t></is></c>"""
+    xlsx(shared = Seq.empty, rows = (("id", "name") +: rows).map(row))
+  }
+
+  private def copyTo(workbook: String, dir: java.io.File, name: String): Unit =
+    java.nio.file.Files.copy(java.nio.file.Paths.get(workbook),
+      java.nio.file.Paths.get(dir.getPath, name))
+
+  test("generated xlsx ticker: AvailableNow drains the dir; a later run ingests only new files") {
+    val dir = tempDir("graft-excel-gen-stream").toFile
+    val in = new java.io.File(dir, "in")
+    in.mkdirs()
+    val out = s"${dir.getPath}/out"
+    def runOnce(): Unit = {
+      val q = spark.readStream.format("graft-excel").load(in.getPath)
+        .writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", s"${dir.getPath}/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(60000)
+      assert(!q.isActive)
+    }
+    def ingested: Seq[(String, String)] = spark.read.parquet(out).collect()
+      .map(r => (r.getAs[String]("id"), r.getAs[String]("name"))).toSeq.sorted
+    copyTo(idNames("1" -> "a", "2" -> "b", "3" -> "c"), in, "a.xlsx")
+    runOnce()
+    assert(ingested == Seq("1" -> "a", "2" -> "b", "3" -> "c"))
+    copyTo(idNames("4" -> "d", "5" -> "e"), in, "b.xlsx")
+    runOnce()
+    assert(ingested == Seq("1" -> "a", "2" -> "b", "3" -> "c", "4" -> "d", "5" -> "e"))
+  }
+
+  test("generated xlsx: batch read of a directory unions all files (one partition per file)") {
+    val dir = tempDir("graft-excel-gen-batch").toFile
+    copyTo(idNames("1" -> "a", "2" -> "b", "3" -> "c"), dir, "a.xlsx")
+    copyTo(idNames("4" -> "d", "5" -> "e"), dir, "b.xlsx")
+    val df = spark.read.format("graft-excel").load(dir.getPath)
+    assert(df.columns.toSeq == Seq("id", "name"))
+    assert(df.collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted ==
+      Seq("1" -> "a", "2" -> "b", "3" -> "c", "4" -> "d", "5" -> "e"))
+    assert(df.rdd.getNumPartitions == 2)
+  }
+
   test("reads spider.xlsx: 657 data rows x 9 string columns, header as names") {
     val df = spark.read.format("graft-excel").load(SpiderXlsx)
     assert(df.columns.toSeq == Seq("taskId", "taskName", "domain", "type",

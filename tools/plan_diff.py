@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
-"""Diff two graft.PlanDump output directories, ignoring run-to-run noise.
+"""Diff two `graft.Profile --plans` output directories, ignoring run-to-run noise.
 
-PlanDump writes one `<query>_<tag>.txt` per query (the formatted physical
-plan). Two dumps of the same plans still differ in tokens that change
-between runs or whenever code moves; these are normalised first:
+`runMain graft.Profile --plans <sfDir> <outDir> <tag> [q...]` writes one
+`<query>_<tag>.txt` per query (the formatted physical plan). Two dumps of
+the same plans still differ in tokens that change between runs or
+whenever code moves; these are normalised first:
 
   - expression ids      `vec_id#5214L`  -> `vec_id#N`
   - RDD ids             `MapPartitionsRDD[1273]` -> `MapPartitionsRDD[N]`
@@ -11,6 +12,10 @@ between runs or whenever code moves; these are normalised first:
   - call sites          `at SimilarityOps.scala:457` -> `at <site>`
   - temp-dir suffixes   `/tmp/graft-cluster-idx2133568946273838746/` ->
                         `/tmp/graft-cluster-idx<tmp>/` (built indexes)
+  - the JVM's warehouse `/tmp/graft-warehouse-11719/` ->
+                        `/tmp/graft-warehouse-<pid>/` (managed tables)
+  - lambda identities   `Ops$$$Lambda$6807/0x00007fc9bdceebe0@5724131e` ->
+                        `Ops$$$Lambda<id>` (typed map functions)
 
 Queries are matched by name (the file name minus its `_<tag>.txt`).
 
@@ -31,6 +36,8 @@ NORMALISE = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"\bat [\w$.]+\.scala:\d+"), "at <site>"),
     (re.compile(r"(/[A-Za-z][\w.-]*?)\d{8,}(?=/)"), r"\1<tmp>"),
+    (re.compile(r"/graft-warehouse-\d+/"), "/graft-warehouse-<pid>/"),
+    (re.compile(r"\$Lambda[\w$/]*@[0-9a-f]+"), "$Lambda<id>"),
 ]
 
 
