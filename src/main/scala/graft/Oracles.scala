@@ -2204,8 +2204,8 @@ object Oracles {
     // propagates labels along the undirected star edges (UNION dedups,
     // so the accumulation terminates; components here are near-dup
     // clusters — tiny — so the label-pair blowup is bounded) and the
-    // outer MIN per node recovers exactly the min-label fixpoint the
-    // Spark iteration converges to. Chunking mirrors chunk_dedup's
+    // outer MIN per node recovers exactly the component-minimum label
+    // the Spark components engine returns. Chunking mirrors chunk_dedup's
     // oracle; grouping by the chunk STRING equals the engine's
     // xxhash64(chunk) grouping (the hash is internal currency only).
     "dedup_clusters" -> qrx(DedupClustersCte,
@@ -2557,7 +2557,7 @@ object Oracles {
         """SELECT a_id, b_id, cell, dot, cos2_e6 FROM spairs
           |ORDER BY a_id, b_id""".stripMargin),
       // pairs → recursive components (min reachable id — the
-      // minLabelComponents fixpoint) → longest-text survivor (shared
+      // GraphOps.components label) → longest-text survivor (shared
       // arg_max rule), universe = vectors with a document row
       "semantic_dedup_canonical" -> qrx(
         SemanticPairsCte + SemanticComponentsCte,
@@ -2971,7 +2971,7 @@ object Oracles {
           |ORDER BY d.doc_id""".stripMargin),
       // End-to-end fuzzy dedup: poly-MinHash pairs at est-Jaccard ≥ 0.5
       // → recursive-CTE connected components (label = min reachable
-      // doc_id, the same fixpoint minLabelComponents converges to) →
+      // doc_id, the same label GraphOps.components returns) →
       // longest-text survivor per component.
       "fuzzy_dedup_canonical" -> qrx(PolyMinhashPairsCte + FuzzyComponentsCte,
         """SELECT d.doc_id, c.component,

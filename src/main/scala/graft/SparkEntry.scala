@@ -158,7 +158,7 @@ object SparkEntry {
     "compaction_plan" -> (LayoutOps.compactionPlan _),
     "shard_plan" -> (LayoutOps.shardPlan _),
     // as-of join (merge-scan form), rare terms, distribution windows,
-    // cluster resolution (iterative min-label propagation, rows-only)
+    // cluster resolution (connected components, rows-only)
     "asof_join" -> (EventOps.asofJoin _),
     "range_join_binned" -> (EventOps.rangeJoinBinned _),
     "merge_upsert" -> (TaskOps.mergeUpsert _),

@@ -13,21 +13,16 @@ import graft.sources.Tables
   */
 object GraphOps {
 
-  /** Connected components over the chunk-share graph via min-label
-    * propagation, the distributed union-find analog.
+  /** Connected components over the chunk-share graph.
     *
     * Scale design:
     *  - STAR edges, not cliques: every member of a duplicated-chunk
     *    group links to the group's min doc, so a chunk shared by k
     *    docs contributes k−1 edges (a clique would be k²/2 — the same
     *    quadratic blowup the dedup rewires eliminated).
-    *  - Min-label propagation: comp ← min(comp, min over neighbors)
-    *    each round; converges in O(graph diameter) rounds — star
-    *    topology keeps the diameter small (hub hops). Each round is
-    *    one shuffle join + one aggregation; intermediate labels are
-    *    persisted and the convergence certificate (#changed labels)
-    *    is the only driver-side scalar — the same loop shape as
-    *    GraphX/Pregel, declared in DataFrames so AQE plans each round.
+    *  - The shared [[components]] engine labels each cluster by its
+    *    min doc_id; a linear edge list stays far below its driver
+    *    union-find gate at every fixture scale.
     *  - Rows-only correctness (an iterative fixpoint is not a single
     *    SQL statement); GraphOpsSpec proves equality with union-find.
     */
@@ -57,7 +52,7 @@ object GraphOps {
     * and every report reads it. Staleness contract: [[Memo]]. */
   private def chunkComponents(spark: SparkSession, sfDir: String): DataFrame =
     Memo.frame(spark, s"chunkComponents:$sfDir")(
-      components(chunkStarEdges(spark, sfDir), starShaped = true)
+      components(chunkStarEdges(spark, sfDir))
         .select(col("doc").as("doc_id"), col("comp").as("component")))
 
   private def fuzzyComponents(spark: SparkSession, sfDir: String): DataFrame =
@@ -74,180 +69,148 @@ object GraphOps {
           .select(col("a_id").as("src"), col("b_id").as("dst")))
         .select(col("doc").as("doc_id"), col("comp").as("component")))
 
-  /** Connected components over an arbitrary (src, dst) edge list with
-    * src < dst per edge — the min-label propagation loop extracted from
-    * [[dedupClusters]] so every pair-emitting dedup detector (chunk
-    * stars, MinHash LSH pairs, SimHash collisions) shares one
-    * fixpoint engine. Returns (doc, comp). Works for any a<b pair
-    * graph, not only star forests: the direct init is still exact
-    * round-1 propagation (comp(v) = min(v, min incoming src) — every
-    * src self-labels via the first union leg, and an edge's dst always
-    * has src < dst so a missing dst self-label can never change the
-    * min). Round-count model (measured, see the delta-iteration note
-    * below): the tail is bounded by the EDGE-graph diameter — a new
-    * min crosses at most one edge per round; pointer jumping shortcuts
-    * only label-pointer chains, it does NOT cut the edge-diameter
-    * tail. Size the round cap to the expected edge diameter (star
-    * forests: ~2; the τ=0.30 semantic pair graph measured ≈ 15). */
-  private[graft] def minLabelComponents(rawEdges: DataFrame): DataFrame = {
-    // Checkpoint (eager) — not persist — between rounds: persist
-    // short-circuits EXECUTION but Catalyst still re-analyzes the
-    // whole accumulated lineage on every action, so per-round planning
-    // cost grows without bound (measured 2.5 s → 9.3 s by round 5 at
-    // sf0.1). Checkpointing truncates the logical plan, keeping every
-    // round O(1) planning — the same reason GraphX checkpoints
-    // periodically.
-    //
-    // TWO durability modes, chosen by `spark.graft.checkpointDir`:
-    //  - unset (local default): localCheckpoint — blocks live on
-    //    executors only. Fastest, but one lost executor kills the
-    //    lineage-truncated job; fine in a single-JVM local run.
-    //  - set (cluster form): sc.setCheckpointDir + reliable
-    //    df.checkpoint() to shared storage (HDFS/object store) — an
-    //    executor loss recomputes from the checkpoint files instead of
-    //    failing the fixpoint. At 100 TB this is the only safe mode for
-    //    a multi-round job whose lineage has been truncated.
-    val session = rawEdges.sparkSession
-    val ckptDir = session.conf.get("spark.graft.checkpointDir", "")
-    val reliable = ckptDir.nonEmpty
-    if (reliable && session.sparkContext.getCheckpointDir.isEmpty)
-      session.sparkContext.setCheckpointDir(ckptDir)
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    val edges = ckpt(rawEdges)
-    val und = edges.union(
-      edges.select(col("dst").as("src"), col("src").as("dst")))
-    // DIRECT star initialization (round-3 perf fix): the edge list is a
-    // star forest — every edge is (group-root → member) with root < dst
-    // by construction — so the label after one propagation round is
-    // computable in closed form: comp(v) = min(v, min incoming root).
-    // That resolves every non-overlapping star BEFORE the loop; for a
-    // pure star forest the loop runs exactly one confirming round
-    // (vs identity-init's resolve + confirm = two full rounds).
-    // One aggregation, no vertex-distinct + join: a vertex's candidate
-    // labels are itself (as src — every root appears as src) and each
-    // incoming root (as dst, where src < dst by construction), so
-    // min-per-doc over the unioned (doc, label) pairs IS the round-1
-    // result.
-    var comp = edges.select(col("src").as("doc"), col("src").as("comp"))
-      .union(edges.select(col("dst").as("doc"), col("src").as("comp")))
-      .groupBy("doc").agg(min("comp").as("comp"))
-    comp = ckpt(comp)
-    // DELTA iteration (round 6, the static-graph Pregel optimization):
-    // only nodes whose label CHANGED last round send this round — an
-    // unchanged node's label already reached all its neighbors (the
-    // graph is static) and min() makes re-delivery a no-op. Round 1's
-    // frontier is everyone (the direct init is not a delivery).
-    // Measured frontier decay on the 10× semantic pair graph (201k
-    // edges, 18k nodes, edge diameter ≈ 15): 14.7k → 12k → 1.6k → 466
-    // → … → 0 over 15 rounds — so from round 3 on, the old full
-    // und ⋈ comp join re-scanned 402k edge rows to deliver <500
-    // labels. Locally the tail rounds are fixed-overhead-bound either
-    // way (~1.2 s each; wall time is a wash at this size); on a real
-    // cluster the frontier join is the difference between O(Σ frontier
-    // ·deg) and O(rounds·E) total message traffic. (Multi-jump per
-    // round was measured and does NOT cut rounds: the tail is the
-    // EDGE-graph diameter — a new min can only cross one edge per
-    // round; pointer jumping shortcuts only the label-pointer graph.)
-    // Convergence certificate: empty frontier ⟺ no label decreased ⟺
-    // fixpoint (labels only ever decrease).
-    var frontier = comp
-    var converged = edges.isEmpty
-    var iters = 0
-    while (!converged && iters < 20) {
-      val msgs = und.join(frontier.withColumnRenamed("doc", "fdoc"),
-          und("src") === col("fdoc"))
-        .select(col("dst").as("doc"), col("comp"))
-      var next = comp.union(msgs).groupBy("doc")
-        .agg(min("comp").as("comp"))
-      // Pointer jumping from round 2 on: comp ← comp∘comp halves the
-      // remaining hub-chain distance each round (O(log diameter) total
-      // rounds instead of O(diameter)). Skipped on round 1 because the
-      // common case (pure star forest, already resolved by the direct
-      // init) converges there — the extra self-join would be pure cost.
-      if (iters >= 1) {
-        val jump = next.select(col("doc").as("cdoc"), col("comp").as("ccomp"))
-        next = next.join(jump, next("comp") === col("cdoc"), "left")
-          .select(next("doc"), coalesce(col("ccomp"), next("comp")).as("comp"))
-      }
-      val nextC = ckpt(next)
-      // changed-label set: both sides hash-partitioned on doc by their
-      // groupBy, so this join adds no exchange; computed AFTER pointer
-      // jumping so jump-shortcut changes also re-send next round. NOT
-      // checkpointed: both parents are freshly checkpointed, so its
-      // lineage is one join deep — recomputing it for the isEmpty probe
-      // plus next round's messages is cheaper than another
-      // materialization action per round.
-      frontier = nextC.alias("n")
-        .join(comp.alias("o"), col("n.doc") === col("o.doc"))
-        .filter(col("n.comp") < col("o.comp"))
-        .select(col("n.doc").as("doc"), col("n.comp").as("comp"))
-      comp = nextC
-      converged = frontier.isEmpty
-      iters += 1
+  /** Connected components over an arbitrary (src, dst) pair graph — the
+    * ONE fixpoint every pair-emitting dedup family shares (chunk stars,
+    * MinHash / SimHash / semantic pairs, the incremental merges).
+    * Input contract: src ≠ dst per edge (every detector here emits
+    * a < b pairs by construction); orientation and duplicates are free.
+    * Returns (doc, comp), one row per node of the edge list, comp = the
+    * component's MINIMUM node id — the label the oracles' recursive
+    * CTEs compute, so both paths below are bit-identical.
+    *
+    * [[forestEdges]] contracts, normalizes and checkpoints the input;
+    * its measured edge count then picks the path — a runtime size gate
+    * like a broadcast-vs-shuffle join pick:
+    *  - at most [[SmallGraphEdges]]: collect the edges (≤ 16 MB, the
+    *    same order Spark ships to EVERY executor under its broadcast
+    *    threshold; here it lands once, on the driver) and run a driver
+    *    [[UnionFind]]. Below the gate the per-round overhead of the
+    *    distributed fixpoint (4–6 jobs × shuffles × a checkpoint per
+    *    round) costs more than the whole answer on the driver. Measured
+    *    at the 10× probe (906k-edge merge graph): componentsIncremental
+    *    7.2 → 2.3 s.
+    *  - above: [[starContractLoop]], whose round bound is O(log² n)
+    *    whatever the graph's shape.
+    *
+    * The trade of having one engine: min-label propagation, deleted,
+    * beat star contraction only on a pure STAR FOREST above the gate
+    * (its closed-form first round resolves a star forest outright).
+    * The only star forests built here are the chunk-share graphs, and
+    * they sit far below it: at sf0.1, 784 forest edges (≈ 1/1,275 of
+    * the gate), where a cold dedup_clusters build and collect starts
+    * 13 jobs on this path to min-label's 37 (0.96–1.25 s vs 2.2–2.9 s,
+    * local[4] on a 4-core VM).
+    *
+    * Round-17 note (measured, then kept as-is): a one-job
+    * limit(gate + 1).collect() was tried in place of the checkpoint +
+    * count + collect chain. CollectLimit executes INCREMENTALLY (1, 4,
+    * 16… partitions per job), so a small result spread over 32
+    * partitions costs ~4 jobs instead of 1, and skipping the checkpoint
+    * makes every probing job recompute the sparsify subtree —
+    * corpus-sized for the full-recompute families. Measured slower
+    * (fuzzy_clusters_incremental 0.99 → 1.05–1.24 s, dedup_all_verdict
+    * 0.38 → 0.43–0.48 s). */
+  private[graft] def components(rawEdges: DataFrame): DataFrame = {
+    val edges = forestEdges(rawEdges)
+    val edgeCount = edges.count()
+    if (edgeCount == 0L || edgeCount > SmallGraphEdges)
+      starContractLoop(edges, edgeCount)
+    else {
+      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val uf = new UnionFind
+      es.foreach { case (a, b) => uf.union(a, b) }
+      val assign = es.iterator
+        .flatMap { case (a, b) => Iterator(a, b) }.toSet.toSeq
+        .map((n: Long) => (n, uf.find(n)))
+      val session = edges.sparkSession
+      import session.implicits._
+      assign.toDF("doc", "comp")
     }
-    // Non-convergence must fail loudly: a component whose hub-chain
-    // diameter exceeds the round cap would otherwise emit PARTIAL labels
-    // (two docs of one cluster under different components) with no error.
-    // Star topology keeps diameters tiny, so hitting the cap means the
-    // input is shaped unlike anything this cap was sized for.
-    require(converged,
-      s"minLabelComponents: min-label propagation did not converge in $iters rounds; " +
-        "raise the round cap for this graph's diameter")
-    comp
   }
 
-  /** Connected components by ALTERNATING STAR CONTRACTION (Kiveris et
-    * al. 2014, "Connected Components in MapReduce and Beyond" — the
-    * two-phase large-star/small-star algorithm; also the engine behind
-    * GraphFrames' connectedComponents). Same contract as
-    * [[minLabelComponents]]: input (src, dst) with src < dst, output
-    * (doc, comp) with comp = the component's min node id, one row per
-    * node appearing in the edge list.
+  /** Edge count at or below which [[components]] resolves on the
+    * driver: 1M edges ≈ 16 MB collected. */
+  private val SmallGraphEdges = 1000000L
+
+  /** The edge frame both [[components]] paths start from:
+    * [[sparsifyForest]] first, so a clique-sized input never reaches
+    * the normalize-distinct exchange, the checkpoint or a fixpoint
+    * round; then src < dst, distinct, [[fixpointCheckpoint]]. */
+  private[graft] def forestEdges(rawEdges: DataFrame): DataFrame =
+    fixpointCheckpoint(sparsifyForest(rawEdges)
+      .select(least(col("src"), col("dst")).as("src"),
+        greatest(col("src"), col("dst")).as("dst"))
+      .filter(col("src") =!= col("dst"))
+      .distinct())
+
+  /** Lineage truncation for every fixpoint frame in this object (eager).
+    * Checkpoint — not persist: persist short-circuits EXECUTION but
+    * Catalyst still re-analyzes the whole accumulated lineage on every
+    * action, so per-round planning cost grows without bound (measured
+    * 2.5 s → 9.3 s by round 5 at sf0.1); the same reason GraphX
+    * checkpoints periodically.
     *
-    * WHY a second engine: on the DENSE detector pair graphs min-label
-    * propagation measured ≈15 rounds (τ=0.30 semantic graph) — its
-    * pointer jumping only telescopes label chains that happen to align
-    * with the graph (a pure path converges in O(log n) rounds via the
-    * jump, see CcProbe), but in dense cluster graphs new minima keep
-    * entering regions off the label-pointer paths and the round count
-    * reverts toward the edge diameter. Star contraction REWIRES the
-    * edge set itself each round — large-star hangs every larger
-    * neighbor of u directly under min(Γ(u) ∪ {u}), small-star
-    * compresses the smaller neighborhood the same way — giving an
-    * O(log² n) round bound that is TOPOLOGY-BLIND: no adversarial pair
-    * structure can stall it, which is the guarantee that matters when
-    * the graph's shape is data-dependent. Measured at the 10× probe:
-    * semantic_dedup_canonical 22.5 s → 5.6 s, fuzzy 23.8 s → 8.1 s
-    * under this engine; CcProbe records the counter-cases (pure
-    * chains, star forests) where min-label's lower per-round cost and
-    * aligned jumping win — hence dispatch by shape, not one winner.
-    *
-    * Per round: two phases × (one groupBy(u) + one same-key join —
-    * the join lands on the aggregation's own hash partitioning, so
-    * each phase is ONE real exchange of the edge list) + a distinct.
-    * Only the SMALL-star output is checkpointed (it is the next
-    * round's input, so it alone bounds lineage depth — truncated
-    * lineage keeps per-round planning O(1); reliable mode via
-    * spark.graft.checkpointDir for cluster runs); the large-star
-    * frame's two consumers shuffle on the same key and share one
-    * exchange, so materializing it bought nothing (A/B at the 10×
-    * probe: 5.4 s → 4.6 s without it). Both phases preserve the
-    * src < dst orientation (the emitted src is the neighborhood
-    * minimum), so no re-normalization between rounds.
-    *
-    * Fixpoint certificate: the round is a deterministic function of
-    * the edge SET, so output-set == input-set ⟹ every further round
-    * is the identity. At that point the graph is a star forest whose
-    * roots are component minima (small-star would rewire any node
-    * with two distinct roots, large-star any root chain), so the
-    * answer reads off the edges with no propagation table at all.
-    * Checked with a count + one anti-join per round — driver-side
-    * scalars only. GraphOpsSpec pins engine equality on paths,
-    * cycles, cliques, random graphs, and the real fixture pair
-    * graphs. */
+    * TWO durability modes, chosen by `spark.graft.checkpointDir`:
+    *  - unset (local default): localCheckpoint — blocks live on
+    *    executors only. Fastest, but one lost executor kills the
+    *    lineage-truncated job; fine in a single-JVM local run.
+    *  - set (cluster form): reliable df.checkpoint() files under that
+    *    directory on shared storage (HDFS / object store) — an executor
+    *    loss recomputes from the files instead of failing the fixpoint.
+    *    At 100 TB this is the only safe mode for a multi-round job
+    *    whose lineage has been truncated.
+    * The SparkContext's checkpoint dir is JVM-wide, and setCheckpointDir
+    * adds a random subdirectory, so the context is re-pointed whenever
+    * the key names a directory other than the current one's parent:
+    * files land where the session names NOW, never under a directory
+    * an earlier caller set (and may since have deleted). */
+  private def fixpointCheckpoint(df: DataFrame): DataFrame = {
+    val dir = df.sparkSession.conf.get("spark.graft.checkpointDir", "")
+    if (dir.isEmpty) df.localCheckpoint()
+    else {
+      val sc = df.sparkSession.sparkContext
+      val want = new org.apache.hadoop.fs.Path(dir)
+      val qualified = want.getFileSystem(sc.hadoopConfiguration).makeQualified(want)
+      if (!sc.getCheckpointDir.exists(
+          cur => new org.apache.hadoop.fs.Path(cur).getParent == qualified))
+        sc.setCheckpointDir(dir)
+      df.checkpoint()
+    }
+  }
+
+  /** Union-find over Long node ids whose root is always the set's
+    * MINIMUM id, so a root IS the component label [[components]]
+    * returns. Path compression in find; single-threaded — one per
+    * partition ([[sparsifyForest]]) or one on the driver. */
+  private final class UnionFind {
+    private val parent = new java.util.HashMap[Long, Long]()
+
+    def find(x: Long): Long = {
+      var root = x
+      var p = parent.getOrDefault(root, root)
+      while (p != root) { root = p; p = parent.getOrDefault(root, root) }
+      var cur = x
+      while (cur != root) {
+        val nxt = parent.getOrDefault(cur, cur)
+        parent.put(cur, root); cur = nxt
+      }
+      root
+    }
+
+    /** Merges the sets of a and b under the smaller root; false when
+      * they already were one set. */
+    def union(a: Long, b: Long): Boolean = {
+      val ra = find(a); val rb = find(b)
+      if (ra == rb) false
+      else {
+        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
+        true
+      }
+    }
+  }
+
   /** Partition-local spanning-forest contraction — the
-    * components-INVARIANT sparsifier in front of the fixpoint engines
+    * components-INVARIANT sparsifier in front of the fixpoint
     * (round-15). For any partitioning E = ∪ₚ Eₚ, the union of
     * per-partition spanning forests Fₚ ⊆ Eₚ has exactly the
     * components of E: a spanning forest preserves its own subset's
@@ -281,18 +244,7 @@ object GraphOps {
     // the ≤ nodes-per-partition survivors
     val norm = edges.select(col("src").cast("long"), col("dst").cast("long"))
     val forest = norm.queryExecution.toRdd.mapPartitions { it =>
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var root = x
-        var p = parent.getOrDefault(root, root)
-        while (p != root) { root = p; p = parent.getOrDefault(root, root) }
-        var cur = x
-        while (cur != root) {
-          val nxt = parent.getOrDefault(cur, cur)
-          parent.put(cur, root); cur = nxt
-        }
-        root
-      }
+      val uf = new UnionFind
       // lazy flatMap: an edge survives iff it merges two trees — the
       // surviving set IS a spanning forest of this partition's edges
       it.flatMap { row =>
@@ -304,12 +256,8 @@ object GraphOps {
           throw new IllegalStateException(
             "sparsifyForest: null edge endpoint (upstream contract violation)")
         val a = row.getLong(0); val b = row.getLong(1)
-        val ra = find(a); val rb = find(b)
-        if (ra == rb) Iterator.empty
-        else {
-          if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-          Iterator(org.apache.spark.sql.Row(a, b))
-        }
+        if (uf.union(a, b)) Iterator(org.apache.spark.sql.Row(a, b))
+        else Iterator.empty
       }
     }
     session.createDataFrame(forest,
@@ -320,85 +268,48 @@ object GraphOps {
           org.apache.spark.sql.types.LongType, nullable = false))))
   }
 
-  private[graft] def starContractComponents(rawEdges: DataFrame): DataFrame = {
-    val session = rawEdges.sparkSession
-    val ckptDir = session.conf.get("spark.graft.checkpointDir", "")
-    val reliable = ckptDir.nonEmpty
-    if (reliable && session.sparkContext.getCheckpointDir.isEmpty)
-      session.sparkContext.setCheckpointDir(ckptDir)
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-
-    // spanning-forest contraction FIRST (round-15): a near-dup CLIQUE
-    // emits c² verified edges (the real corpus's license-mirror
-    // cluster: 33.7M edges from 24k docs) and every one of them would
-    // otherwise ride the normalize-distinct exchange, the checkpoint,
-    // and each fixpoint round. The forest is components-identical by
-    // construction (see [[sparsifyForest]]) and at most nodes-per-
-    // partition rows, so the distinct + fixpoint below run on the
-    // contracted graph — usually straight into the small-graph path.
-    var edges = ckpt(sparsifyForest(rawEdges)
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct())
-    var edgeCount = edges.count()
-
-    // SMALL-GRAPH FAST PATH (the broadcast-threshold idiom): an edge
-    // set below the threshold pays more in per-round fixpoint overhead
-    // (4-6 jobs × shuffles × checkpoint per round) than the whole
-    // answer costs on the driver. The collect is BOUNDED by the
-    // measured count (≤ threshold × 16 bytes — default 1M edges ≈
-    // 16 MB, the same order Spark ships to EVERY executor under its
-    // broadcast threshold; here it lands once, on the driver), and the
-    // driver union-find keeps root = component MINIMUM, so the
-    // assignment is bit-identical to the fixpoint's (StarContractSpec
-    // pins equality on every graph family with the threshold forced
-    // both ways). Above the threshold the distributed fixpoint runs
-    // unchanged — the runtime-measured size gate, exactly like a
-    // broadcast-vs-shuffle join pick. Measured at the 10× probe
-    // (ClusterProbe, 906k-edge merge graph): componentsIncremental
-    // 7.2 → 2.3 s. `spark.graft.smallGraphEdges` = 0 disables.
-    val smallThreshold = session.conf
-      .get("spark.graft.smallGraphEdges", "1000000").toLong
-    // Round-17 note (measured, then kept as-is): a one-job
-    // limit(threshold+1).collect() gate was tried in place of this
-    // checkpoint + count + collect chain. CollectLimit executes
-    // INCREMENTALLY (1, 4, 16… partitions per job), so a small result
-    // spread over 32 partitions costs ~4 jobs instead of 1, and
-    // skipping the checkpoint makes every probing job recompute the
-    // sparsify subtree — corpus-sized for the full-recompute families.
-    // Measured slower (fuzzy_clusters_incremental 0.99 → 1.05–1.24 s,
-    // dedup_all_verdict 0.38 → 0.43–0.48 s); materialize-once is the
-    // right shape for every caller whose edge subtree is expensive.
-    if (edgeCount > 0 && edgeCount <= smallThreshold) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val parent = new java.util.HashMap[Long, Long](es.length * 2)
-      def find(x: Long): Long = {
-        var root = x
-        var p = parent.getOrDefault(root, root)
-        while (p != root) { root = p; p = parent.getOrDefault(root, root) }
-        var cur = x
-        while (cur != root) {
-          val nxt = parent.getOrDefault(cur, cur)
-          parent.put(cur, root); cur = nxt
-        }
-        root
-      }
-      es.foreach { case (a, b) =>
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) {
-          if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-        }
-      }
-      val assign = es.iterator
-        .flatMap { case (a, b) => Iterator(a, b) }.toSet.toSeq
-        .map((n: Long) => (n, find(n)))
-      val s2 = session
-      import s2.implicits._
-      return assign.toDF("doc", "comp")
-    }
-
+  /** The distributed path of [[components]]: ALTERNATING STAR
+    * CONTRACTION (Kiveris et al. 2014, "Connected Components in
+    * MapReduce and Beyond" — the two-phase large-star/small-star
+    * algorithm; also the engine behind GraphFrames'
+    * connectedComponents) over a [[forestEdges]] frame and its row
+    * count. Output contract as [[components]].
+    *
+    * Star contraction REWIRES the edge set itself each round —
+    * large-star hangs every larger neighbor of u directly under
+    * min(Γ(u) ∪ {u}), small-star compresses the smaller neighborhood
+    * the same way — giving an O(log² n) round bound that is
+    * TOPOLOGY-BLIND: no adversarial pair structure can stall it, which
+    * is the guarantee that matters when the graph's shape is
+    * data-dependent. (Min-label propagation measured ≈ 15 rounds on the
+    * τ=0.30 semantic pair graph; at the 10× probe this engine cut
+    * semantic_dedup_canonical 22.5 s → 5.6 s, fuzzy 23.8 s → 8.1 s.)
+    *
+    * Per round: two phases × (one groupBy(u) + one same-key join —
+    * the join lands on the aggregation's own hash partitioning, so
+    * each phase is ONE real exchange of the edge list) + a distinct.
+    * Only the SMALL-star output is checkpointed (it is the next
+    * round's input, so it alone bounds lineage depth); the large-star
+    * frame's two consumers shuffle on the same key and share one
+    * exchange, so materializing it bought nothing (A/B at the 10×
+    * probe: 5.4 s → 4.6 s without it). Both phases preserve the
+    * src < dst orientation (the emitted src is the neighborhood
+    * minimum), so no re-normalization between rounds.
+    *
+    * Fixpoint certificate: the round is a deterministic function of
+    * the edge SET, so output-set == input-set ⟹ every further round
+    * is the identity. At that point the graph is a star forest whose
+    * roots are component minima (small-star would rewire any node
+    * with two distinct roots, large-star any root chain), so the
+    * answer reads off the edges with no propagation table at all.
+    * Checked with a count + one anti-join per round — driver-side
+    * scalars only. StarContractSpec pins it against a union-find on
+    * paths, cycles, cliques, random graphs and the real fixture pair
+    * graphs. */
+  private[graft] def starContractLoop(forest: DataFrame,
+      forestCount: Long): DataFrame = {
+    var edges = forest
+    var edgeCount = forestCount
     var converged = edgeCount == 0L
     var iters = 0
     while (!converged && iters < 25) {
@@ -421,7 +332,7 @@ object GraphOps {
       // (m, u) — all with src = the minimum, orientation preserved.
       val dirs = large.select(col("dst").as("u"), col("src").as("v"))
       val smins = dirs.groupBy("u").agg(min("v").as("m"))
-      val small = ckpt(dirs.join(smins, Seq("u"))
+      val small = fixpointCheckpoint(dirs.join(smins, Seq("u"))
         .filter(col("v") =!= col("m"))
         .select(col("m").as("src"), col("v").as("dst"))
         .union(smins.select(col("m").as("src"), col("u").as("dst")))
@@ -434,39 +345,12 @@ object GraphOps {
       iters += 1
     }
     require(converged || edgeCount == 0L,
-      s"starContractComponents: no fixpoint in $iters rounds — " +
+      s"starContractLoop: no fixpoint in $iters rounds — " +
         "not expected for any graph (O(log² n) bound); raise the cap")
     edges.select(col("dst").as("doc"), col("src").as("comp"))
       .union(edges.select(col("src").as("doc"), col("src").as("comp")))
       .distinct()
   }
-
-  /** Engine dispatch for the components fixpoint, shared by every
-    * pair-emitting dedup pipeline. `spark.graft.ccEngine`:
-    *  - `minlabel` — [[minLabelComponents]] (delta-iteration
-    *    min-label propagation; O(edge diameter) rounds);
-    *  - `star` — [[starContractComponents]] (alternating star
-    *    contraction; O(log² n) rounds, diameter-independent);
-    *  - `auto` (default) — minlabel when the CALLER knows the edges
-    *    form a star forest (chunk-share groups: the direct init
-    *    resolves everything in one closed-form round and the loop only
-    *    confirms), star contraction for arbitrary pair graphs
-    *    (MinHash/SimHash/semantic pairs), whose diameter is
-    *    data-dependent and unbounded.
-    * Input contract: src ≠ dst per edge (every detector here emits
-    * a < b pairs by construction). A pure self-loop node is the one
-    * input the engines treat differently — min-label self-labels it,
-    * star contraction normalizes it away — so self-loops are out of
-    * contract rather than silently engine-dependent. */
-  private[graft] def components(rawEdges: DataFrame,
-      starShaped: Boolean = false): DataFrame =
-    rawEdges.sparkSession.conf.get("spark.graft.ccEngine", "auto") match {
-      case "minlabel" => minLabelComponents(rawEdges)
-      case "star" => starContractComponents(rawEdges)
-      case _ =>
-        if (starShaped) minLabelComponents(rawEdges)
-        else starContractComponents(rawEdges)
-    }
 
   /** The dedup pipeline's FINAL verdict — what actually gets dropped:
     * for every chunk-share cluster keep exactly one canonical member
@@ -536,7 +420,7 @@ object GraphOps {
     // connectivity — the checkpoint materializes the forest, node
     // set and merged labels identical by the sparsifier's invariant,
     // and callers feed raw (non-distinct) probe output.
-    val newEdges = sparsifyForest(newEdges0).localCheckpoint()
+    val newEdges = fixpointCheckpoint(sparsifyForest(newEdges0))
     val la = stored.select(col("doc").as("src"), col("comp").as("ca"))
     val lb = stored.select(col("doc").as("dst"), col("comp").as("cb"))
     val contracted = newEdges
@@ -547,7 +431,7 @@ object GraphOps {
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("src"),
         greatest(col("a"), col("b")).as("dst"))
-    val merged = starContractComponents(contracted)
+    val merged = components(contracted)
       .select(col("doc").as("old"), col("comp").as("nc"))
     val relabeled = stored
       .join(merged, stored("comp") === merged("old"), "left")
@@ -572,7 +456,7 @@ object GraphOps {
   private def storedClustersFrame(spark: SparkSession, sfDir: String): DataFrame = {
     val existing = chunkStarEdgesOf(
       Tables.documents(spark, sfDir).filter(col("doc_id") % 5 =!= 0))
-    components(existing, starShaped = true)
+    components(existing)
   }
 
   /** Chunk-fp → min-existing-doc DICTIONARY — the second stored
@@ -1000,7 +884,7 @@ object GraphOps {
   /** End-to-end FUZZY dedup — the whole near-dup pipeline as one
     * hash-checked query: poly-MinHash banded LSH pairs (est Jaccard ≥
     * 0.5) → connected components over the pair graph (shared
-    * [[minLabelComponents]] engine) → keep-the-longest survivor per
+    * [[components]] engine) → keep-the-longest survivor per
     * cluster. The exact-dedup twin is [[dedupCanonical]]; this one's
     * edges come from similarity estimation, not identical chunks, so
     * it is the pipeline an LLM-corpus curation job actually runs.
@@ -1025,7 +909,7 @@ object GraphOps {
 
   /** End-to-end SEMANTIC dedup verdict — embedding-space near-dups
     * ([[SimilarityOps.semanticPairs]]: within-cell integer-exact
-    * cos² ≥ τ²) → connected components (shared [[minLabelComponents]]
+    * cos² ≥ τ²) → connected components (shared [[components]]
     * fixpoint) → keep-the-longest survivor (shared
     * [[canonicalVerdict]], so the survivor rule can never fork from
     * the text pipelines). Universe = vectors that have a document row

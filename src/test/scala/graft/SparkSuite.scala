@@ -41,6 +41,13 @@ abstract class SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     d
   }
 
+  /** Regular files anywhere under `dir`. */
+  def regularFiles(dir: Path): Long = {
+    val walk = Files.walk(dir)
+    try walk.filter(Files.isRegularFile(_)).count()
+    finally walk.close()
+  }
+
   override protected def afterAll(): Unit =
     try super.afterAll()
     finally tempDirs.forEach(d =>

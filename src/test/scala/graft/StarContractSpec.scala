@@ -2,15 +2,12 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** The alternating star-contraction components engine must produce
-  * exactly the same (doc, comp) mapping as min-label propagation and
-  * as a driver-side union-find — on engineered topologies and on the
-  * real fixture pair graphs. Also pins the O(log²) round behavior: the
-  * 200-node path converges within the 25-round cap — topology-blind
-  * by construction (min-label also passes a pure path, but only
-  * because pointer jumping telescopes label chains ALIGNED with the
-  * graph; CcProbe records the measured trade per topology, and the
-  * dense detector graphs are where this engine wins 4×).
+/** Both paths of the components engine — the size-gated driver
+  * union-find behind `components` and the distributed star-contraction
+  * loop — must produce exactly the (doc, comp) mapping of a plain
+  * union-find reference, on engineered topologies and on the real
+  * fixture pair graphs. Also pins the O(log²) round behavior: the
+  * 200-node path converges within the loop's 25-round cap.
   */
 class StarContractSpec extends SparkSuite {
   import spark.implicits._
@@ -32,23 +29,24 @@ class StarContractSpec extends SparkSuite {
     parent.keys.map(v => v -> find(v)).toMap
   }
 
-  /** Run `body` with the small-graph fast path DISABLED, so these
-    * tests keep exercising the distributed fixpoint (every engineered
-    * graph here is far below the production threshold). */
-  private def distributed[T](body: => T): T = {
-    spark.conf.set("spark.graft.smallGraphEdges", "0")
-    try body finally spark.conf.unset("spark.graft.smallGraphEdges")
+  private def collectMap(comps: DataFrame): Map[Long, Long] =
+    comps.collect()
+      .map(r => r.getAs[Long]("doc") -> r.getAs[Long]("comp")).toMap
+
+  /** The distributed loop, called directly: every engineered graph
+    * here is far below the driver union-find gate of `components`. */
+  private def loop(edges: DataFrame): Map[Long, Long] = {
+    val forest = operators.GraphOps.forestEdges(edges)
+    collectMap(operators.GraphOps.starContractLoop(forest, forest.count()))
   }
 
-  private def run(pairs: Seq[(Long, Long)]): Map[Long, Long] = distributed {
-    operators.GraphOps.starContractComponents(edgesDf(pairs)).collect()
-      .map(r => r.getAs[Long]("doc") -> r.getAs[Long]("comp")).toMap
-  }
+  private def run(pairs: Seq[(Long, Long)]): Map[Long, Long] =
+    loop(edgesDf(pairs))
 
   test("small-graph fast path equals the distributed fixpoint on every family") {
-    // the driver union-find (edgeCount <= spark.graft.smallGraphEdges,
-    // default on) must be bit-identical to the fixpoint: same node
-    // set, same comp = component-min labels
+    // the driver union-find (edge count <= SmallGraphEdges) must be
+    // bit-identical to the fixpoint: same node set, same comp =
+    // component-min labels
     val path = (1L until 60L).map(i => (i, i + 1))
     val cycle = (1L until 40L).map(i => (i, i + 1)) :+ (1L, 40L)
     val clique = for { a <- 100L to 110L; b <- (a + 1) to 110L } yield (a, b)
@@ -57,8 +55,7 @@ class StarContractSpec extends SparkSuite {
       rng.nextInt(150).toLong + 1)).filter { case (a, b) => a != b }
     val messy = Seq((5L, 2L), (2L, 5L), (3L, 3L), (7L, 9L))
     for (g <- Seq(path, cycle, clique, random, messy)) {
-      val fast = operators.GraphOps.starContractComponents(edgesDf(g))
-        .collect().map(r => r.getAs[Long]("doc") -> r.getAs[Long]("comp")).toMap
+      val fast = collectMap(operators.GraphOps.components(edgesDf(g)))
       assert(fast == run(g), s"fast path diverged on ${g.take(3)}...")
     }
   }
@@ -104,46 +101,26 @@ class StarContractSpec extends SparkSuite {
       .select($"a_id".as("src"), $"b_id".as("dst"))
     val chunks = operators.GraphOps.chunkStarEdges(spark, sf)
     for (edges <- Seq(semantic, fuzzy, chunks)) {
-      val byStar = operators.GraphOps.starContractComponents(edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val byMinLabel = operators.GraphOps.minLabelComponents(edges)
-        .collect().map(r => r.getAs[Long]("doc") -> r.getAs[Long]("comp"))
-        .toMap
-      assert(byStar.nonEmpty && byStar == byMinLabel)
+      val expected = unionFind(edges.collect()
+        .map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst"))).toSeq)
+      assert(expected.nonEmpty, "fixture pair graph is empty")
+      assert(collectMap(operators.GraphOps.components(edges)) == expected)
+      assert(loop(edges) == expected)
     }
   }
 
   test("reliable-checkpoint mode (spark.graft.checkpointDir) yields the same answer") {
-    val dir = tempDir("star-ckpt").toString
+    val dir = tempDir("star-ckpt")
     val g = (1L until 40L).map(i => (i, i + 1)) ++ Seq((100L, 101L))
     val plain = run(g)
-    spark.conf.set("spark.graft.checkpointDir", dir)
+    spark.conf.set("spark.graft.checkpointDir", dir.toString)
     try {
-      // the context checkpoint dir is set once per JVM (an earlier
-      // reliable-mode test may own it) — count the DELTA of files in
-      // whichever dir actually serves the engine's df.checkpoint()
-      def fileCount(d: String): Long =
-        java.nio.file.Files.walk(
-            java.nio.file.Paths.get(d.stripPrefix("file:")))
-          .filter(p => java.nio.file.Files.isRegularFile(p)).count()
       val reliable = run(g)
-      val actualDir = spark.sparkContext.getCheckpointDir.get
       assert(reliable == plain)
-      assert(fileCount(actualDir) > 0,
-        "reliable mode left no checkpoint files on disk")
+      // the loop's checkpoints land under THIS spec's directory, even
+      // when an earlier caller pointed the JVM-wide context elsewhere
+      assert(regularFiles(dir) > 0,
+        s"reliable mode left no checkpoint files under $dir")
     } finally spark.conf.unset("spark.graft.checkpointDir")
-  }
-
-  test("ccEngine conf forces the engine on star-shaped dispatch") {
-    // dedupClusters dispatches starShaped=true → minlabel under auto;
-    // forcing `star` must not change the answer.
-    val auto = operators.GraphOps.dedupClusters(spark, sf).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.set("spark.graft.ccEngine", "star")
-    try {
-      val forced = operators.GraphOps.dedupClusters(spark, sf).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(forced == auto)
-    } finally spark.conf.unset("spark.graft.ccEngine")
   }
 }
