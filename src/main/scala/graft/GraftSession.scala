@@ -27,8 +27,31 @@ import org.apache.spark.sql.SparkSession
   * holds when a session built here creates the JVM's first `file:`
   * file system. `FileContext` is not cached and always follows the
   * conf.
+  *
+  * Spark's generated-class cache holds [[CodegenCacheEntries]] classes,
+  * not Spark's default 100. Spark keeps each class it compiles with
+  * Janino in one JVM-wide cache, keyed by the generated source; a class
+  * evicted from it is compiled again on its next use, and the fresh
+  * class runs interpreted until the JIT warms it up again. The engine's
+  * working set is larger than 100 classes: one Memo-cold pass of the
+  * seven-step curation pipeline generates ~160, and `Bench.warmUp` plus
+  * one sf0.1 headline pass 1,078 (11.2 s of Janino time). At 100
+  * entries each pass evicted every class before its next use and
+  * compiled all of them again. The cache stays bounded: every distinct
+  * integer literal or `limit(n)` adds 2 classes, so a long-lived
+  * serving JVM would otherwise grow it without limit. Caveat: Spark
+  * sizes the cache once per JVM, from the active session's conf when
+  * the JVM generates its first class, so the bound holds only if a
+  * session built here is active at that moment — the same kind of
+  * JVM-wide limit as the `FileSystem` binding above.
   */
 object GraftSession {
+
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`): ~4x the 1,078 classes of a
+    * warm-up plus headline pass, so the curation and headline working
+    * sets stay compiled, yet bounded (see the object's doc). */
+  val CodegenCacheEntries = 4096
 
   private lazy val pid = ProcessHandle.current().pid()
   private lazy val warehouse = s"/tmp/graft-warehouse-$pid"
@@ -76,6 +99,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", warehouse)
       .config("javax.jdo.option.ConnectionURL",

@@ -98,21 +98,25 @@ final class TaskHive private (val spark: SparkSession, val dir: String) {
     filtered.orderBy(desc("priority"), asc("id")).limit(limit)
   }
 
-  /** GetTaskStats (api.go:200-240): per-status counts. */
+  /** GetTaskStats (api.go:200-240): per-status counts. Like
+    * [[getWorkerTasks]], the small answer is sorted in one partition. */
   def getTaskStats(): DataFrame =
     tasks.groupBy("status")
-      .agg(count(lit(1)).as("cnt")).orderBy("status")
+      .agg(count(lit(1)).as("cnt")).coalesce(1).sortWithinPartitions("status")
 
   /** ListWorkers (api.go:243-277): worker dim + liveness flag. */
   def listWorkers(): DataFrame = activeWorkers.toDF()
 
-  /** GetWorkerTasks (api.go:280-310): one worker's in-flight tasks. */
+  /** GetWorkerTasks (api.go:280-310): one worker's in-flight tasks.
+    * The answer is small (a worker holds at most a few hundred tasks),
+    * so it is sorted inside one partition: a global `orderBy` would run
+    * a sampling job and a range shuffle for it. */
   def getWorkerTasks(workerId: String): DataFrame =
     assignedTasks
       .filter(col("status") === Tables.Processing &&
         col("worker_id") === workerId)
       .select("id", "priority", "create_time", "worker_id")
-      .orderBy("id")
+      .coalesce(1).sortWithinPartitions("id")
 
   /** SubmitTask (taskhive.go:248-251), batch form: normalize incoming
     * rows to the full task schema with the reference's defaults

@@ -328,8 +328,27 @@ case class Q8Pack(child: Expression) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
-      val self = ctx.addReferenceObj("q8pack", this, classOf[Q8Pack].getName)
-      s"${ev.value} = (byte[]) $self.nullSafeEval($a);"
+      val n = ctx.freshName("n")
+      val i = ctx.freshName("i")
+      val out = ctx.freshName("out")
+      val v = ctx.freshName("v")
+      s"""
+         |int $n = $a.numElements();
+         |byte[] $out = new byte[$n];
+         |for (int $i = 0; $i < $n; $i++) {
+         |  if ($a.isNullAt($i)) {
+         |    $out[$i] = (byte) -128;
+         |  } else {
+         |    long $v = $a.getLong($i);
+         |    if ($v < -127L || $v > 127L) {
+         |      throw new IllegalStateException("graft_q8pack: element " + $v +
+         |        " outside the q8 range [-127, 127]");
+         |    }
+         |    $out[$i] = (byte) $v;
+         |  }
+         |}
+         |${ev.value} = $out;
+       """.stripMargin
     })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

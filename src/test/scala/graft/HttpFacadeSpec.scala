@@ -79,7 +79,7 @@ class HttpFacadeSpec extends SparkSuite {
       assert(jobs("/api/tasks/no_such_task", 404) == 1)
       assert(jobs(s"/api/tasks/${ids(1)}") == 1)
       assert(jobs("/api/tasks?status=processing&limit=5") == 1)
-      assert(jobs(s"/api/workers/${workers(1)}") <= 3)
+      assert(jobs(s"/api/workers/${workers(1)}") == 1)
       assert(jobs("/api/stats") == 0)
       assert(jobs("/api/workers") == 0)
     } finally {

@@ -174,7 +174,7 @@ class TaskHiveSpec extends SparkSuite {
   test("the worker mapping equals Tables.assignedTasks' join, every task and worker") {
     // every task and worker through the frame at both scales; through
     // the API calls every worker and a dozen ids at sf0.001, two of each
-    // at sf0.01 (a worker's call is 3 Spark jobs)
+    // at sf0.01
     Seq(sf -> true, "/root/testdata/sf0.01" -> false).foreach { case (dir, all) =>
       val h = TaskHive(spark, dir)
       val joined = sources.Tables.assignedTasks(spark, dir)
