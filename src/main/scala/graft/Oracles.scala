@@ -389,7 +389,7 @@ object Oracles {
 
   /** WIDE 4-band × 16-plane lattice cells + band-OR pairs at the
     * production τ=0.95 point — mirrors Q8CellSigWide /
-    * SimilarityOps.semanticWidePairsTiled step for step: plane p
+    * SimilarityOps.SemanticWideBuckets.selfPairs step for step: plane p
     * (0..63) uses the narrow form's exact weight stream, band b's
     * subcell packs planes 16b..16b+15 MSB-first, candidates share ANY
     * band's subcell, the verify is the same integer cos² predicate,

@@ -490,11 +490,13 @@ object GraphOps {
       .write.mode("overwrite").parquet(s"$indexDir/chunk_clusters")
     chunkDictFrame(spark, sfDir)
       .write.mode("overwrite").parquet(s"$indexDir/chunk_dict")
-    storedFuzzyClustersFrame(spark, sfDir)
+    storedAssignment(SimilarityOps.minhashPolyPairsShared(spark, sfDir)
+        .filter(col("est_jaccard_milli") >= 500))
       .write.mode("overwrite").parquet(s"$indexDir/fuzzy_clusters")
     SimilarityOps.existBanded(spark, sfDir)
       .write.mode("overwrite").parquet(s"$indexDir/fuzzy_bands")
-    storedSemClustersFrame(spark, sfDir)
+    storedAssignment(SimilarityOps.semanticPairsShared(spark, sfDir,
+        SimilarityOps.SemTau95))
       .write.mode("overwrite").parquet(s"$indexDir/sem_clusters")
     SimilarityOps.existCells(spark, sfDir)
       .write.mode("overwrite").parquet(s"$indexDir/sem_cells")
@@ -502,7 +504,7 @@ object GraphOps {
     // 4×16-bit band cell index (one row per vector, cells array —
     // probes explode to the banded join shape at read) and its
     // existing-store component assignment
-    storedSemClustersWideFrame(spark, sfDir)
+    storedAssignment(SimilarityOps.semanticWidePairsShared(spark, sfDir))
       .write.mode("overwrite").parquet(s"$indexDir/sem_clusters_wide")
     SimilarityOps.existCellsWide(spark, sfDir)
       .write.mode("overwrite").parquet(s"$indexDir/sem_cells_wide")
@@ -580,15 +582,48 @@ object GraphOps {
       .orderBy("doc_id")
   }
 
-  /** EXISTING-store semantic cluster assignment — the embedding
-    * family's stored artifact (cells are per-vector signatures, so the
-    * existing-only pair graph is exactly the full pair set restricted
-    * to existing×existing). Persisted by [[buildClusterIndex]]. */
-  private def storedSemClustersFrame(spark: SparkSession, sfDir: String): DataFrame = {
-    val existPairs = SimilarityOps.semanticPairsShared(spark, sfDir, tauE2 = 95L)
-      .filter(col("a_id") % 5 =!= 0 && col("b_id") % 5 =!= 0)
-      .select(col("a_id").as("src"), col("b_id").as("dst"))
-    components(existPairs)
+  /** A banded family's EXISTING-store cluster assignment — the stored
+    * artifact its nightly merge starts from, persisted by
+    * [[buildClusterIndex]]: components of the family's pair frame at
+    * its production threshold, restricted to existing × existing
+    * (signatures are per row, so the existing-only pair graph is
+    * exactly the full pair set restricted). */
+  private def storedAssignment(pairs: DataFrame): DataFrame =
+    components(pairs.filter(col("a_id") % 5 =!= 0 && col("b_id") % 5 =!= 0)
+      .select(col("a_id").as("src"), col("b_id").as("dst")))
+
+  /** The NIGHTLY MERGE of a banded family against the artifacts
+    * [[buildClusterIndex]] stored (`clusters`, the existing-store
+    * assignment, and `index`, its signature rows): the day's `batch`
+    * signs O(batch) rows once — the lazy bounded cache
+    * ([[Memo.batchPersist]]; a blocking localCheckpoint measured
+    * slower at fixture scale) feeds the store probe and both sides of
+    * the within-batch probe — and its role edges at the family's
+    * production threshold merge into the stored assignment
+    * ([[componentsIncremental]]: batch-sized fixpoint, one relabel
+    * join, no corpus-sized pair stage at query time); the shared
+    * keep-longest verdict ends it. No edge distinct: the merge's
+    * spanning-forest sparsifier collapses multi-band duplicates and
+    * cliques in one narrow pass. A vector family's ids name their
+    * documents. */
+  private def nightlyMerge(spark: SparkSession, sfDir: String,
+      f: SimilarityOps.BucketFamily, clusters: String, index: String,
+      batch: DataFrame): DataFrame = {
+    val stored = spark.read.parquet(clusters).select(col("doc"), col("comp"))
+    val newB = f.band(Memo.batchPersist(spark, batch))
+    val shards = f.roleShards(spark, sfDir)
+    val edges = f.roleEdges(newB, f.band(spark.read.parquet(index)),
+        within = false, shards, f.tau)
+      .union(f.roleEdges(newB, newB, within = true, shards, f.tau))
+    val comp = componentsIncremental(stored, edges)
+      .select(col("doc").as("doc_id"), col("comp").as("component"))
+    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
+    val canon =
+      if (f.id == "doc_id") docs
+      else Tables.embeddings(spark, sfDir).select(col("vec_id"))
+        .join(docs, col("vec_id") === col("doc_id"))
+        .select(col("doc_id"), col("n_chars"))
+    canonicalVerdict(canon, comp).orderBy("doc_id")
   }
 
   /** SEMANTIC incremental cluster maintenance — the same merge engine
@@ -618,51 +653,14 @@ object GraphOps {
     semanticClustersIncrementalProbe(spark, sfDir, clusterIndexDir(spark, sfDir))
 
   /** The semantic nightly merge against a [[buildClusterIndex]]-
-    * persisted index: the batch signs O(batch) vectors, probes the
-    * stored `sem_cells` q8-cell index and itself, and the ≥τ edges
-    * merge into the stored `sem_clusters` assignment. */
+    * persisted index: the batch probes the stored `sem_cells` q8-cell
+    * index and itself, and the ≥τ edges merge into the stored
+    * `sem_clusters` assignment. */
   def semanticClustersIncrementalProbe(spark: SparkSession, sfDir: String,
-      indexDir: String): DataFrame = {
-    val stored = spark.read.parquet(s"$indexDir/sem_clusters")
-      .select(col("doc"), col("comp"))
-    val existC = spark.read.parquet(s"$indexDir/sem_cells")
-      .select(col("vec_id"), col("q8"), col("na2"), col("cell"))
-    // batch cells shared via the LAZY bounded cache (round-17, guide
-    // §2.4): the cross probe and both sides of the within-batch
-    // self-join consume this frame, so un-cached the batch
-    // quantize/sign scan runs three times per query. batchPersist (no
-    // barrier job — a blocking localCheckpoint here measured SLOWER
-    // than the triple evaluation at fixture scale) dedupes the three
-    // consumers inside the one action at any batch size.
-    val newC = Memo.batchPersist(spark,
+      indexDir: String): DataFrame =
+    nightlyMerge(spark, sfDir, SimilarityOps.SemanticCells,
+      s"$indexDir/sem_clusters", s"$indexDir/sem_cells",
       SimilarityOps.batchCells(spark, sfDir))
-    val cross = SimilarityOps.semanticPairsRole(newC, existC,
-      within = false, tauE2 = 95L)
-    val inner = SimilarityOps.semanticPairsRole(newC, newC, within = true,
-      tauE2 = 95L)
-    // no edge distinct: the merge's sparsifier collapses duplicates
-    val comp = componentsIncremental(stored, cross.union(inner))
-      .select(col("doc").as("doc_id"), col("comp").as("component"))
-    val docs = Tables.embeddings(spark, sfDir).select(col("vec_id"))
-      .join(Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("n_chars")),
-        col("vec_id") === col("doc_id"))
-      .select(col("doc_id"), col("n_chars"))
-    canonicalVerdict(docs, comp).orderBy("doc_id")
-  }
-
-  /** EXISTING-store WIDE semantic cluster assignment — cells are
-    * per-vector signatures, so the existing-only wide pair graph is
-    * the full wide pair set restricted to existing×existing (the same
-    * argument as the narrow form). Persisted by [[buildClusterIndex]]
-    * as `sem_clusters_wide`. */
-  private def storedSemClustersWideFrame(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val existPairs = SimilarityOps.semanticWidePairsShared(spark, sfDir)
-      .filter(col("a_id") % 5 =!= 0 && col("b_id") % 5 =!= 0)
-      .select(col("a_id").as("src"), col("b_id").as("dst"))
-    components(existPairs)
-  }
 
   /** WIDE-lattice semantic incremental cluster maintenance — the
     * round-13 verdict's structural fix routed through the nightly
@@ -708,46 +706,10 @@ object GraphOps {
     * probes the stored wide cell index and itself (band, subcell,
     * shard)-equi, and the ≥τ edges merge into the stored assignment. */
   def semanticClustersIncrementalWideProbe(spark: SparkSession, sfDir: String,
-      indexDir: String): DataFrame = {
-    val stored = spark.read.parquet(s"$indexDir/sem_clusters_wide")
-      .select(col("doc"), col("comp"))
-    val existB = SimilarityOps.explodeWideCells(
-      spark.read.parquet(s"$indexDir/sem_cells_wide")
-        .select(col("vec_id"), col("q8"), col("na2"), col("cells")))
-    // narrow pre-explode lazy cache (round-17, guide §2.4): one
-    // signing pass feeds the cross probe and both self-join sides
-    // (batchPersist, not a blocking checkpoint — see the narrow probe)
-    val newB = SimilarityOps.explodeWideCells(Memo.batchPersist(spark,
-      SimilarityOps.batchCellsWide(spark, sfDir)))
-    val cross = SimilarityOps.semanticPairsRoleWide(newB, existB,
-      within = false)
-    val inner = SimilarityOps.semanticPairsRoleWide(newB, newB,
-      within = true)
-    // no edge distinct: the merge's sparsifier collapses the
-    // multi-band duplicate edges this union used to exchange away
-    val comp = componentsIncremental(stored, cross.union(inner))
-      .select(col("doc").as("doc_id"), col("comp").as("component"))
-    val docs = Tables.embeddings(spark, sfDir).select(col("vec_id"))
-      .join(Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("n_chars")),
-        col("vec_id") === col("doc_id"))
-      .select(col("doc_id"), col("n_chars"))
-    canonicalVerdict(docs, comp).orderBy("doc_id")
-  }
-
-  /** EXISTING-corpus fuzzy cluster assignment (poly-MinHash pairs at
-    * est ≥ 0.5 among doc_id % 5 ≠ 0 docs — like the semantic form,
-    * band/bucket signatures are per-document, so the existing-only
-    * pair graph is the full pair set restricted). Persisted by
-    * [[buildClusterIndex]]. */
-  private def storedFuzzyClustersFrame(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val existPairs = SimilarityOps.minhashPolyPairsShared(spark, sfDir)
-      .filter(col("est_jaccard_milli") >= 500 &&
-        col("a_id") % 5 =!= 0 && col("b_id") % 5 =!= 0)
-      .select(col("a_id").as("src"), col("b_id").as("dst"))
-    components(existPairs)
-  }
+      indexDir: String): DataFrame =
+    nightlyMerge(spark, sfDir, SimilarityOps.SemanticWideBuckets,
+      s"$indexDir/sem_clusters_wide", s"$indexDir/sem_cells_wide",
+      SimilarityOps.batchCellsWide(spark, sfDir))
 
   /** FUZZY (MinHash) incremental cluster maintenance — completing the
     * trilogy with [[dedupClustersIncremental]] (chunks) and
@@ -762,41 +724,15 @@ object GraphOps {
     * index: the batch signs O(batch) documents, its bands probe the
     * stored `fuzzy_bands` signature index and the batch's own bands,
     * and the ≥0.5-estimate edges merge into the stored
-    * `fuzzy_clusters` assignment via [[componentsIncremental]] —
-    * batch-sized fixpoint, one relabel join, no corpus-sized signing
-    * at query time. */
+    * `fuzzy_clusters` assignment. The probe shards adaptively: 1 on
+    * flat bucket histograms (every synthetic fixture), up to
+    * RoleShards when one bucket dominates (the real corpus's mirror
+    * cluster). */
   def fuzzyClustersIncrementalProbe(spark: SparkSession, sfDir: String,
-      indexDir: String): DataFrame = {
-    val stored = spark.read.parquet(s"$indexDir/fuzzy_clusters")
-      .select(col("doc"), col("comp"))
-    val existB = spark.read.parquet(s"$indexDir/fuzzy_bands")
-      .select(col("doc_id"), col("sig"), col("band"), col("bucket"))
-    // batch bands shared via the lazy bounded cache (round-17, guide
-    // §2.4): the stored-index probe and both within-batch self-join
-    // sides consume this frame — un-cached, the batch text scan +
-    // poly-MinHash signing runs three times per query (batchPersist,
-    // not a blocking checkpoint — see semanticClustersIncrementalProbe)
-    val newB = Memo.batchPersist(spark,
+      indexDir: String): DataFrame =
+    nightlyMerge(spark, sfDir, SimilarityOps.PolyBuckets,
+      s"$indexDir/fuzzy_clusters", s"$indexDir/fuzzy_bands",
       SimilarityOps.batchBanded(spark, sfDir))
-    // raw (non-distinct) probe edges: componentsIncremental's
-    // spanning-forest sparsifier collapses multi-band duplicates AND
-    // cliques in one narrow pass, so the two pair-distinct exchanges
-    // and the union-distinct this chain used to pay (clique-sized on
-    // the real corpus) buy nothing here
-    // adaptive shard fanout (round-15 follow-up): 1 on flat bucket
-    // histograms — the probe join stays un-replicated on every
-    // synthetic fixture — up to RoleShards when one bucket dominates
-    // (the real corpus's mirror cluster)
-    val shards = SimilarityOps.polyRoleShardFanout(spark, sfDir)
-    val cross = SimilarityOps.minhashPolyPairsRoleEdges(newB, existB,
-      within = false, shards)
-    val inner = SimilarityOps.minhashPolyPairsRoleEdges(newB, newB,
-      within = true, shards)
-    val comp = componentsIncremental(stored, cross.union(inner))
-      .select(col("doc").as("doc_id"), col("comp").as("component"))
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
-    canonicalVerdict(docs, comp).orderBy("doc_id")
-  }
 
   /** The survivor PICK alone — (component, canon_id) by the
     * keep-the-longest rule, extracted so [[canonicalVerdict]] and the

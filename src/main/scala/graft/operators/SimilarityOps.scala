@@ -479,29 +479,185 @@ object SimilarityOps {
       (maxC.toDouble, math.max(1L, sumSq).toDouble)
     }
 
-  /** A family whose pair join is sized from [[bucketMoments]]: the
-    * population frame and bucket keys its fanout rule reads, memoized
-    * under `memo:<store>`. */
+  /** One banded dedup family — the spec the pair stages below are
+    * written against once.
+    *  - `frame`: a store's banded rows, bucketed on `keys` and sized by
+    *    [[bucketMoments]] under `memo:<store>`; `band` makes join rows
+    *    of the family's signature rows (the stored index form).
+    *  - `kernel`: the columns evaluated once per candidate; `verify`
+    *    keeps a candidate at a threshold and `evidence` is what a kept
+    *    pair reports. All three read the sides through their join
+    *    aliases; `tau` is the production threshold.
+    *  - Role probes: `crossGuard` is the extra condition of a batch ×
+    *    store probe; `shards` a fixed shard count, or None to size
+    *    them from the store's moments ([[roleShardCount]]) — a verdict
+    *    probe sees no store and then runs the plain join.
+    *
+    * Role mode is the batch-vs-index contract of incremental
+    * similarity search (Incremental Top-K Similarity Search, EDBT
+    * 2020): the batch is signed once and probes the stored index and
+    * itself — batch × index and batch × batch, never index × index. */
   private[graft] final case class BucketFamily(name: String, memo: String,
-      frame: (SparkSession, String) => DataFrame, keys: Seq[String]) {
+      frame: (SparkSession, String) => DataFrame, id: String, keys: Seq[String],
+      band: DataFrame => DataFrame, kernel: (String, String) => Seq[Column],
+      verify: (String, String, Long) => Column,
+      evidence: (String, String) => Seq[Column], tau: Long,
+      crossGuard: Column, shards: Option[Int]) {
     def moments(spark: SparkSession, sfDir: String): (Double, Double) =
       bucketMoments(spark, s"$memo:$sfDir", frame(spark, sfDir), keys: _*)
+
+    /** Self-join tile count for a store: [[stragglerTiles]]. */
+    def tiles(spark: SparkSession, sfDir: String): Int =
+      stragglerTiles(cores(spark), moments(spark, sfDir))
+
+    /** Role-probe shard count for a store. */
+    def roleShards(spark: SparkSession, sfDir: String): Int =
+      shards.getOrElse(roleShardCount(cores(spark), moments(spark, sfDir)))
+
+    /** SELF mode: the verified pairs of one banded frame, (a_id, b_id,
+      * evidence…) with a_id < b_id, over [[tiledSelfJoin]] — output is
+      * the same for any `tiles`. `tau = None` reports every candidate
+      * with its evidence. A family with several bands meets a pair once
+      * per shared band, so its pairs are made distinct, after the
+      * verify: rejected collisions never reach the exchange. */
+    def selfPairs(banded: DataFrame, tiles: Int, tau: Option[Long]): DataFrame = {
+      val joined = withKernel(tiledSelfJoin(banded, id, keys, tiles), "a", "b")
+      val pairs = tau.fold(joined)(t => joined.filter(verify("a", "b", t)))
+        .select(least(col(s"a.$id"), col(s"b.$id")).as("a_id") +:
+          greatest(col(s"a.$id"), col(s"b.$id")).as("b_id") +:
+          evidence("a", "b"): _*)
+      if (keys.contains("band")) pairs.distinct() else pairs
+    }
+
+    /** ROLE mode: qualifying (src, dst) edges, src < dst, between a
+      * batch-sized `batch` and `partner` (the store, or the batch itself
+      * when `within`: then each pair once, by id order), over
+      * [[shardedRoleJoin]]. A pair hit in several bands is emitted
+      * once per band: the components merge's sparsifier collapses
+      * duplicates without an exchange. */
+    def roleEdges(batch: DataFrame, partner: DataFrame, within: Boolean,
+        shards: Int, tau: Long): DataFrame = {
+      val guard = if (within) col(s"p.$id") < col(s"n.$id") else crossGuard
+      verified(shardedRoleJoin(batch, partner, id, keys, shards, guard), tau)
+        .select(least(col(s"n.$id"), col(s"p.$id")).as("src"),
+          greatest(col(s"n.$id"), col(s"p.$id")).as("dst"))
+    }
+
+    /** The first-wins incremental VERDICT per batch row (id, verdict,
+      * matched_id, kept) — the nightly dedup of `rows` against `index`
+      * (signature rows of the existing store):
+      *  - `dup_existing`: a verified store match; matched_id = the
+      *    smallest one (the stable already-canonical pointer);
+      *  - `dup_new`: else a verified EARLIER batch row (id order =
+      *    arrival order, the streaming stages' first-wins rule);
+      *  - `unique`: kept — including rows `signed` drops.
+      * `signed` (the batch's signature rows) is cached with
+      * [[Memo.batchPersist]]: the store probe and both sides of the
+      * batch probe read it. The smallest match is duplicate-insensitive,
+      * so no pair distinct is needed. */
+    def verdict(rows: DataFrame, signed: DataFrame, index: DataFrame,
+        tau: Long): DataFrame = {
+      val batch = band(Memo.batchPersist(rows.sparkSession, signed))
+      def firstMatch(partner: DataFrame, guard: Column, out: String): DataFrame =
+        verified(shardedRoleJoin(batch, partner, id, keys, shards.getOrElse(1), guard), tau)
+          .select(col(s"n.$id").as("new_id"), col(s"p.$id").as("partner_id"))
+          .groupBy("new_id").agg(min(col("partner_id")).as(out))
+      val em = firstMatch(band(index), lit(true), "exist_match")
+        .withColumnRenamed("new_id", "eid")
+      val nm = firstMatch(batch, col(s"p.$id") < col(s"n.$id"), "new_match")
+        .withColumnRenamed("new_id", "nid")
+      rows.select(col(id))
+        .join(em, col(id) === col("eid"), "left")
+        .join(nm, col(id) === col("nid"), "left")
+        .select(col(id),
+          when(col("exist_match").isNotNull, lit("dup_existing"))
+            .when(col("new_match").isNotNull, lit("dup_new"))
+            .otherwise(lit("unique")).as("verdict"),
+          coalesce(col("exist_match"), col("new_match")).as("matched_id"),
+          (col("exist_match").isNull && col("new_match").isNull).as("kept"))
+        .orderBy(id)
+    }
+
+    /** A role join's candidates that pass the verify at `tau`. */
+    private def verified(joined: DataFrame, tau: Long): DataFrame =
+      withKernel(joined, "n", "p").filter(verify("n", "p", tau))
+
+    private def withKernel(joined: DataFrame, a: String, b: String): DataFrame = {
+      graft.GraftExtensions.register(joined.sparkSession)
+      kernel(a, b) match {
+        case Seq() => joined
+        case k => joined.select(col("*") +: k: _*)
+      }
+    }
   }
 
-  private val SimhashBuckets = BucketFamily("simhash", "simhashTileFanout",
-    simhashBandedFrame, Seq("source", "band", "chunk"))
-  private val SimhashWideBuckets = BucketFamily("simhash_wide",
-    "simhashWideTileFanout", simhashWideBandedFrame, Seq("source", "band", "chunk"))
-  private val SemanticWideBuckets = BucketFamily("semantic_wide",
-    "semWideTileFanout", semanticWideBandedFrame, Seq("band", "subcell"))
-  private val PolyBuckets = BucketFamily("minhash_poly", "polyBucketMoments",
-    polyBandedBuckets, Seq("band", "bucket"))
-  private val EmbeddingLabels = BucketFamily("embedding_label",
-    "embTileFanout", (s, d) => Tables.embeddings(s, d), Seq("label"))
+  /** The q8 integer-cosine verify shared by both semantic families:
+    * dot > 0 and cos² ≥ τ², τ in centis, exact in integers; evidence
+    * (dot, floor'd cos²·10⁶). */
+  private def q8Dot(a: String, b: String): Seq[Column] =
+    Seq(call_function("graft_q8dotb", col(s"$a.q8b"), col(s"$b.q8b")).as("dot"))
+  private def q8Verify(a: String, b: String, tauE2: Long): Column =
+    col("dot") > 0 &&
+      col("dot") * col("dot") * 10000L >= lit(tauE2 * tauE2) * col(s"$a.na2") * col(s"$b.na2")
+  private def q8Evidence(a: String, b: String): Seq[Column] =
+    Seq(col("dot"), expr(s"dot * dot * 1000000 DIV ($a.na2 * $b.na2)").as("cos2_e6"))
 
-  /** Every [[BucketFamily]], in the order `Profile --skew` reports them. */
+  /** The chunk-popcount families: Hamming ≤ τ (an int, like
+    * bit_count's), evidence `hamming`. */
+  private def hammingVerify(a: String, b: String, radius: Long): Column =
+    col("hamming") <= radius.toInt
+  private def hammingEvidence(a: String, b: String): Seq[Column] = Seq(col("hamming"))
+
+  private[graft] val SimhashBuckets = BucketFamily("simhash", "simhashTileFanout",
+    simhashBandedFrame, "doc_id", Seq("source", "band", "chunk"), simhashBandedOf,
+    (a, b) => Seq(bit_count(col(s"$a.simhash").bitwiseXOR(col(s"$b.simhash")))
+      .as("hamming")),
+    hammingVerify, hammingEvidence, 8L, lit(true), None)
+  // native fused loop (graft.functions.ChunkHamming): the HOF form ran
+  // interpreted per enumerated candidate — the scale currency (hard
+  // 100×: ~116M candidates → 652k pairs)
+  private[graft] val SimhashWideBuckets = BucketFamily("simhash_wide",
+    "simhashWideTileFanout", simhashWideBandedFrame, "doc_id",
+    Seq("source", "band", "chunk"), simhashWideBandedOf,
+    (a, b) => Seq(call_function("graft_hamming_chunks",
+      col(s"$a.chunks"), col(s"$b.chunks")).as("hamming")),
+    hammingVerify, hammingEvidence, 8L, lit(true), None)
+  private[graft] val SemanticCells = BucketFamily("semantic", "semCellMoments",
+    (s, d) => packCells(q8CellFrame(s, d)), "vec_id", Seq("cell"), packCells,
+    q8Dot, q8Verify, (a, b) => col(s"$a.cell").as("cell") +: q8Evidence(a, b),
+    SemTau95, lit(true), Some(RoleShards))
+  private[graft] val SemanticWideBuckets = BucketFamily("semantic_wide",
+    "semWideTileFanout", semanticWideBandedFrame, "vec_id", Seq("band", "subcell"),
+    semanticWideBandedOf, q8Dot, q8Verify, q8Evidence, SemTau95, lit(true),
+    Some(RoleShards))
+  // est Jaccard per band-hit row (native graft_sigmatch, deterministic
+  // per pair), so a pair distinct exchanges 3 longs per row instead of
+  // ids + two signatures; a batch × store probe never pairs a row with
+  // itself
+  private[graft] val PolyBuckets = BucketFamily("minhash_poly", "polyBucketMoments",
+    polyBandedBuckets, "doc_id", Seq("band", "bucket"), identity,
+    (a, b) => Seq(round(lit(1000.0) * call_function("graft_sigmatch",
+      col(s"$a.sig"), col(s"$b.sig")) / PolyPerms).cast("long").as("est_jaccard_milli")),
+    (_, _, t) => col("est_jaccard_milli") >= t,
+    (_, _) => Seq(col("est_jaccard_milli")), 500L,
+    col("n.doc_id") =!= col("p.doc_id"), None)
+  // label-blocked all-pairs; its own tiled stage keeps the cosine in
+  // the join condition after the router's guard (embeddingDedupTiled)
+  private[graft] val EmbeddingLabels = BucketFamily("embedding_label",
+    "embTileFanout", (s, d) => Tables.embeddings(s, d), "vec_id", Seq("label"),
+    identity, (_, _) => Seq(),
+    (a, b, t) => embeddingCosE4(a, b) >= t,
+    (a, b) => Seq(col(s"$a.label").as("label"), embeddingCosE4(a, b).as("cos_e4")),
+    2500L, lit(true), None)
+
+  /** Every [[BucketFamily]] with a fanout rule, in the order
+    * `Profile --skew` reports them. */
   private[graft] val bucketFamilies: Seq[BucketFamily] = Seq(SimhashBuckets,
     SimhashWideBuckets, SemanticWideBuckets, PolyBuckets, EmbeddingLabels)
+
+  /** Every family whose pairs come from [[BucketFamily.selfPairs]]. */
+  private[graft] val pairFamilies: Seq[BucketFamily] = Seq(SimhashBuckets,
+    SimhashWideBuckets, SemanticCells, SemanticWideBuckets, PolyBuckets)
 
   /** STRAGGLER-BOUND tile count: tiling replicates every bucket
     * ~tiles/2× to split hot ones, so it only pays when the hottest
@@ -585,14 +741,19 @@ object SimilarityOps {
         call_function("graft_vnorm2", col("embedding")).as("n2"),
         slotOf("vec_id", B).as("g"))
       .localCheckpoint()
-    val cosE4 = round(call_function("graft_cosine_pre",
-      col("a.v"), col("b.v"), col("a.n2"), col("b.n2")) * 10000).cast("long")
-    tiledSelfJoin(e, "vec_id", Seq("label"), B, cosE4 >= 2500)
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("a_id"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("b_id"),
-        col("a.label").as("label"), cosE4.as("cos_e4"))
+    val f = EmbeddingLabels
+    tiledSelfJoin(e, f.id, f.keys, B, f.verify("a", "b", f.tau))
+      .select(least(col("a.vec_id"), col("b.vec_id")).as("a_id") +:
+        greatest(col("a.vec_id"), col("b.vec_id")).as("b_id") +:
+        f.evidence("a", "b"): _*)
       .orderBy("a_id", "b_id")
   }
+
+  /** The embedding pair's cosine, e4-rounded, from the precomputed
+    * squared norms. */
+  private def embeddingCosE4(a: String, b: String): Column =
+    round(call_function("graft_cosine_pre",
+      col(s"$a.v"), col(s"$b.v"), col(s"$a.n2"), col(s"$b.n2")) * 10000).cast("long")
 
   /** ADAPTIVE tile fanout for [[embeddingDedup]] (round-11 verdict
     * item 5): the quadratic is by documented design, but a FIXED B = 8
@@ -736,18 +897,21 @@ object SimilarityOps {
     // is 3 narrow columns per doc — at 100 TB it is ~24 B/doc of
     // block storage vs a second full corpus scan + signature map.
     // Within-invocation only: every timed run still computes
-    // signatures from parquet.
-    simhashPairsTiled(
+    // signatures from parquet. The 7-bit chunk universe is FIXED (9
+    // bands × ≤128 values × |sources|), so bucket population grows
+    // linearly with the corpus: hence the adaptive tiling.
+    hammingPairs(SimhashBuckets.selfPairs(
       simhashBandedOf(simhashes(spark, sfDir).localCheckpoint()),
-      tiles = simhashTileFanout(spark, sfDir))
+      SimhashBuckets.tiles(spark, sfDir), Some(SimhashBuckets.tau)))
 
-  /** ADAPTIVE tile fanout for [[simhashDedup]]'s bucket self-join —
-    * [[stragglerTiles]] over the (source, band, chunk) histogram. */
-  private def simhashTileFanout(spark: SparkSession, sfDir: String): Int =
-    stragglerTiles(cores(spark), SimhashBuckets.moments(spark, sfDir))
+  /** The simhash families' public shape: (a_id, b_id, hamming: int),
+    * ordered. */
+  private[graft] def hammingPairs(pairs: DataFrame): DataFrame =
+    pairs.select(col("a_id"), col("b_id"), col("hamming").cast("int").as("hamming"))
+      .orderBy("a_id", "b_id")
 
   /** The banded pigeonhole frame (doc_id, source, simhash, band,
-    * chunk) — the population [[simhashTileFanout]] and
+    * chunk) — the population the adaptive fanout and
     * `Profile --skew` measure. */
   private[graft] def simhashBandedFrame(spark: SparkSession,
       sfDir: String): DataFrame =
@@ -771,31 +935,6 @@ object SimilarityOps {
         posexplode(array(chunks: _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
   }
-
-  /** The candidate join + exact Hamming verify over a banded frame,
-    * tiled ([[tiledSelfJoin]]) inside each (source, band, chunk)
-    * bucket: the 7-bit chunk universe is FIXED (9 bands × ≤128 values
-    * × |sources|), so bucket population grows linearly with the corpus
-    * and an untiled self-join serializes each hot bucket's c²
-    * enumeration on one core. RewireEquivalenceSpec pins tiled ≡
-    * untiled at a FORCED tiles = 4 (the adaptive fanout computes
-    * tiles = 1 at fixture scale, so the dispatch-path test alone
-    * would degenerate to the untiled join — round-12 advice).
-    * `tiles = 1` is the untiled reference form. */
-  private[graft] def simhashPairsTiled(banded: DataFrame,
-      tiles: Int): DataFrame =
-    tiledSelfJoin(banded, "doc_id", Seq("source", "band", "chunk"), tiles)
-      // hamming per band-hit row (deterministic per pair) and the ≤8
-      // radius filter BEFORE the pair distinct: non-qualifying bucket
-      // collisions never reach the exchange
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("a_id"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("b_id"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
-          .as("hamming"))
-      .filter(col("hamming") <= 8)
-      .distinct()
-      .select(col("a_id"), col("b_id"), col("hamming").cast("int").as("hamming"))
-      .orderBy("a_id", "b_id")
 
   /** Per-doc 64-bit SimHash, computed by the native
     * `graft_simhash64` expression INSIDE the scan projection — zero
@@ -1518,20 +1657,10 @@ object SimilarityOps {
     // BYTE-PACKED signature (graft_q8pack, 1 B/element) instead of the
     // array<bigint>; the verify dot is graft_q8dotb — bit-identical
     // (Q8PackSpec).
-    val e = q8CellFrame(spark, sfDir)
-      .select(col("vec_id"),
-        call_function("graft_q8pack", col("q8")).as("q8b"),
-        col("na2"), col("cell"), slotOf("vec_id", SemTiles).as("g"))
+    val e = SemanticCells.frame(spark, sfDir)
+      .withColumn("g", slotOf("vec_id", SemTiles))
       .localCheckpoint()
-    tiledSelfJoin(e, "vec_id", Seq("cell"), SemTiles)
-      .withColumn("dot", call_function("graft_q8dotb", col("a.q8b"), col("b.q8b")))
-      .filter(col("dot") > 0 &&
-        col("dot") * col("dot") * 10000L >=
-          lit(tauE2 * tauE2) * col("a.na2") * col("b.na2"))
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("a_id"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("b_id"),
-        col("a.cell").as("cell"), col("dot"),
-        expr("dot * dot * 1000000 DIV (a.na2 * b.na2)").as("cos2_e6"))
+    SemanticCells.selfPairs(e, SemTiles, Some(tauE2))
   }
 
   /** MEMOIZED [[semanticPairs]] — the shared pair frame. Five queries
@@ -1554,8 +1683,8 @@ object SimilarityOps {
     semanticPairsShared(spark, sfDir).orderBy("a_id", "b_id")
 
   /** Number of partner-hash shards ([[shardedRoleJoin]]) a hot q8
-    * cell's candidate enumeration spreads across in
-    * [[semanticPairsRole]] / the incremental verdict probes. The cell
+    * cell's candidate enumeration spreads across in the semantic
+    * families' role probes and verdicts. The cell
     * space is a FIXED 256-key universe, so per-cell population grows
     * linearly with the corpus and a join keyed on `cell` alone lands
     * each hot cell's (batch × cell) candidate block in ONE task — the
@@ -1563,37 +1692,11 @@ object SimilarityOps {
     * (Σc² ×100 per ×10 data), ~10⁸ q8dot evaluations serialized on a
     * single core. The batch analog of
     * [[graft.streaming.SemanticStream]]'s hot-cell replication. */
-  private[graft] val RoleShards = 32
-
-  /** ROLE-pair form of the semantic pair stage — qualifying (src, dst)
-    * edges between a BATCH-sized cell frame and a partner frame (the
-    * incremental cluster-maintenance input): the cell join sharded by
-    * [[shardedRoleJoin]] + the same integer cos² ≥ τ² verify as
-    * [[semanticPairs]]. `within` = both frames are the same batch
-    * (id-ordered half to avoid doubles); otherwise roles are disjoint
-    * slices, no order guard. No triangular tiling: the batch side is
-    * batch-sized by contract, so sharding alone bounds task size
-    * (SemanticDedupSpec pins sharded ≡ unsharded). */
-  private[graft] def semanticPairsRole(newCells: DataFrame,
-      partnerCells: DataFrame, within: Boolean,
-      tauE2: Long = SemTauE2): DataFrame = {
-    val cond =
-      if (within) col("p.vec_id") < col("n.vec_id")
-      else lit(true)
-    // byte-packed signature through the shard replication (guide §2.3)
-    shardedRoleJoin(packCells(newCells), packCells(partnerCells), "vec_id",
-        Seq("cell"), RoleShards, cond)
-      .withColumn("dot", call_function("graft_q8dotb", col("n.q8b"), col("p.q8b")))
-      .filter(col("dot") > 0 &&
-        col("dot") * col("dot") * 10000L >=
-          lit(tauE2 * tauE2) * col("n.na2") * col("p.na2"))
-      .select(least(col("n.vec_id"), col("p.vec_id")).as("src"),
-        greatest(col("n.vec_id"), col("p.vec_id")).as("dst"))
-  }
+  private[graft] final val RoleShards = 32
 
   /** (vec_id, q8b, na2, cell) projection of a q8-cell frame — the
-    * packed join currency shared by the role probes and the
-    * incremental verdict. */
+    * narrow family's join rows ([[SemanticCells]]' `band`): the
+    * signature rides every shard replication byte-packed (guide §2.3). */
   private def packCells(cells: DataFrame): DataFrame = {
     graft.GraftExtensions.register(cells.sparkSession)
     cells.select(col("vec_id"),
@@ -1601,7 +1704,7 @@ object SimilarityOps {
       col("na2"), col("cell"))
   }
 
-  /** UNSHARDED reference form of [[semanticPairsRole]] — the
+  /** UNSHARDED reference form of [[SemanticCells]]' role edges — the
     * comparison pair SemanticDedupSpec pins the sharded plan against,
     * so [[shardedRoleJoin]]'s identity is ASSERTED, not argued. */
   private[graft] def semanticPairsRoleUnsharded(newCells: DataFrame,
@@ -1652,7 +1755,8 @@ object SimilarityOps {
   def semanticIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     val cells = q8CellFrame(spark, sfDir)
     val isNew = pmod(col("vec_id"), lit(5)) === 0
-    semanticIncrementalCells(cells.filter(isNew), cells.filter(!isNew))
+    val batch = cells.filter(isNew)
+    SemanticCells.verdict(batch, batch, cells.filter(!isNew), SemTauE2)
   }
 
   /** Persist the q8-cell vector index of the existing store — the
@@ -1669,52 +1773,10 @@ object SimilarityOps {
     * O(batch). Bit-identical verdicts to the in-plan derivation
     * (SemanticDedupSpec pins it). */
   def semanticIncrementalProbe(spark: SparkSession, newVecs: DataFrame,
-      indexDir: String): DataFrame =
-    semanticIncrementalCells(q8CellOf(spark, newVecs),
-      spark.read.parquet(indexDir)
-        .select(col("vec_id"), col("q8"), col("na2"), col("cell")))
-
-  /** The shared verdict core: both sides are (vec_id, q8, na2, cell)
-    * frames; candidates = same cell; verify = the exact integer cos²
-    * predicate; smallest qualifying partner per new vector. */
-  private def semanticIncrementalCells(newCells0: DataFrame,
-      existCells: DataFrame): DataFrame = {
-    // batch side signed ONCE and materialized (batch-sized) — its
-    // three consumers (existing-probe n side, both sides of the
-    // new×new probe) plus the final verdict join would otherwise each
-    // re-inline the store scan + Q8CellSig signing (round-10 audit: 5
-    // embeddings scans). Production signs the day's batch once and
-    // appends it to the stored vector index — this is that artifact.
-    // Lifecycle: Memo.batchPersist — bounded per-session FIFO, so
-    // successive nightly batches do not accumulate cache entries
-    // (round-11 advice).
-    val newCells = Memo.batchPersist(newCells0.sparkSession, newCells0)
-    val dotNP = call_function("graft_q8dotb", col("n.q8b"), col("p.q8b"))
-    // probes are sharded like semanticPairsRole (see RoleShards);
-    // signatures ride the shard replication byte-packed (guide §2.3)
-    def minMatch(partner: DataFrame, cond: Column, out: String): DataFrame =
-      shardedRoleJoin(packCells(newCells), packCells(partner), "vec_id",
-          Seq("cell"), RoleShards, cond)
-        .withColumn("dot", dotNP)
-        .filter(col("dot") > 0 &&
-          col("dot") * col("dot") * 10000L >=
-            lit(SemTauE2 * SemTauE2) * col("n.na2") * col("p.na2"))
-        .groupBy(col("n.vec_id").as("new_id"))
-        .agg(min(col("p.vec_id")).as(out))
-    val em = minMatch(existCells, lit(true), "exist_match")
-      .withColumnRenamed("new_id", "eid")
-    val nm = minMatch(newCells, col("p.vec_id") < col("n.vec_id"), "new_match")
-      .withColumnRenamed("new_id", "nid")
-    newCells.select(col("vec_id"))
-      .join(em, col("vec_id") === col("eid"), "left")
-      .join(nm, col("vec_id") === col("nid"), "left")
-      .select(col("vec_id"),
-        when(col("exist_match").isNotNull, lit("dup_existing"))
-          .when(col("new_match").isNotNull, lit("dup_new"))
-          .otherwise(lit("unique")).as("verdict"),
-        coalesce(col("exist_match"), col("new_match")).as("matched_id"),
-        (col("exist_match").isNull && col("new_match").isNull).as("kept"))
-      .orderBy("vec_id")
+      indexDir: String): DataFrame = {
+    val batch = q8CellOf(spark, newVecs)
+    SemanticCells.verdict(batch, batch, spark.read.parquet(indexDir)
+      .select(col("vec_id"), col("q8"), col("na2"), col("cell")), SemTauE2)
   }
 
   // ---------------------------------------------------------------
@@ -1734,7 +1796,7 @@ object SimilarityOps {
   // ---------------------------------------------------------------
 
   private[graft] val SemWideBands = 4
-  private[graft] val SemTau95 = 95L
+  private[graft] final val SemTau95 = 95L
 
   /** (vec_id, q8, na2, cells[4]) over any embedding frame — ONE native
     * codegen'd scan projection; index build and probe share it so the
@@ -1762,19 +1824,14 @@ object SimilarityOps {
     * ~8 B + offsets), because every downstream join replicates these
     * rows per (band × tile/shard) across an exchange; the verify dot
     * switches to graft_q8dotb, bit-identical (Q8PackSpec). */
-  private[graft] def semanticWideBandedOf(sigs: DataFrame): DataFrame =
+  private[graft] def semanticWideBandedOf(sigs: DataFrame): DataFrame = {
+    graft.GraftExtensions.register(sigs.sparkSession)
     sigs
       .select(col("vec_id"),
         call_function("graft_q8pack", col("q8")).as("q8b"), col("na2"),
         posexplode(col("cells")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "subcell")
-
-  /** Adaptive tile fanout for the wide banded self-join —
-    * [[stragglerTiles]] over the (band, subcell) histogram (width fixes
-    * DIFFUSE growth; hot clusters need tiling regardless — the
-    * measured round-13 lesson). */
-  private def semanticWideTileFanout(spark: SparkSession, sfDir: String): Int =
-    stragglerTiles(cores(spark), SemanticWideBuckets.moments(spark, sfDir))
+  }
 
   /** Wide semantic near-dup pairs — the narrow family's τ split,
     * mirrored: THIS query runs at the fixture's τ=0.30 stress point
@@ -1787,14 +1844,21 @@ object SimilarityOps {
     * hash-green against the DuckDB replay of the same plane
     * arithmetic. */
   def semanticDedupWide(spark: SparkSession, sfDir: String): DataFrame =
+    semanticWideStressPairs(spark, sfDir).orderBy("a_id", "b_id")
+
+  /** The wide pairs at the τ=0.30 stress point, unsorted. The adaptive
+    * tiling stays although the key space is wide: width fixes DIFFUSE
+    * growth, hot clusters need tiling regardless (the measured
+    * round-13 lesson). */
+  private def semanticWideStressPairs(spark: SparkSession,
+      sfDir: String): DataFrame =
     // localCheckpoint: one embeddings scan + quantize/sign pass feeds
     // both self-join sides (round-17, guide §2.4).
-    semanticWidePairsTiled(
+    SemanticWideBuckets.selfPairs(
       semanticWideBandedOf(
         q8CellWideOf(spark, Tables.embeddings(spark, sfDir))
           .localCheckpoint()),
-      semanticWideTileFanout(spark, sfDir), SemTauE2)
-      .orderBy("a_id", "b_id")
+      SemanticWideBuckets.tiles(spark, sfDir), Some(SemTauE2))
 
   /** BOUNDED stress reporting over the τ=0.30 WIDE pair frame
     * (round-16 verdict item 5): [[semanticDedupWide]] enumerates every
@@ -1811,11 +1875,7 @@ object SimilarityOps {
   def semanticDedupWideStats(spark: SparkSession, sfDir: String): DataFrame = {
     val docsSrc = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"))
-    val tagged = semanticWidePairsTiled(
-        semanticWideBandedOf(
-          q8CellWideOf(spark, Tables.embeddings(spark, sfDir))
-            .localCheckpoint()),
-        semanticWideTileFanout(spark, sfDir), SemTauE2)
+    val tagged = semanticWideStressPairs(spark, sfDir)
       .join(docsSrc.select(col("doc_id").as("a_id"),
         col("source").as("source_a")), Seq("a_id"))
       .join(docsSrc.select(col("doc_id").as("b_id"),
@@ -1840,54 +1900,12 @@ object SimilarityOps {
   private[graft] def semanticWidePairsShared(spark: SparkSession,
       sfDir: String): DataFrame =
     Memo.frame(spark, s"semWidePairs:$sfDir")(
-      semanticWidePairsTiled(semanticWideBandedFrame(spark, sfDir),
-        semanticWideTileFanout(spark, sfDir), SemTau95))
+      SemanticWideBuckets.selfPairs(semanticWideBandedFrame(spark, sfDir),
+        SemanticWideBuckets.tiles(spark, sfDir), Some(SemTau95)))
 
-  /** The tiled wide pair stage: [[tiledSelfJoin]] on (band, subcell)
-    * with the q8 integer-cosine verify; multi-band collisions collapse
-    * in the distinct (the wide SemanticDedupSpec pins tiled ≡ naive
-    * all-pairs). */
-  private[graft] def semanticWidePairsTiled(banded: DataFrame,
-      tiles: Int, tauE2: Long): DataFrame =
-    tiledSelfJoin(banded, "vec_id", Seq("band", "subcell"), tiles)
-      .withColumn("dot",
-        call_function("graft_q8dotb", col("a.q8b"), col("b.q8b")))
-      .filter(col("dot") > 0 &&
-        col("dot") * col("dot") * 10000L >=
-          lit(tauE2 * tauE2) * col("a.na2") * col("b.na2"))
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("a_id"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("b_id"),
-        col("dot"),
-        expr("dot * dot * 1000000 DIV (a.na2 * b.na2)").as("cos2_e6"))
-      .distinct()
-
-  /** ROLE-pair form over the WIDE banded frames — qualifying (src,
-    * dst) edges between a BATCH-sized banded frame and a partner
-    * banded frame: the (band, subcell) join sharded by
-    * [[shardedRoleJoin]] (same [[RoleShards]] as [[semanticPairsRole]])
-    * + the exact integer verify. Multi-band collisions emit duplicate
-    * edges — harmless: the components merge's spanning-forest
-    * sparsifier collapses them without an exchange (round-15; callers
-    * used to pay a pair-distinct here). */
-  private[graft] def semanticPairsRoleWide(newBanded: DataFrame,
-      partnerBanded: DataFrame, within: Boolean,
-      tauE2: Long = SemTau95): DataFrame = {
-    val cond =
-      if (within) col("p.vec_id") < col("n.vec_id")
-      else lit(true)
-    shardedRoleJoin(newBanded, partnerBanded, "vec_id",
-        Seq("band", "subcell"), RoleShards, cond)
-      .withColumn("dot", call_function("graft_q8dotb", col("n.q8b"), col("p.q8b")))
-      .filter(col("dot") > 0 &&
-        col("dot") * col("dot") * 10000L >=
-          lit(tauE2 * tauE2) * col("n.na2") * col("p.na2"))
-      .select(least(col("n.vec_id"), col("p.vec_id")).as("src"),
-        greatest(col("n.vec_id"), col("p.vec_id")).as("dst"))
-  }
-
-  /** UNSHARDED reference form of [[semanticPairsRoleWide]] — the
-    * comparison pair the wide spec pins the sharded plan against (the
-    * [[semanticPairsRoleUnsharded]] convention). */
+  /** UNSHARDED reference form of [[SemanticWideBuckets]]' role edges
+    * — the comparison pair the wide spec pins the sharded plan against
+    * (the [[semanticPairsRoleUnsharded]] convention). */
   private[graft] def semanticPairsRoleWideUnsharded(newBanded: DataFrame,
       partnerBanded: DataFrame, within: Boolean,
       tauE2: Long = SemTau95): DataFrame = {
@@ -1917,19 +1935,6 @@ object SimilarityOps {
   private[graft] def existCellsWide(spark: SparkSession, sfDir: String): DataFrame =
     q8CellWideOf(spark, Tables.embeddings(spark, sfDir))
       .filter(pmod(col("vec_id"), lit(5)) =!= 0)
-
-  /** Explode a (vec_id, q8, na2, cells) frame to the banded join shape
-    * — shared by the batch and stored-index sides of the wide probes.
-    * Emits the BYTE-PACKED signature (`q8b`) like
-    * [[semanticWideBandedOf]]: the probes replicate these rows per
-    * (band × shard) across an exchange (guide §2.3). */
-  private[graft] def explodeWideCells(cells: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(cells.sparkSession)
-    cells.select(col("vec_id"),
-        call_function("graft_q8pack", col("q8")).as("q8b"), col("na2"),
-        posexplode(col("cells")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "subcell")
-  }
 
   /** The bare (vec_id, q8) store projection — [[PcaOps]]' input; same
     * native signature expression as the whole q8 family. */
@@ -2046,66 +2051,22 @@ object SimilarityOps {
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
 
   /** [[polyBandedBuckets]] over ANY (doc_id, text) frame — the
-    * incremental maintenance path signs only its batch slice. */
+    * incremental maintenance path signs only its batch slice, and the
+    * signature index ([[buildSigIndex]]) persists exactly these rows:
+    * (doc_id, sig, band, bucket), one row per (doc, band). */
   private[graft] def polyBandedBucketsOf(spark: SparkSession,
       docs: DataFrame): DataFrame =
-    withPolySignature(spark, docs, col("text"))
-      .select(col("doc_id"), col("sig"))
+    withPolySignature(spark, docs.select(col("doc_id"), col("text")), col("text"))
       .select(col("doc_id"), col("sig"), posexplode(polyBandSlices))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
-  /** ROLE-pair form of the poly-MinHash pair stage — qualifying
-    * (src, dst) edges between a BATCH-sized banded frame and a partner
-    * banded frame at est Jaccard ≥ 0.5 (the fuzzy clusters' edge
-    * threshold): same band/bucket equi-join and signature-agreement
-    * estimate as [[minhashPolyPairs]]. `within` = both frames are the
-    * batch (id-ordered half); cross-role needs only a ≠ guard. The
-    * estimate is computed per band-hit row and filtered before the
-    * pair distinct — since round 10 the whole family works this way
-    * (native graft_sigmatch; see minhashDedup's note).
-    *
-    * PARTNER-HASH SHARDED ([[shardedRoleJoin]], round-15 — the
-    * verdict's one measured hot-cluster straggler): a join on (band,
-    * bucket) alone landed a hot band bucket — the round-14 real
-    * corpus's license/changelog mirror cluster — in ONE task
-    * (`fuzzy_clusters_incremental` 12.4 s on 24k real docs vs 3.7 s on
-    * 500k synthetic). PolyDedupSpec pins sharded ≡ unsharded. */
-  private[graft] def minhashPolyPairsRole(newBanded: DataFrame,
-      partnerBanded: DataFrame, within: Boolean,
-      shards: Int = RoleShards): DataFrame =
-    minhashPolyPairsRoleEdges(newBanded, partnerBanded, within, shards)
-      .distinct()
-
-  /** [[minhashPolyPairsRole]] WITHOUT the final pair distinct — the
-    * cluster-maintenance input form: multi-band duplicate edges are
-    * harmless to the components merge, whose spanning-forest
-    * sparsifier ([[graft.operators.GraphOps.sparsifyForest]])
-    * collapses them in the same narrow pass that contracts cliques —
-    * so the per-pair distinct would be a clique-sized exchange bought
-    * for nothing (round-15 real corpus: 33.7M verified edges from 24k
-    * docs). Pair-REPORTING surfaces keep the distinct form. `shards`
-    * comes from [[polyRoleShardFanout]]: 1 on flat histograms. */
-  private[graft] def minhashPolyPairsRoleEdges(newBanded: DataFrame,
-      partnerBanded: DataFrame, within: Boolean,
-      shards: Int = RoleShards): DataFrame = {
-    graft.GraftExtensions.register(newBanded.sparkSession)
-    val cond =
-      if (within) col("p.doc_id") < col("n.doc_id")
-      else col("n.doc_id") =!= col("p.doc_id")
-    val matches =
-      call_function("graft_sigmatch", col("n.sig"), col("p.sig"))
-    shardedRoleJoin(newBanded, partnerBanded, "doc_id",
-        Seq("band", "bucket"), shards, cond)
-      .withColumn("est",
-        round(lit(1000.0) * matches / PolyPerms).cast("long"))
-      .filter(col("est") >= 500)
-      .select(least(col("n.doc_id"), col("p.doc_id")).as("src"),
-        greatest(col("n.doc_id"), col("p.doc_id")).as("dst"))
-  }
-
-  /** UNSHARDED reference form of [[minhashPolyPairsRole]] — the
-    * comparison pair PolyDedupSpec pins the sharded plan against (the
-    * [[semanticPairsRoleUnsharded]] convention). */
+  /** UNSHARDED reference form of [[PolyBuckets]]' role edges, made
+    * distinct — the comparison pair PolyDedupSpec pins the sharded plan
+    * against (the [[semanticPairsRoleUnsharded]] convention). The role
+    * stage is sharded because a join on (band, bucket) alone landed a
+    * hot band bucket — the round-14 real corpus's license/changelog
+    * mirror cluster — in ONE task (`fuzzy_clusters_incremental` 12.4 s
+    * on 24k real docs vs 3.7 s on 500k synthetic). */
   private[graft] def minhashPolyPairsRoleUnsharded(newBanded: DataFrame,
       partnerBanded: DataFrame, within: Boolean): DataFrame = {
     graft.GraftExtensions.register(newBanded.sparkSession)
@@ -2139,53 +2100,15 @@ object SimilarityOps {
   /** The pair stream behind [[minhashDedupPoly]], unsorted — the
     * composition form: downstream consumers (fuzzy_dedup_canonical's
     * component build) join or aggregate these pairs, so a sort here
-    * would be dead work the optimizer may not always remove.
-    * Round-15: routed through the adaptive triangular tiling
-    * ([[minhashPolyPairsTiled]]) — the fuzzy self-join was the one
-    * pair family without straggler-bound tiles, and the real corpus's
-    * license-mirror cluster showed why that matters (see
-    * [[minhashPolyPairsRole]]'s sharding note). */
+    * would be dead work the optimizer may not always remove. Every band
+    * collision is reported with its estimate (no threshold): consumers
+    * filter at est ≥ 0.5. Round-15: routed through the adaptive
+    * triangular tiling — the fuzzy self-join was the one pair family
+    * without straggler-bound tiles, and the real corpus's
+    * license-mirror cluster showed why that matters. */
   private[graft] def minhashPolyPairs(spark: SparkSession, sfDir: String): DataFrame =
-    minhashPolyPairsTiled(polyBandedBuckets(spark, sfDir),
-      polyTileFanout(spark, sfDir))
-
-  /** Adaptive tile fanout for the poly-MinHash banded self-join —
-    * [[stragglerTiles]] over the (band, bucket) histogram: 1 when the
-    * histogram is flat (the sf fixtures: zero overhead on the healthy
-    * path), up to 16 when one bucket dominates (the real corpus's
-    * mirror cluster). */
-  private[graft] def polyTileFanout(spark: SparkSession, sfDir: String): Int =
-    stragglerTiles(cores(spark), polyBucketMoments(spark, sfDir))
-
-  /** Adaptive shard count for the fuzzy ROLE probes —
-    * [[roleShardCount]] over the same histogram, so one corpus signing
-    * buys both sizing decisions. */
-  private[graft] def polyRoleShardFanout(spark: SparkSession,
-      sfDir: String): Int =
-    roleShardCount(cores(spark), polyBucketMoments(spark, sfDir))
-
-  private def polyBucketMoments(spark: SparkSession,
-      sfDir: String): (Double, Double) =
-    PolyBuckets.moments(spark, sfDir)
-
-  /** The tiled poly-MinHash pair stage — [[tiledSelfJoin]] on (band,
-    * bucket) with the signature-agreement estimate; multi-band
-    * collisions collapse in the distinct. PolyDedupSpec pins tiled ≡
-    * untiled (forced fanouts). est per band-hit row, BEFORE the
-    * distinct (deterministic per pair — see minhashDedup's note): the
-    * distinct exchanges 3 longs per row instead of ids + two 32-long
-    * signatures. */
-  private[graft] def minhashPolyPairsTiled(banded: DataFrame,
-      tiles: Int): DataFrame = {
-    graft.GraftExtensions.register(banded.sparkSession)
-    val matches = call_function("graft_sigmatch", col("a.sig"), col("b.sig"))
-    tiledSelfJoin(banded, "doc_id", Seq("band", "bucket"), tiles)
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("a_id"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("b_id"),
-        round(lit(1000.0) * matches / PolyPerms).cast("long")
-          .as("est_jaccard_milli"))
-      .distinct()
-  }
+    PolyBuckets.selfPairs(polyBandedBuckets(spark, sfDir),
+      PolyBuckets.tiles(spark, sfDir), None)
 
   /** MEMOIZED [[minhashPolyPairs]] — the shared fuzzy pair frame.
     * Six queries compose this stage (`minhash_dedup_poly`,
@@ -2458,10 +2381,10 @@ object SimilarityOps {
     * build), so once-per-store verdicts track the store across
     * incremental growth instead of session lifetime. Round-16 (advice):
     * the round-15 form re-armed only the two dispatch detectors while
-    * the same-policy memos added beside them stayed stale —
-    * polyBucketMoments (the fuzzy role-probe shard fanout: a store
-    * growing a hot cluster mid-session kept shards=1 and reintroduced
-    * the straggler), the three adaptive tile fanouts, and the
+    * the same-policy memos added beside them stayed stale — every
+    * [[bucketFamilies]] moment (the fuzzy role-probe shard fanout: a
+    * store growing a hot cluster mid-session kept shards=1 and
+    * reintroduced the straggler; the adaptive tile fanouts) and the
     * vocabulary ANALYZE gates routing the LM broadcasts. The rule is
     * now categorical: a statistic DERIVED from the store dies at the
     * store's commit point; a built ARTIFACT (index dir, codebook,
@@ -2471,11 +2394,7 @@ object SimilarityOps {
       sfDir: String): Unit = {
     Memo.invalidateKey(spark, s"semanticWorkPerVec:$sfDir")
     Memo.invalidateKey(spark, s"simhashWorkPerDoc:$sfDir")
-    Memo.invalidateKey(spark, s"polyBucketMoments:$sfDir")
-    Memo.invalidateKey(spark, s"simhashTileFanout:$sfDir")
-    Memo.invalidateKey(spark, s"simhashWideTileFanout:$sfDir")
-    Memo.invalidateKey(spark, s"semWideTileFanout:$sfDir")
-    Memo.invalidateKey(spark, s"embTileFanout:$sfDir")
+    bucketFamilies.foreach(f => Memo.invalidateKey(spark, s"${f.memo}:$sfDir"))
     TextOps.invalidateVocabStats(spark, sfDir)
   }
 
@@ -2618,19 +2537,23 @@ object SimilarityOps {
     * 64-bit form's fixed universe saturates diffusely. HOT clusters
     * (genuine twin groups, closed-vocabulary profile collisions) are a
     * different failure mode that key-space width cannot fix — the
-    * same adaptive tiling as the narrow form handles those (see
-    * [[simhashWideTileFanout]] for the measurement that forced it).
-    * Hamming rides the carried chunk arrays (Σ bit_count per chunk —
-    * chunks partition the bits), so the plan is two banded scans and
-    * nothing else. Hash-green: the poly bit construction replays in
-    * DuckDB. */
+    * same adaptive tiling as the narrow form handles those. A first
+    * cut shipped the wide form untiled on the theory that the 2⁷×
+    * larger chunk universe IS the load-spreading; the plain 100×
+    * fixture's ~100-replica hamming-0 twin clusters (and a 31-word
+    * closed vocabulary's few distinct majority profiles) concentrate
+    * in hot buckets regardless, and the untiled join serialized their
+    * c² enumeration (the 100× probe pass went 220 → 695 s). Hash-green:
+    * the poly bit construction replays in DuckDB. */
   def simhashDedupWide(spark: SparkSession, sfDir: String): DataFrame =
     // localCheckpoint: one text scan + wide-signature pass for both
     // self-join sides (round-17, guide §2.4) — same reasoning as
     // [[simhashDedup]]; the frame is (id, source, 9 longs) per doc.
-    simhashWidePairsTiled(
+    // Hamming = Σ per-chunk popcount of the carried chunk arrays
+    // (chunks partition the bits).
+    hammingPairs(SimhashWideBuckets.selfPairs(
       simhashWideBandedOf(simhashWideSigs(spark, sfDir).localCheckpoint()),
-      simhashWideTileFanout(spark, sfDir))
+      SimhashWideBuckets.tiles(spark, sfDir), Some(SimhashWideBuckets.tau)))
 
   /** Per-doc wide signature frame (doc_id, source, chunks[9]). */
   private[graft] def simhashWideSigs(spark: SparkSession,
@@ -2650,43 +2573,6 @@ object SimilarityOps {
       .select(col("doc_id"), col("source"), col("chunks"),
         posexplode(col("chunks")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
-
-  /** Adaptive tile fanout for the WIDE banded self-join —
-    * [[stragglerTiles]] over the (source, band, chunk) histogram. A
-    * first cut shipped the wide form untiled on the theory that the 2⁷×
-    * larger chunk universe IS the load-spreading — the plain 100×
-    * fixture falsified that within the hour: its ~100-replica
-    * hamming-0 twin clusters (and a 31-word closed vocabulary's few
-    * distinct majority profiles) concentrate in hot buckets REGARDLESS
-    * of how wide the key space is, and the untiled join serialized
-    * their c² enumeration (measured: the 100× probe pass went 220 →
-    * 695 s). Wide universe fixes DIFFUSE population growth; tiling
-    * fixes HOT CLUSTERS — a corpus can need both, so both forms carry
-    * both. */
-  private def simhashWideTileFanout(spark: SparkSession, sfDir: String): Int =
-    stragglerTiles(cores(spark), SimhashWideBuckets.moments(spark, sfDir))
-
-  /** [[simhashPairsTiled]] for the wide 9-chunk signature: the same
-    * [[tiledSelfJoin]] (RewireEquivalenceSpec pins tiled ≡ untiled ≡
-    * naive all-pairs), hamming = Σ per-chunk popcount of the carried
-    * chunk arrays (chunks partition the bits). */
-  private[graft] def simhashWidePairsTiled(banded: DataFrame,
-      tiles: Int): DataFrame = {
-    // native fused loop (graft.functions.ChunkHamming): the HOF form
-    // ran interpreted per enumerated candidate — the scale currency
-    // (hard 100×: ~116M candidates → 652k pairs)
-    val ham = call_function("graft_hamming_chunks",
-      col("a.chunks"), col("b.chunks"))
-    tiledSelfJoin(banded, "doc_id", Seq("source", "band", "chunk"), tiles)
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("a_id"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("b_id"),
-        ham.as("hamming"))
-      .filter(col("hamming") <= 8)
-      .distinct()
-      .select(col("a_id"), col("b_id"),
-        col("hamming").cast("int").as("hamming"))
-      .orderBy("a_id", "b_id")
-  }
 
   /** The composed nested-aggregate HOF form of the poly simhash —
     * kept as the bit-identity comparison pair (PolyDedupSpec),
@@ -2750,7 +2636,7 @@ object SimilarityOps {
     * batch. At 100 TB the index is ~200 B/doc of longs — four narrow
     * rows per document, appended as docs are admitted. */
   def buildSigIndex(spark: SparkSession, docs: DataFrame, indexDir: String): Unit =
-    bandedSigs(spark, docs).write.mode("overwrite").parquet(indexDir)
+    polyBandedBucketsOf(spark, docs).write.mode("overwrite").parquet(indexDir)
 
   /** The catalog form of [[buildSigIndex]]: the band frame saved as a
     * managed table bucketed BY THE PROBE'S JOIN KEY (band, bucket), so
@@ -2763,7 +2649,7 @@ object SimilarityOps {
   def buildSigIndexBucketed(spark: SparkSession, docs: DataFrame,
       table: String = "graft.sig_index"): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${table.split('.').head}")
-    bandedSigs(spark, docs).write.mode("overwrite").format("parquet")
+    polyBandedBucketsOf(spark, docs).write.mode("overwrite").format("parquet")
       .bucketBy(32, "band", "bucket").sortBy("band", "bucket")
       .saveAsTable(table)
     // the per-mutator re-arm hook (round-16): the table name is the
@@ -2775,16 +2661,8 @@ object SimilarityOps {
     * table — identical verdicts, exchange-free index side. */
   def dedupIncrementalProbeBucketed(spark: SparkSession, newDocs: DataFrame,
       table: String = "graft.sig_index"): DataFrame =
-    dedupIncrementalBanded(spark, newDocs.select(col("doc_id"), col("text")),
-      spark.table(table).select(col("doc_id"), col("sig"), col("band"), col("bucket")))
-
-  /** (doc_id, sig, band, bucket) — one row per (doc, band): the
-    * signature from the shared native expression, exploded into the 4
-    * LSH band slices the probes join on. */
-  private def bandedSigs(spark: SparkSession, docs: DataFrame): DataFrame =
-    withPolySignature(spark, docs.select(col("doc_id"), col("text")), col("text"))
-      .select(col("doc_id"), col("sig"), posexplode(polyBandSlices))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+    fuzzyVerdict(spark, newDocs, spark.table(table)
+      .select(col("doc_id"), col("sig"), col("band"), col("bucket")))
 
   /** [[dedupIncremental]] against a [[buildSigIndex]]-persisted
     * existing-corpus index: signs ONLY `newDocs` — per-run signature
@@ -2798,8 +2676,7 @@ object SimilarityOps {
       indexDir: String): DataFrame = {
     val eband = spark.read.parquet(indexDir)
       .select(col("doc_id"), col("sig"), col("band"), col("bucket"))
-    dedupIncrementalBanded(spark,
-      newDocs.select(col("doc_id"), col("text")), eband)
+    fuzzyVerdict(spark, newDocs, eband)
   }
 
   /** [[dedupIncremental]] over any (doc_id, text) frame — the spec
@@ -2807,57 +2684,16 @@ object SimilarityOps {
   private[graft] def dedupIncrementalOf(spark: SparkSession,
       docs: DataFrame): DataFrame = {
     val isNew = pmod(col("doc_id"), lit(5)) === 0
-    dedupIncrementalBanded(spark, docs.filter(isNew),
-      bandedSigs(spark, docs.filter(!isNew)))
+    fuzzyVerdict(spark, docs.filter(isNew),
+      polyBandedBucketsOf(spark, docs.filter(!isNew)))
   }
 
-  /** Verdict computation over a pre-banded existing index — the shared
-    * core of [[dedupIncrementalOf]] (index derived in-plan, for the
-    * oracle) and [[dedupIncrementalProbe]] (index read from parquet). */
-  private def dedupIncrementalBanded(spark: SparkSession, newDocs: DataFrame,
+  /** [[PolyBuckets]]' verdict for `newDocs` against a banded index:
+    * the batch alone is signed. */
+  private def fuzzyVerdict(spark: SparkSession, newDocs: DataFrame,
       eband: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(spark)
-    // the BATCH side signed ONCE and materialized (batch-sized — 4
-    // narrow rows/doc): three consumers (existing-probe n side, both
-    // sides of the new×new probe) would otherwise each re-inline the
-    // batch scan + native signing (round-10 audit: 5 documents scans).
-    // Production does exactly this materialization — the day's batch
-    // is signed once and appended to the stored signature index.
-    // Lifecycle: Memo.batchPersist — bounded per-session FIFO, so
-    // successive nightly batches do not accumulate cache entries
-    // (round-11 advice).
-    val nband = Memo.batchPersist(spark, bandedSigs(spark, newDocs))
-    // est per band-hit row (native graft_sigmatch — deterministic per
-    // pair), filtered BEFORE any exchange; the min aggregation is
-    // duplicate-insensitive, so no pair distinct is needed at all and
-    // nothing wider than 3 longs ever shuffles
-    val est = round(lit(1000.0) * call_function("graft_sigmatch",
-      col("n.sig"), col("p.sig")) / PolyPerms).cast("long")
-    // bucket probe → est-Jaccard verify → smallest qualifying partner
-    // per new doc
-    def minMatch(partner: DataFrame, cond: Column, out: String): DataFrame =
-      nband.alias("n").join(partner.alias("p"),
-          col("n.band") === col("p.band") &&
-          col("n.bucket") === col("p.bucket") && cond)
-        .select(col("n.doc_id").as("new_id"), col("p.doc_id").as("partner_id"),
-          est.as("est"))
-        .filter(col("est") >= 500)
-        .groupBy("new_id")
-        .agg(min(col("partner_id")).as(out))
-    val em = minMatch(eband, lit(true), "exist_match")
-      .withColumnRenamed("new_id", "eid")
-    val nm = minMatch(nband, col("p.doc_id") < col("n.doc_id"), "new_match")
-      .withColumnRenamed("new_id", "nid")
-    newDocs.select(col("doc_id"))
-      .join(em, col("doc_id") === col("eid"), "left")
-      .join(nm, col("doc_id") === col("nid"), "left")
-      .select(col("doc_id"),
-        when(col("exist_match").isNotNull, lit("dup_existing"))
-          .when(col("new_match").isNotNull, lit("dup_new"))
-          .otherwise(lit("unique")).as("verdict"),
-        coalesce(col("exist_match"), col("new_match")).as("matched_id"),
-        (col("exist_match").isNull && col("new_match").isNull).as("kept"))
-      .orderBy("doc_id")
+    val rows = newDocs.select(col("doc_id"), col("text"))
+    PolyBuckets.verdict(rows, polyBandedBucketsOf(spark, rows), eband, PolyBuckets.tau)
   }
 
   // Shingling now uses the native TokenShingles expression via

@@ -67,6 +67,38 @@ class BandedJoinSpec extends SparkSuite {
       .queryExecution.analyzed.output.exists(_.name == "shard"))
   }
 
+  test("every banded family: self pairs tile-invariant, role edges equal the unsharded join") {
+    // Table-driven over SimilarityOps.pairFamilies, so a family added
+    // there is covered here by construction. Role mode probes a batch
+    // (id % 5 = 0) against the whole store, which also holds the batch:
+    // a row meets itself unless the family's cross guard forbids it.
+    val sf = "/root/testdata/sf0.01"
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    for (f <- SimilarityOps.pairFamilies) {
+      val banded = f.frame(spark, sf).localCheckpoint()
+      for (tau <- Seq(None, Some(f.tau))) {
+        val untiled = rows(f.selfPairs(banded, 1, tau))
+        assert(untiled.nonEmpty || tau.nonEmpty, s"${f.name}: no candidates")
+        assert(rows(f.selfPairs(banded, 4, tau)) == untiled, s"${f.name} self, tau = $tau")
+      }
+      val batch = banded.filter(col(f.id) % 5 === 0)
+      for ((partner, within) <- Seq((banded, false), (batch, true))) {
+        val guard =
+          if (within) col(s"p.${f.id}") < col(s"n.${f.id}") else f.crossGuard
+        val joined = batch.alias("n").join(partner.alias("p"),
+          f.keys.map(k => col(s"n.$k") === col(s"p.$k")).reduce(_ && _) && guard)
+        val reference = rows(joined.select(col("*") +: f.kernel("n", "p"): _*)
+          .filter(f.verify("n", "p", f.tau))
+          .select(least(col(s"n.${f.id}"), col(s"p.${f.id}")),
+            greatest(col(s"n.${f.id}"), col(s"p.${f.id}"))))
+        assert(reference.nonEmpty || within, s"${f.name}: no cross edges")
+        for (shards <- Seq(1, SimilarityOps.RoleShards))
+          assert(rows(f.roleEdges(batch, partner, within, shards, f.tau)) == reference,
+            s"${f.name} role, within = $within, shards = $shards")
+      }
+    }
+  }
+
   test("bucketMoments is (max c, Σc²) of the key histogram") {
     val (maxC, sumSq) = SimilarityOps.bucketMoments(spark,
       s"bandedJoinSpec:${java.util.UUID.randomUUID()}", frame, "k")

@@ -210,23 +210,25 @@ class PolyDedupSpec extends SparkSuite {
     val exist = SimilarityOps.existBanded(spark, sf)
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val poly = SimilarityOps.PolyBuckets
+    def role(partner: org.apache.spark.sql.DataFrame, within: Boolean,
+        shards: Int) =
+      poly.roleEdges(batch, partner, within, shards, poly.tau).distinct()
     assert(
-      key(SimilarityOps.minhashPolyPairsRole(batch, exist, within = false)) ==
+      key(role(exist, within = false, SimilarityOps.RoleShards)) ==
       key(SimilarityOps.minhashPolyPairsRoleUnsharded(batch, exist,
         within = false)), "cross edges differ")
-    val within = key(SimilarityOps.minhashPolyPairsRole(batch, batch,
-      within = true))
+    val within = key(role(batch, within = true, SimilarityOps.RoleShards))
     assert(within ==
       key(SimilarityOps.minhashPolyPairsRoleUnsharded(batch, batch,
         within = true)), "within edges differ")
     assert(within.forall { case (s, d) => s < d })
     // shards = 1 takes the un-replicated plain-key path (the adaptive
     // fanout's verdict on flat histograms) — same edge set again
-    assert(within == key(SimilarityOps.minhashPolyPairsRole(batch, batch,
-      within = true, shards = 1)), "shards=1 edges differ")
+    assert(within == key(role(batch, within = true, shards = 1)),
+      "shards=1 edges differ")
     assert(
-      key(SimilarityOps.minhashPolyPairsRole(batch, exist,
-        within = false, shards = 1)) ==
+      key(role(exist, within = false, shards = 1)) ==
       key(SimilarityOps.minhashPolyPairsRoleUnsharded(batch, exist,
         within = false)), "shards=1 cross edges differ")
   }
@@ -241,8 +243,9 @@ class PolyDedupSpec extends SparkSuite {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .sorted.toSeq
-    val untiled = key(SimilarityOps.minhashPolyPairsTiled(banded, 1))
-    val tiled = key(SimilarityOps.minhashPolyPairsTiled(banded, 4))
+    val poly = SimilarityOps.PolyBuckets
+    val untiled = key(poly.selfPairs(banded, 1, None))
+    val tiled = key(poly.selfPairs(banded, 4, None))
     assert(untiled.nonEmpty)
     assert(tiled == untiled)
     val adaptive = key(SimilarityOps.minhashPolyPairs(spark, sf))
@@ -250,7 +253,7 @@ class PolyDedupSpec extends SparkSuite {
     // ordering contract downstream consumers rely on
     assert(untiled.forall { case (a, b, _) => a < b })
     // the adaptive fanout is sane on the healthy fixture
-    val t = SimilarityOps.polyTileFanout(spark, sf)
+    val t = poly.tiles(spark, sf)
     assert(t >= 1 && t <= 16, s"fanout out of range: $t")
   }
 }

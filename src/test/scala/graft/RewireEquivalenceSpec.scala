@@ -114,7 +114,9 @@ class RewireEquivalenceSpec extends SparkSuite {
     assert(got == rows(naive))
     // and the wide tile routing, forced past the adaptive pick
     val wideBanded = SimilarityOps.simhashWideBandedFrame(spark, sf01)
-    val forced = rows(SimilarityOps.simhashWidePairsTiled(wideBanded, 4))
+    val wide = SimilarityOps.SimhashWideBuckets
+    val forced = rows(SimilarityOps.hammingPairs(
+      wide.selfPairs(wideBanded, 4, Some(wide.tau))))
     assert(forced == got)
   }
 
@@ -181,8 +183,9 @@ class RewireEquivalenceSpec extends SparkSuite {
     // (round-12 advice): every pair must meet in exactly one
     // (bucket, ti, tj) tile, so output is identical for any tiles.
     val banded = SimilarityOps.simhashBandedFrame(spark, sf01)
-    val untiled = rows(SimilarityOps.simhashPairsTiled(banded, tiles = 1))
-    val forced = rows(SimilarityOps.simhashPairsTiled(banded, tiles = 4))
+    val f = SimilarityOps.SimhashBuckets
+    val untiled = rows(SimilarityOps.hammingPairs(f.selfPairs(banded, 1, Some(f.tau))))
+    val forced = rows(SimilarityOps.hammingPairs(f.selfPairs(banded, 4, Some(f.tau))))
     assert(untiled.nonEmpty)
     assert(forced == untiled)
   }

@@ -177,17 +177,19 @@ class SemanticDedupSpec extends SparkSuite {
     // maximal pair mass) and the production τ = 0.95.
     val batch = SimilarityOps.batchCells(spark, sf)
     val exist = SimilarityOps.existCells(spark, sf)
+    val cells = SimilarityOps.SemanticCells
+    def role(partner: org.apache.spark.sql.DataFrame, within: Boolean, tau: Long) =
+      cells.roleEdges(cells.band(batch), cells.band(partner), within,
+        SimilarityOps.RoleShards, tau)
     for (tau <- Seq(30L, 95L)) {
       def key(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(
-        key(SimilarityOps.semanticPairsRole(batch, exist,
-          within = false, tauE2 = tau)) ==
+        key(role(exist, within = false, tau)) ==
         key(SimilarityOps.semanticPairsRoleUnsharded(batch, exist,
           within = false, tauE2 = tau)), s"cross pairs differ at tau=$tau")
       assert(
-        key(SimilarityOps.semanticPairsRole(batch, batch,
-          within = true, tauE2 = tau)) ==
+        key(role(batch, within = true, tau)) ==
         key(SimilarityOps.semanticPairsRoleUnsharded(batch, batch,
           within = true, tauE2 = tau)), s"within pairs differ at tau=$tau")
     }

@@ -120,22 +120,21 @@ class SemanticWideSpec extends SparkSuite {
   }
 
   test("wide role pair stage: sharded equals unsharded, batch and cross") {
-    val batch = SimilarityOps.explodeWideCells(
-      SimilarityOps.batchCellsWide(spark, sf))
-    val exist = SimilarityOps.explodeWideCells(
-      SimilarityOps.existCellsWide(spark, sf))
+    val wide = SimilarityOps.SemanticWideBuckets
+    val batch = wide.band(SimilarityOps.batchCellsWide(spark, sf))
+    val exist = wide.band(SimilarityOps.existCellsWide(spark, sf))
     for (tau <- Seq(30L, 95L)) {
       def key(df: org.apache.spark.sql.DataFrame) =
         df.distinct().collect()
           .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(
-        key(SimilarityOps.semanticPairsRoleWide(batch, exist,
-          within = false, tauE2 = tau)) ==
+        key(wide.roleEdges(batch, exist, within = false,
+          SimilarityOps.RoleShards, tau)) ==
         key(SimilarityOps.semanticPairsRoleWideUnsharded(batch, exist,
           within = false, tauE2 = tau)), s"cross pairs differ at tau=$tau")
       assert(
-        key(SimilarityOps.semanticPairsRoleWide(batch, batch,
-          within = true, tauE2 = tau)) ==
+        key(wide.roleEdges(batch, batch, within = true,
+          SimilarityOps.RoleShards, tau)) ==
         key(SimilarityOps.semanticPairsRoleWideUnsharded(batch, batch,
           within = true, tauE2 = tau)), s"within pairs differ at tau=$tau")
     }

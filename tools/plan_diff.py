@@ -16,6 +16,10 @@ whenever code moves; these are normalised first:
                         `/tmp/graft-warehouse-<pid>/` (managed tables)
   - lambda identities   `Ops$$$Lambda$6807/0x00007fc9bdceebe0@5724131e` ->
                         `Ops$$$Lambda<id>` (typed map functions)
+  - lambda variables    `lambda x_53#5` -> `lambda x_N#N` (a JVM-wide
+                        counter names each higher-order function's
+                        variable, so the name depends on how many were
+                        built before the query)
 
 Queries are matched by name (the file name minus its `_<tag>.txt`).
 
@@ -38,6 +42,7 @@ NORMALISE = [
     (re.compile(r"(/[A-Za-z][\w.-]*?)\d{8,}(?=/)"), r"\1<tmp>"),
     (re.compile(r"/graft-warehouse-\d+/"), "/graft-warehouse-<pid>/"),
     (re.compile(r"\$Lambda[\w$/]*@[0-9a-f]+"), "$Lambda<id>"),
+    (re.compile(r"\bx_\d+#"), "x_N#"),
 ]
 
 
