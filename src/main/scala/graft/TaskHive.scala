@@ -59,7 +59,7 @@ final class TaskHive private (val spark: SparkSession, val dir: String) {
   // Base relations of the read routes, resolved once per instance (see
   // "Snapshot lifetime"); each route derives a fresh DataFrame from them.
   private lazy val tasks = Tables.tasks(spark, dir)
-  private lazy val activeWorkers = operators.WorkerOps.activeWorkers(spark, dir)
+  private lazy val workers = operators.WorkerOps.workerLiveness(spark, dir)
 
   /** [[Tables.assignedTasks]] with the broadcast join replaced by a
     * lookup in the instance's worker mapping (see "Worker mapping"). */
@@ -104,8 +104,11 @@ final class TaskHive private (val spark: SparkSession, val dir: String) {
     tasks.groupBy("status")
       .agg(count(lit(1)).as("cnt")).coalesce(1).sortWithinPartitions("status")
 
-  /** ListWorkers (api.go:243-277): worker dim + liveness flag. */
-  def listWorkers(): DataFrame = activeWorkers.toDF()
+  /** ListWorkers (api.go:243-277): worker dim + liveness flag. The
+    * ~1 k worker rows are sorted inside one partition, as
+    * [[getWorkerTasks]] sorts its answer. */
+  def listWorkers(): DataFrame =
+    workers.coalesce(1).sortWithinPartitions("worker_id")
 
   /** GetWorkerTasks (api.go:280-310): one worker's in-flight tasks.
     * The answer is small (a worker holds at most a few hundred tasks),

@@ -1327,10 +1327,10 @@ object TextOps {
     // hash key, and with a broadcast model the stream never shuffles
     // at full width — the per-doc aggregation partial-aggregates
     // map-side and only (doc_id, sums) rows reach an exchange. Past
-    // [[lmMaxModelBroadcast]] the model flips back to the shuffle
+    // [[LmMaxModelBroadcast]] the model flips back to the shuffle
     // join — the plan that survives any vocabulary.
     val uniModel =
-      if (vocabApprox(spark, sfDir) <= lmMaxModelBroadcast(spark))
+      if (vocabApprox(spark, sfDir) <= LmMaxModelBroadcast)
         broadcast(scored)
       else scored
     toks.join(uniModel, Seq("tok"))
@@ -1390,7 +1390,7 @@ object TextOps {
     // as the scoring model: under the ceiling the c12 side never
     // re-shuffles (it is already partitioned by its own aggregation).
     val c1Side =
-      if (vocabApprox(spark, sfDir) <= lmMaxModelBroadcast(spark))
+      if (vocabApprox(spark, sfDir) <= LmMaxModelBroadcast)
         broadcast(c1)
       else c1
     val scored = c12.join(c1Side, Seq("h1"))
@@ -1404,7 +1404,7 @@ object TextOps {
     // bigram vocab): the model⋈stream shuffle join was 4.65 s of the
     // 5.57 s wall — the model agg is NOT the binding stage.
     val biModel =
-      if (bigramVocabApprox(spark, sfDir) <= lmMaxModelBroadcast(spark))
+      if (bigramVocabApprox(spark, sfDir) <= LmMaxModelBroadcast)
         broadcast(scored)
       else scored
     bi.join(biModel, Seq("h12"))
@@ -1417,13 +1417,10 @@ object TextOps {
 
   /** Broadcast ceiling for the LM scoring models (rows): under it
     * the scored model ships as a broadcast local relation (~16 B/row
-    * of longs — the 4M default is ~64 MB serialized, routine torrent
-    * size on a large cluster) and the scoring scan is exchange-free;
-    * over it the scorer keeps the hash-shuffle join. Conf-tunable so
-    * a cluster owner can match executor memory. */
-  private def lmMaxModelBroadcast(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.lm.maxModelBroadcast")
-      .map(_.toLong).getOrElse(4000000L)
+    * of longs — 4M rows is ~64 MB serialized, routine torrent size on
+    * a large cluster) and the scoring scan is exchange-free; over it
+    * the scorer keeps the hash-shuffle join. */
+  private val LmMaxModelBroadcast = 4000000L
 
   /** Memoized approx distinct-bigram count — [[vocabApprox]]'s idiom
     * one order up, gating the bigram model broadcast (the model is
@@ -1550,9 +1547,8 @@ object TextOps {
       sfDir: String): (DataFrame, DataFrame) = {
     val model = Memo.frame(spark, s"bigramModelAgg:$sfDir")(
       bigramModelAgg(spark, sfDir))
-    val k = bigramTopV(spark)
-    val (topvF, uniF) = topVScoreFrames(model, k)
-    (Memo.frame(spark, s"bigramTopVF:$k:$sfDir")(topvF),
+    val (topvF, uniF) = topVScoreFrames(model)
+    (Memo.frame(spark, s"bigramTopVF:$sfDir")(topvF),
       Memo.frame(spark, s"bigramUniF:$sfDir")(uniF))
   }
 
@@ -1571,13 +1567,12 @@ object TextOps {
   /** Scored (topv, uni) frames over an aggregated model frame. Scoring
     * math (round(1e6·ln…)) runs in Spark — the collected literal
     * tables and the shuffle-regime frames carry identical values. */
-  private def topVScoreFrames(model: DataFrame,
-      k: Int = BigramTopV): (DataFrame, DataFrame) = {
+  private def topVScoreFrames(model: DataFrame): (DataFrame, DataFrame) = {
     val c12 = model.filter(col("w2") =!= TopVEod)
       .select(col("w1"), col("w2"), col("cnt").as("c12"))
     val c1 = c12.groupBy("w1").agg(sum("c12").as("c1"))
     val topv = c12.orderBy(desc("c12"), asc("w1"), asc("w2"))
-      .limit(k)
+      .limit(BigramTopV)
       .join(c1, Seq("w1"))
       .select(col("w1"), col("w2"),
         round(lit(1e6) * log(col("c1").cast("double") / col("c12")))
@@ -1598,20 +1593,12 @@ object TextOps {
     * collision-free by construction for ANY corpus. */
   private val TopVEod = " "
 
+  /** The backoff-table size: 512 bigrams, sized so the cap BINDS on
+    * the fixture's 916-bigram closed vocabulary (the backoff arm must
+    * run under the oracle); measured round-16, it binds overwhelmingly
+    * on the 240k-doc real corpus (bigram vocabulary ≫ 512; the
+    * reported n_backoff column shows how often). */
   private val BigramTopV = 512
-
-  /** The backoff-table size as a DEPLOYMENT KNOB (round-16 verdict
-    * item 7): `spark.graft.topv.k`, default [[BigramTopV]] = 512 —
-    * sized so the cap BINDS on the fixture's 916-bigram closed
-    * vocabulary (the backoff arm must run under the oracle) and,
-    * measured round-16, binds overwhelmingly on the 240k-doc real
-    * corpus (bigram vocabulary ≫ 512; the reported n_backoff column
-    * is the ANALYZE a corpus owner reads to raise the knob toward
-    * [[topVMaxVocabBroadcast]]). The memoized scored frame is keyed
-    * by (k, store) so re-tuning mid-session rebuilds the table. */
-  private def bigramTopV(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.topv.k")
-      .map(_.toInt).getOrElse(BigramTopV)
 
   /** Chunk-level exact dedup (the C4/RefinedWeb line-dedup shape):
     * split each doc into 10-token chunks and find chunks repeated

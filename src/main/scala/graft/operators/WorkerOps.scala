@@ -19,11 +19,14 @@ object WorkerOps {
   /** P5: ListWorkers with is_active = heartbeat age < 30s
     * (tasks/api.go:243-277). */
   def activeWorkers(spark: SparkSession, sfDir: String): DataFrame =
+    workerLiveness(spark, sfDir).orderBy("worker_id")
+
+  /** [[activeWorkers]] unsorted. */
+  private[graft] def workerLiveness(spark: SparkSession, sfDir: String): DataFrame =
     Tables.workers(spark, sfDir)
       .select(col("worker_id"), col("task_count"), col("capacity"),
         (col("last_heartbeat") > asOfTs - expr("INTERVAL 30 SECONDS"))
           .as("is_active"))
-      .orderBy("worker_id")
 
   /** P3/P4: capacity-gated workers (tasks/dispatcher.go:536-544) with
     * the negative-count clamp. */

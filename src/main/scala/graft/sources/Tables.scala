@@ -37,23 +37,11 @@ object Tables {
     * would cap the distributed-rank stages at 32 tasks regardless of
     * fleet size. Default = the session's shuffle-partition setting
     * (what every implicit Exchange already uses; GraftSession wires it
-    * to the core count locally), overridable via
-    * `spark.graft.explicitParts` for cluster runs. Every caller's
-    * RESULT is partition-count-invariant (global ranks derived from
-    * range ordering / keyed writes), so the knob is pure performance. */
+    * to the core count locally; a cluster run sets it to its fleet).
+    * Every caller's RESULT is partition-count-invariant (global ranks
+    * derived from range ordering / keyed writes). */
   def explicitParts(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.getOption("spark.graft.explicitParts").map { raw =>
-      // validate here (round-17 advice): a malformed value otherwise
-      // surfaces as a bare NumberFormatException (or a failure deep
-      // inside repartition) with nothing naming the config key
-      val n = try raw.trim.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"spark.graft.explicitParts must be a positive integer, got '$raw'")
-      }
-      require(n > 0,
-        s"spark.graft.explicitParts must be a positive integer, got '$raw'")
-      n
-    }.getOrElse(spark.sessionState.conf.numShufflePartitions)
+    spark.sessionState.conf.numShufflePartitions
 
   /** Status enum values (reference common/constants.go:37-46). */
   val Pending = 0

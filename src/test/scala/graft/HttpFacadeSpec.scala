@@ -58,6 +58,20 @@ class HttpFacadeSpec extends SparkSuite {
     }
   }
 
+  test("a fresh facade's first GET /api/workers starts one Spark job") {
+    val hive = TaskHive(spark, sf)
+    val facade = new HttpFacade(hive)
+    val port = facade.start()
+    try
+      assert(jobsOfQueriesFrom(classOf[HttpFacade]) {
+        assert(get(port, "/api/workers")._1 == 200)
+      } == 1)
+    finally {
+      facade.stop()
+      hive.close()
+    }
+  }
+
   /** One warm request per route, then the Spark jobs each route starts
     * for a request with a value it has not seen yet. */
   test("a warm request starts at most one Spark job; stats and workers start none") {

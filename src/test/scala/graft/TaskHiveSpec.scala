@@ -132,6 +132,14 @@ class TaskHiveSpec extends SparkSuite {
     routes.foreach(r => assert(jobsStartedBy(r()) == 0))
   }
 
+  test("listWorkers sorts in one partition: one Spark job per call") {
+    val h = TaskHive(spark, sf)
+    val first = h.listWorkers().collect()
+    assert(jobsStartedBy(h.listWorkers().collect()) == 1)
+    // same rows, in the order of the active_workers oracle query
+    assert(first.toSeq == operators.WorkerOps.activeWorkers(spark, sf).collect().toSeq)
+  }
+
   test("combining two calls on one instance analyzes and counts as before") {
     val h = TaskHive(spark, sf)
     val a = h.listTasks(Some("processing"), 50)
