@@ -124,7 +124,10 @@ object GraphOps {
         .map((n: Long) => (n, uf.find(n)))
       val session = edges.sparkSession
       import session.implicits._
-      assign.toDF("doc", "comp")
+      // one partition, as small as the answer: a local relation is
+      // otherwise split over every core by its consumers' checkpoints
+      // and writers
+      assign.toDF("doc", "comp").coalesce(1)
     }
   }
 

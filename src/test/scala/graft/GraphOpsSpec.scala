@@ -106,6 +106,15 @@ class GraphOpsSpec extends SparkSuite {
       20L -> 20L, 21L -> 20L))
   }
 
+  test("the driver union-find answer is one partition") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
+    val comp = operators.GraphOps.components(edges)
+    assert(comp.rdd.getNumPartitions == 1)
+    assert(comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+  }
+
   test("dedup_clusters_incremental equals the full recompute on the fixture") {
     val full = operators.GraphOps.dedupClusters(spark, sf).collect()
       .map(_.toSeq).toSet
