@@ -2661,7 +2661,7 @@ object SimilarityOps {
     * table — identical verdicts, exchange-free index side. */
   def dedupIncrementalProbeBucketed(spark: SparkSession, newDocs: DataFrame,
       table: String = "graft.sig_index"): DataFrame =
-    fuzzyVerdict(spark, newDocs, spark.table(table)
+    polyVerdict(spark, newDocs, spark.table(table)
       .select(col("doc_id"), col("sig"), col("band"), col("bucket")))
 
   /** [[dedupIncremental]] against a [[buildSigIndex]]-persisted
@@ -2676,7 +2676,7 @@ object SimilarityOps {
       indexDir: String): DataFrame = {
     val eband = spark.read.parquet(indexDir)
       .select(col("doc_id"), col("sig"), col("band"), col("bucket"))
-    fuzzyVerdict(spark, newDocs, eband)
+    polyVerdict(spark, newDocs, eband)
   }
 
   /** [[dedupIncremental]] over any (doc_id, text) frame — the spec
@@ -2684,13 +2684,13 @@ object SimilarityOps {
   private[graft] def dedupIncrementalOf(spark: SparkSession,
       docs: DataFrame): DataFrame = {
     val isNew = pmod(col("doc_id"), lit(5)) === 0
-    fuzzyVerdict(spark, docs.filter(isNew),
+    polyVerdict(spark, docs.filter(isNew),
       polyBandedBucketsOf(spark, docs.filter(!isNew)))
   }
 
   /** [[PolyBuckets]]' verdict for `newDocs` against a banded index:
     * the batch alone is signed. */
-  private def fuzzyVerdict(spark: SparkSession, newDocs: DataFrame,
+  private def polyVerdict(spark: SparkSession, newDocs: DataFrame,
       eband: DataFrame): DataFrame = {
     val rows = newDocs.select(col("doc_id"), col("text"))
     PolyBuckets.verdict(rows, polyBandedBucketsOf(spark, rows), eband, PolyBuckets.tau)
