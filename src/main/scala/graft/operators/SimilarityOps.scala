@@ -1965,7 +1965,7 @@ object SimilarityOps {
 
   private val PolyPrime = 1000000007L
   private[graft] val PolyPerms = 16
-  private val PolyBands = 4 // 4 bands × 4 rows
+  private[graft] val PolyBands = 4 // 4 bands × 4 rows
   private val PolyRows = PolyPerms / PolyBands
 
   /** Per-word polynomial hashes: graft_rollfp applied inside the word

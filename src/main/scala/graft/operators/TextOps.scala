@@ -837,6 +837,43 @@ object TextOps {
       .orderBy("a_id", "b_id")
   }
 
+  /** The candidate stage both prefix regimes share: a self-join of
+    * the (doc_id, source, sz, p, tok_h) prefix rows, distinct pairs,
+    * then the exact verify. A regime only decides the canonical token
+    * order behind `p`, the token's 1-indexed position in the doc's
+    * canonically sorted shingle array.
+    *
+    * Never broadcast the exploded table (Catalyst's width estimate
+    * undershoots after the 8-byte hash projection); shuffle-hash
+    * co-locates on (source, tok_h). LENGTH FILTER (the PPJoin size
+    * bound): J ≥ 0.5 forces |A| and |B| within 2× of each other
+    * (I ≤ min, union ≥ max ⇒ J ≤ min/max), so size-incompatible
+    * bucket collisions drop BEFORE the distinct and the verify join.
+    * POSITION FILTER (PPJoin's second bound): a match at canonical
+    * positions (i, j) caps the overlap at 1 + min(|A|−i, |B|−j) —
+    * tokens before the match in either doc cannot be common to both
+    * beyond the matched one when it is the pair's FIRST common token,
+    * and every qualifying pair's first common token is inside both
+    * prefixes with exactly this bound ≥ α = ⌈(|A|+|B|)/3⌉
+    * (J ≥ 0.5 ⟺ overlap ≥ α). Integer form:
+    * |A|+|B| ≤ 3·(1 + min(|A|−i, |B|−j)). The theorem needs only a
+    * total order shared by both docs. Recall stays 1
+    * (RewireEquivalenceSpec pins both regimes ≡ all-pairs). */
+  private def prefixPairs(prefix: DataFrame, docs: DataFrame): DataFrame = {
+    val cand = prefix.alias("a").hint("shuffle_hash")
+      .join(prefix.alias("b"),
+        col("a.source") === col("b.source") &&
+        col("a.tok_h") === col("b.tok_h") &&
+        col("a.doc_id") < col("b.doc_id") &&
+        col("a.sz") <= col("b.sz") * 2 &&
+        col("b.sz") <= col("a.sz") * 2 &&
+        col("a.sz") + col("b.sz") <=
+          (least(col("a.sz") - col("a.p"), col("b.sz") - col("b.p")) + 1) * 3)
+      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+      .distinct()
+    jaccardVerify(cand, docs)
+  }
+
   /** Hash-canonical-order prefix filter (small-corpus path): the
     * prefix is a narrow `slice` of the hash-sorted shingle array —
     * candidate generation is the ONLY wide stage before the verify. */
@@ -852,35 +889,7 @@ object TextOps {
         posexplode(slice(col("sh"), lit(1), (col("sz") / 3).cast("int") + 1)))
       .select(col("doc_id"), col("source"), col("sz"),
         (col("pos") + 1).as("p"), col("col").as("tok_h"))
-    // never broadcast the exploded table (Catalyst's width estimate
-    // undershoots after the 8-byte hash projection); shuffle-hash
-    // co-locates on (source, tok_h). LENGTH FILTER (the PPJoin size
-    // bound): J ≥ 0.5 forces |A| and |B| within 2× of each other
-    // (I ≤ min, union ≥ max ⇒ J ≤ min/max), so size-incompatible
-    // bucket collisions drop BEFORE the distinct and the verify join.
-    // POSITION FILTER (PPJoin's second bound, round-9): a match at
-    // canonical positions (i, j) caps the overlap at
-    // 1 + min(|A|−i, |B|−j) — tokens before the match in either doc
-    // cannot be common to both beyond the matched one when it is the
-    // pair's FIRST common token, and every qualifying pair's first
-    // common token is inside both prefixes with exactly this bound ≥
-    // α = ⌈(|A|+|B|)/3⌉ (J ≥ 0.5 ⟺ overlap ≥ α). Integer form:
-    // |A|+|B| ≤ 3·(1 + min(|A|−i, |B|−j)). Recall stays 1
-    // (RewireEquivalenceSpec pins ≡ all-pairs); candidate pairs whose
-    // only matches sit deep in both suffix-heavy prefixes now drop
-    // BEFORE the distinct and the verify join.
-    val cand = prefix.alias("a").hint("shuffle_hash")
-      .join(prefix.alias("b"),
-        col("a.source") === col("b.source") &&
-        col("a.tok_h") === col("b.tok_h") &&
-        col("a.doc_id") < col("b.doc_id") &&
-        col("a.sz") <= col("b.sz") * 2 &&
-        col("b.sz") <= col("a.sz") * 2 &&
-        col("a.sz") + col("b.sz") <=
-          (least(col("a.sz") - col("a.p"), col("b.sz") - col("b.p")) + 1) * 3)
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
-    jaccardVerify(cand, docs)
+    prefixPairs(prefix, docs)
   }
 
   /** Document-frequency-canonical-order prefix filter (100 TB path):
@@ -923,28 +932,9 @@ object TextOps {
         Window.partitionBy("doc_id").orderBy(asc("tok_df"), asc("tok_h"))))
       .filter(col("p") <= (col("sz") / 3).cast("int") + 1)
       .select("doc_id", "source", "sz", "p", "tok_h")
-    // same PPJoin length filter as the hash path: J ≥ 0.5 ⇒ sizes
-    // within 2×, pruning bucket collisions before distinct + verify.
-    // POSITION FILTER (round 10 — the hash path gained it in round 9;
-    // the first-common-token theorem only needs a total order SHARED
-    // by both docs, and (tok_df asc, tok_h asc) within a source is
-    // one): a match at canonical positions (p_a, p_b) caps the
-    // overlap at 1 + min(|A|−p_a, |B|−p_b) when it is the pair's
-    // first common token, and every qualifying pair's first common
-    // token passes |A|+|B| ≤ 3·(1 + min(|A|−p_a, |B|−p_b)). Recall
-    // stays 1 (RewireEquivalenceSpec pins this path ≡ all-pairs too).
-    val cand = prefix.alias("a").hint("shuffle_hash")
-      .join(prefix.alias("b"),
-        col("a.source") === col("b.source") &&
-        col("a.tok_h") === col("b.tok_h") &&
-        col("a.doc_id") < col("b.doc_id") &&
-        col("a.sz") <= col("b.sz") * 2 &&
-        col("b.sz") <= col("a.sz") * 2 &&
-        col("a.sz") + col("b.sz") <=
-          (least(col("a.sz") - col("a.p"), col("b.sz") - col("b.p")) + 1) * 3)
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
-    jaccardVerify(cand, docs)
+    // (tok_df asc, tok_h asc) is one total order shared by every doc
+    // of a source, which is all prefixPairs' position filter needs.
+    prefixPairs(prefix, docs)
   }
 
   /** Corpus ANALYZE for the dedup family — the 3-shingle

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.SimilarityOps
 
@@ -23,11 +22,12 @@ import graft.operators.SimilarityOps
   *  - banding: explode into the SAME 4 band slices; the state key is
   *    (band, slice) — exactly the batch join predicate — rendered as a
   *    string for the group key;
-  *  - the self-join becomes per-bucket keyed state: each (band,
-  *    bucket) group holds the (doc_id, sig) of every prior member, an
-  *    arriving doc emits a pair per existing member and appends
-  *    itself. Within one micro-batch, arrivals are processed in
-  *    doc_id order so output is deterministic under replay.
+  *  - the self-join becomes per-bucket keyed state
+  *    ([[ProbeAppend.step]]): each (band, bucket) group holds the
+  *    (doc_id, sig) of every prior member, an arriving doc emits a pair
+  *    per existing member and appends itself. Within one micro-batch,
+  *    arrivals are processed in doc_id order so output is
+  *    deterministic under replay, and a re-delivered doc_id is skipped.
   *
   * Scale design: state is partitioned by bucket key (narrow hub
   *  groups: a bucket's membership is the LSH collision set, small by
@@ -43,35 +43,18 @@ import graft.operators.SimilarityOps
   */
 object NearDupStream {
 
-  case class DocSig(docId: Long, sig: Seq[Long])
+  /** A bucket member as the pair function reads it. */
+  private[graft] sealed trait Signed { def docId: Long; def sig: Seq[Long] }
+  case class DocSig(docId: Long, sig: Seq[Long]) extends Signed
+  case class TimedDocSig(docId: Long, sig: Seq[Long], tsMillis: Long) extends Signed
   case class NearDupPair(a_id: Long, b_id: Long, est_jaccard_milli: Long)
 
-  private def estMilli(sa: Seq[Long], sb: Seq[Long]): Long =
-    math.round(1000.0 *
-      sa.iterator.zip(sb.iterator).count { case (x, y) => x == y } /
-      SimilarityOps.PolyPerms)
-
-  /** Per-bucket state update: emit a pair for every (prior member,
-    * arrival); process arrivals in doc_id order; append arrivals to
-    * state. Pure function of (sorted arrivals, prior state) — replay
-    * of a micro-batch reproduces the same output, which is what makes
-    * the append sink exactly-once under checkpoint recovery. */
-  private[graft] def bucketStep(arrivals: Iterator[DocSig],
-      state: GroupState[List[DocSig]]): Iterator[NearDupPair] = {
-    var members = state.getOption.getOrElse(Nil)
-    val out = List.newBuilder[NearDupPair]
-    arrivals.toSeq.sortBy(_.docId).foreach { d =>
-      members.foreach { m =>
-        if (m.docId != d.docId) {
-          val (a, b) = if (m.docId < d.docId) (m, d) else (d, m)
-          out += NearDupPair(a.docId, b.docId, estMilli(a.sig, b.sig))
-        }
-      }
-      members ::= d
-    }
-    state.update(members)
-    out.result().iterator
-  }
+  /** The family's pair function: every two members of a bucket are a
+    * candidate, reported with their estimated Jaccard. */
+  private[graft] def pairOf(a: Signed, b: Signed): Option[NearDupPair] =
+    Some(NearDupPair(a.docId, b.docId, math.round(1000.0 *
+      a.sig.iterator.zip(b.sig.iterator).count { case (x, y) => x == y } /
+      SimilarityOps.PolyPerms)))
 
   /** The streaming transform. `docs` is a streaming frame with
     * (doc_id, text); output is the append-mode stream of
@@ -80,49 +63,8 @@ object NearDupStream {
     * pairs surfacing as soon as their second member arrives. */
   def nearDupPairs(spark: SparkSession, docs: DataFrame): Dataset[NearDupPair] = {
     import spark.implicits._
-    banded(spark, docs)
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[(String, DocSig)],
-         state: GroupState[List[DocSig]]) =>
-          bucketStep(rows.map(_._2), state)
-      }
-  }
-
-  case class TimedDocSig(docId: Long, sig: Seq[Long], tsMillis: Long)
-
-  /** Bounded bucket step: members older than the watermark are
-    * evicted before matching, and an idle bucket's state is removed
-    * by event-time timeout once the watermark passes its newest
-    * member. Pure function of (arrivals, state, watermark). */
-  private[graft] def bucketStepBounded(horizonMs: Long,
-      arrivals: Iterator[TimedDocSig],
-      state: GroupState[List[TimedDocSig]]): Iterator[NearDupPair] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    val wm = state.getCurrentWatermarkMs()
-    var members = state.getOption.getOrElse(Nil).filter(_.tsMillis >= wm)
-    val out = List.newBuilder[NearDupPair]
-    arrivals.toSeq.sortBy(_.docId).foreach { d =>
-      members.foreach { m =>
-        if (m.docId != d.docId) {
-          val (a, b) = if (m.docId < d.docId) (m, d) else (d, m)
-          out += NearDupPair(a.docId, b.docId, estMilli(a.sig, b.sig))
-        }
-      }
-      members ::= d
-    }
-    if (members.isEmpty) state.remove()
-    else {
-      state.update(members)
-      // wake once every member is past-horizon so the bucket frees
-      // itself even if nothing ever arrives again; clamp above the
-      // watermark because a fully-late arrival batch could otherwise
-      // compute a wake time Spark rejects as already passed
-      state.setTimeoutTimestamp(
-        math.max(members.map(_.tsMillis).max + horizonMs, wm + 1))
-    }
-    out.result().iterator
+    ProbeAppend.pairs(bucketRows(spark, docs.select(col("doc_id"), col("text"))),
+      bucketKey, doc)(_.docId, None)(pairOf)
   }
 
   /** The state-BOUNDED production form of [[nearDupPairs]]: identical
@@ -136,36 +78,9 @@ object NearDupStream {
   def nearDupPairsWithinWatermark(spark: SparkSession, docs: DataFrame,
       horizon: String = "1 hour"): Dataset[NearDupPair] = {
     import spark.implicits._
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(org.apache.spark.unsafe.types.UTF8String
-        .fromString(horizon))
-    val horizonMs = iv.months * 2592000000L + iv.days * 86400000L +
-      iv.microseconds / 1000L
-    // The watermarked ingest_ts attribute must reach the grouped state
-    // operator UNTRANSFORMED: event-time timeout validation looks for
-    // the watermark metadata on a child column, and that metadata
-    // survives plain projections but not typed maps or expressions —
-    // so millis conversion happens inside the state wrapper instead.
-    SimilarityOps
-      .withPolySignature(spark,
-        docs.withWatermark("ingest_ts", horizon)
-          .select(col("doc_id"), col("text"), col("ingest_ts")),
-        col("text"))
-      .select(col("doc_id"), col("sig"), col("ingest_ts"),
-        posexplode(SimilarityOps.polyBandSlices))
-      .select(
-        concat_ws(",", col("pos").cast("string"),
-          concat_ws(",", col("col"))).as("bucket_key"),
-        col("doc_id"), col("sig"), col("ingest_ts"))
-      .as[(String, Long, Seq[Long], java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (_: String, rows: Iterator[(String, Long, Seq[Long], java.sql.Timestamp)],
-         state: GroupState[List[TimedDocSig]]) =>
-          bucketStepBounded(horizonMs,
-            rows.map(r => TimedDocSig(r._2, r._3, r._4.getTime)), state)
-      }
+    ProbeAppend.pairs(bucketRows(spark, docs.withWatermark("ingest_ts", horizon)
+        .select(col("doc_id"), col("text"), col("ingest_ts"))), bucketKey, timedDoc)(
+      _.docId, Some((_.tsMillis, ProbeAppend.horizonMs(horizon))))(pairOf)
   }
 
   /** Ingestion-time check of every arriving document against the
@@ -224,24 +139,22 @@ object NearDupStream {
       .select("doc_id", "matched_id", "est_jaccard_milli")
   }
 
-  /** Shared signature+banding stage: (bucket_key, DocSig[, extras]).
-    * The group key renders the batch join predicate (band, slice) as a
-    * string — "," is injective over longs so key equality ⟺ slice
-    * equality. */
-  private def banded(spark: SparkSession, docs: DataFrame):
-      Dataset[(String, DocSig)] = {
-    import spark.implicits._
-    SimilarityOps
-      .withPolySignature(spark, docs.select(col("doc_id"), col("text")),
-        col("text"))
-      .select(col("doc_id"), col("sig"),
-        posexplode(SimilarityOps.polyBandSlices))
-      .select(
-        concat_ws(",", col("pos").cast("string"),
-          concat_ws(",", col("col"))).as("bucket_key"),
-        col("doc_id").as("docId"), col("sig"))
-      .as[(String, Long, Seq[Long])]
-      .map { case (k, id, sig) => (k, DocSig(id, sig)) }
-  }
+  /** Signature + banding stage: one row per (doc, band) with the
+    * bucket key, the doc's id and signature, and the frame's other
+    * columns. The key renders the batch join predicate (band, slice)
+    * as a string — "," is injective over longs so key equality ⟺
+    * slice equality. */
+  private def bucketRows(spark: SparkSession, docs: DataFrame): DataFrame =
+    SimilarityOps.withPolySignature(spark, docs, col("text"))
+      .select(col("*"), posexplode(SimilarityOps.polyBandSlices))
+      .withColumn("bucket_key",
+        concat_ws(",", col("pos").cast("string"), concat_ws(",", col("col"))))
+      .drop("text", "pos", "col")
 
+  private val bucketKey: Row => String = _.getAs[String]("bucket_key")
+  private def doc(r: Row) =
+    DocSig(r.getAs[Long]("doc_id"), r.getSeq[Long](r.fieldIndex("sig")))
+  private def timedDoc(r: Row) =
+    TimedDocSig(r.getAs[Long]("doc_id"), r.getSeq[Long](r.fieldIndex("sig")),
+      r.getAs[java.sql.Timestamp]("ingest_ts").getTime)
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Ingestion-time SEMANTIC near-dup detection — the streaming form of
   * [[graft.operators.SimilarityOps.semanticPairs]] (SemDeDup-style
@@ -16,13 +15,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    ([[graft.functions.Q8CellSig]] — stateless, so legal on a
   *    streaming frame; shared object, can't fork), so stream and
   *    batch signatures are bit-identical;
-  *  - the cell id is the group key; per-cell keyed state holds the
-  *    (vec_id, q8, ‖v‖²) of every prior member; an arriving vector
-  *    emits a pair per qualifying member (the SAME integer predicate:
-  *    dot > 0 ∧ dot²·10⁴ ≥ τ²·‖a‖²·‖b‖²) and appends itself.
-  *    Within one micro-batch, arrivals process in vec_id order so
-  *    output is deterministic under replay (exactly-once append sink
-  *    under checkpoint recovery).
+  *  - the cell id is the group key; per-cell keyed state
+  *    ([[ProbeAppend.step]]) holds the (vec_id, q8, ‖v‖²) of every
+  *    prior member; an arriving vector emits a pair per qualifying
+  *    member (the SAME integer predicate, [[pairOf]]) and appends
+  *    itself. Within one micro-batch, arrivals process in vec_id order
+  *    so output is deterministic under replay (exactly-once append
+  *    sink under checkpoint recovery).
   *
   * Null-element normalization: state encodes q8 as Seq[Long], so null
   * elements map to 0 BEFORE entering state — semantics-preserving by
@@ -35,164 +34,31 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * re-keys state to (cell, shard) with doc-side replication so the
   * hottest cell's per-key state is bounded at |cell|/shards, and/or
   * bounds the horizon with the watermark variant
-  * ([[semanticPairsWithinWatermark]], trade documented at
-  * [[NearDupStream.bucketStepBounded]]). The per-pair work is one integer dot — identical to the
-  * batch verify. The int64 dim ceilings documented at
+  * ([[semanticPairsWithinWatermark]], trade documented there). The
+  * per-pair work is one integer dot — identical to the batch verify.
+  * The int64 dim ceilings documented at
   * [[graft.operators.SimilarityOps.semanticPairs]] apply here too
   * (predicate exact to D ≈ 1800; the cos2_e6 evidence to D ≈ 188).
   */
 object SemanticStream {
 
-  case class VecSig(vecId: Long, q8: Seq[Long], na2: Long)
+  /** A cell member as the pair function reads it. */
+  private[graft] sealed trait Quantized { def vecId: Long; def q8: Seq[Long]; def na2: Long }
+  case class VecSig(vecId: Long, q8: Seq[Long], na2: Long) extends Quantized
+  case class TimedVecSig(vecId: Long, q8: Seq[Long], na2: Long, tsMillis: Long)
+    extends Quantized
   case class SemPair(a_id: Long, b_id: Long, dot: Long, cos2_e6: Long)
 
   import graft.operators.SimilarityOps.{SemTauE2 => TauE2}
 
-  private def dotOf(a: Seq[Long], b: Seq[Long]): Long =
-    a.iterator.zip(b.iterator).map { case (x, y) => x * y }.sum
-
-  /** Per-cell state update: emit a pair for every qualifying (prior
-    * member, arrival); process arrivals in vec_id order; append
-    * arrivals. Pure function of (sorted arrivals, prior state).
-    * A re-arrival of a vec_id already in state (at-least-once source
-    * re-delivery) is SKIPPED entirely — no duplicate state entry (which
-    * would re-emit its pairs for every future partner) and no re-emitted
-    * pairs for the replay itself. */
-  private[graft] def cellStep(arrivals: Iterator[VecSig],
-      state: GroupState[List[VecSig]]): Iterator[SemPair] = {
-    var members = state.getOption.getOrElse(Nil)
-    val out = List.newBuilder[SemPair]
-    arrivals.toSeq.sortBy(_.vecId).foreach { v =>
-      if (!members.exists(_.vecId == v.vecId)) {
-        members.foreach { m =>
-          val d = dotOf(m.q8, v.q8)
-          if (d > 0 && d * d * 10000L >= TauE2 * TauE2 * m.na2 * v.na2) {
-            val (a, b) =
-              if (m.vecId < v.vecId) (m.vecId, v.vecId) else (v.vecId, m.vecId)
-            out += SemPair(a, b, d, d * d * 1000000L / (m.na2 * v.na2))
-          }
-        }
-        members ::= v
-      }
-    }
-    state.update(members)
-    out.result().iterator
-  }
-
-  /** One arriving vector's role in a (cell, shard) group: `home` =
-    * this group is hash(vec_id)'s own shard (the arrival is appended
-    * to state here); probe-role copies only match. */
-  case class ShardVecSig(vecId: Long, q8: Seq[Long], na2: Long, home: Boolean)
-
-  /** Per-(cell, shard) state update — the HOT-CELL-BOUNDED analog of
-    * [[cellStep]] (same trick as NearDupStream's band+slice key): state
-    * in this group holds only the cell members whose home shard this
-    * is (~1/S of the cell), so the hottest cell's per-key state is
-    * bounded by |cell|/S instead of |cell|. Every pair (m, v) with m
-    * appended before v is emitted exactly once — in m's home shard,
-    * where v's probe copy meets it; within a batch the vec_id
-    * processing order means the smaller id has already appended in its
-    * own shard when the larger id's probe copy arrives (spec-pinned
-    * sharded ≡ unsharded on an engineered hot cell). Re-delivery
-    * suppression covers the home shard (state dedup by vec_id); a
-    * non-home probe copy of a replayed vector cannot know — full
-    * at-least-once idempotence composes a downstream
-    * dropDuplicates on (a_id, b_id), which the deterministic pair key
-    * makes exact. */
-  private[graft] def cellShardStep(arrivals: Iterator[ShardVecSig],
-      state: GroupState[List[VecSig]]): Iterator[SemPair] = {
-    var members = state.getOption.getOrElse(Nil)
-    val out = List.newBuilder[SemPair]
-    var changed = false
-    // distinctBy: an in-batch duplicate delivery would otherwise probe
-    // twice in NON-home groups (no append there to trip the state guard)
-    arrivals.toSeq.sortBy(_.vecId).distinctBy(_.vecId).foreach { v =>
-      if (!members.exists(_.vecId == v.vecId)) {
-        members.foreach { m =>
-          val d = dotOf(m.q8, v.q8)
-          if (d > 0 && d * d * 10000L >= TauE2 * TauE2 * m.na2 * v.na2) {
-            val (a, b) =
-              if (m.vecId < v.vecId) (m.vecId, v.vecId) else (v.vecId, m.vecId)
-            out += SemPair(a, b, d, d * d * 1000000L / (m.na2 * v.na2))
-          }
-        }
-        if (v.home) { members ::= VecSig(v.vecId, v.q8, v.na2); changed = true }
-      }
-    }
-    if (changed) state.update(members)
-    out.result().iterator
-  }
-
-  case class TimedVecSig(vecId: Long, q8: Seq[Long], na2: Long, tsMillis: Long)
-
-  /** Bounded cell step: members older than the watermark are evicted
-    * before matching; an idle cell's state is removed by event-time
-    * timeout once the watermark passes its newest member. Same
-    * structure as [[NearDupStream.bucketStepBounded]]. */
-  private[graft] def cellStepBounded(horizonMs: Long,
-      arrivals: Iterator[TimedVecSig],
-      state: GroupState[List[TimedVecSig]]): Iterator[SemPair] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    val wm = state.getCurrentWatermarkMs()
-    var members = state.getOption.getOrElse(Nil).filter(_.tsMillis >= wm)
-    val out = List.newBuilder[SemPair]
-    arrivals.toSeq.sortBy(_.vecId).foreach { v =>
-      // same re-delivery guard as cellStep: an in-horizon member with
-      // this vec_id means a replay — skip (no duplicate state entry)
-      if (!members.exists(_.vecId == v.vecId)) {
-        members.foreach { m =>
-          val d = dotOf(m.q8, v.q8)
-          if (d > 0 && d * d * 10000L >= TauE2 * TauE2 * m.na2 * v.na2) {
-            val (a, b) =
-              if (m.vecId < v.vecId) (m.vecId, v.vecId) else (v.vecId, m.vecId)
-            out += SemPair(a, b, d, d * d * 1000000L / (m.na2 * v.na2))
-          }
-        }
-        members ::= v
-      }
-    }
-    if (members.isEmpty) state.remove()
-    else {
-      state.update(members)
-      state.setTimeoutTimestamp(
-        math.max(members.map(_.tsMillis).max + horizonMs, wm + 1))
-    }
-    out.result().iterator
-  }
-
-  /** Bounded + sharded cell step — [[cellShardStep]] with
-    * [[cellStepBounded]]'s horizon eviction and idle-key timeout, so
-    * the PRODUCTION form can bound state on BOTH axes at once:
-    * per-key membership ≤ |cell ∩ horizon|/shards. Same exactly-once
-    * pair placement argument as [[cellShardStep]]. */
-  private[graft] def cellShardStepBounded(horizonMs: Long,
-      arrivals: Iterator[(TimedVecSig, Boolean)],
-      state: GroupState[List[TimedVecSig]]): Iterator[SemPair] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    val wm = state.getCurrentWatermarkMs()
-    var members = state.getOption.getOrElse(Nil).filter(_.tsMillis >= wm)
-    val out = List.newBuilder[SemPair]
-    arrivals.toSeq.sortBy(_._1.vecId).distinctBy(_._1.vecId)
-      .foreach { case (v, home) =>
-        if (!members.exists(_.vecId == v.vecId)) {
-          members.foreach { m =>
-            val d = dotOf(m.q8, v.q8)
-            if (d > 0 && d * d * 10000L >= TauE2 * TauE2 * m.na2 * v.na2) {
-              val (a, b) =
-                if (m.vecId < v.vecId) (m.vecId, v.vecId) else (v.vecId, m.vecId)
-              out += SemPair(a, b, d, d * d * 1000000L / (m.na2 * v.na2))
-            }
-          }
-          if (home) members ::= v
-        }
-      }
-    if (members.isEmpty) { if (state.exists) state.remove() }
-    else {
-      state.update(members)
-      state.setTimeoutTimestamp(
-        math.max(members.map(_.tsMillis).max + horizonMs, wm + 1))
-    }
-    out.result().iterator
+  /** The family's pair function: the batch verify's integer cosine
+    * predicate dot > 0 ∧ dot²·10⁴ ≥ τ²·‖a‖²·‖b‖², reported with the
+    * dot and cos²·10⁶. */
+  private[graft] def pairOf(a: Quantized, b: Quantized): Option[SemPair] = {
+    val d = a.q8.iterator.zip(b.q8.iterator).map { case (x, y) => x * y }.sum
+    if (d > 0 && d * d * 10000L >= TauE2 * TauE2 * a.na2 * b.na2)
+      Some(SemPair(a.vecId, b.vecId, d, d * d * 1000000L / (a.na2 * b.na2)))
+    else None
   }
 
   /** [[semanticPairsStreamSharded]] with [[semanticPairsWithinWatermark]]'s
@@ -206,35 +72,10 @@ object SemanticStream {
   def semanticPairsWithinWatermarkSharded(spark: SparkSession, vecs: DataFrame,
       horizon: String = "1 hour", shards: Int = 8): Dataset[SemPair] = {
     import spark.implicits._
-    require(shards >= 1, s"shards must be >= 1, got $shards")
-    graft.GraftExtensions.register(spark)
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(org.apache.spark.unsafe.types.UTF8String
-        .fromString(horizon))
-    val horizonMs = iv.months * 2592000000L + iv.days * 86400000L +
-      iv.microseconds / 1000L
-    vecs.withWatermark("ingest_ts", horizon)
-      .select(col("vec_id"),
-        call_function("graft_q8cell", col("embedding")).as("s"),
-        col("ingest_ts"))
-      .select(col("s.cell").as("cell"), col("vec_id"),
-        transform(col("s.q8"), x => coalesce(x, lit(0L))).as("q8"),
-        col("s.na2").as("na2"), col("ingest_ts"),
-        pmod(xxhash64(col("vec_id")), lit(shards)).cast("int").as("home_shard"),
-        explode(sequence(lit(0), lit(shards - 1))).as("shard"))
-      .select(col("cell"), col("shard"), col("vec_id"), col("q8"), col("na2"),
-        col("ingest_ts"), (col("shard") === col("home_shard")).as("home"))
-      .as[(Long, Int, Long, Seq[Long], Long, java.sql.Timestamp, Boolean)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (_: (Long, Int),
-         rows: Iterator[(Long, Int, Long, Seq[Long], Long, java.sql.Timestamp, Boolean)],
-         state: GroupState[List[TimedVecSig]]) =>
-          cellShardStepBounded(horizonMs,
-            rows.map(r => (TimedVecSig(r._3, r._4, r._5, r._6.getTime), r._7)),
-            state)
-      }
+    ProbeAppend.pairs(
+      shardCopies(cellRows(spark, vecs.withWatermark("ingest_ts", horizon), "ingest_ts"),
+        shards), cellShard, timedVec)(
+      _.vecId, Some((_.tsMillis, ProbeAppend.horizonMs(horizon))))(pairOf)
   }
 
   /** The state-BOUNDED production form of [[semanticPairsStream]]:
@@ -250,30 +91,9 @@ object SemanticStream {
   def semanticPairsWithinWatermark(spark: SparkSession, vecs: DataFrame,
       horizon: String = "1 hour"): Dataset[SemPair] = {
     import spark.implicits._
-    graft.GraftExtensions.register(spark)
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(org.apache.spark.unsafe.types.UTF8String
-        .fromString(horizon))
-    val horizonMs = iv.months * 2592000000L + iv.days * 86400000L +
-      iv.microseconds / 1000L
-    // the watermarked ingest_ts must reach the state operator as a
-    // plain projected column (see the note in NearDupStream)
-    vecs.withWatermark("ingest_ts", horizon)
-      .select(col("vec_id"),
-        call_function("graft_q8cell", col("embedding")).as("s"),
-        col("ingest_ts"))
-      .select(col("s.cell").as("cell"), col("vec_id"),
-        transform(col("s.q8"), x => coalesce(x, lit(0L))).as("q8"),
-        col("s.na2").as("na2"), col("ingest_ts"))
-      .as[(Long, Long, Seq[Long], Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (_: Long, rows: Iterator[(Long, Long, Seq[Long], Long, java.sql.Timestamp)],
-         state: GroupState[List[TimedVecSig]]) =>
-          cellStepBounded(horizonMs,
-            rows.map(r => TimedVecSig(r._2, r._3, r._4, r._5.getTime)), state)
-      }
+    ProbeAppend.pairs(
+      cellRows(spark, vecs.withWatermark("ingest_ts", horizon), "ingest_ts"),
+      cell, timedVec)(_.vecId, Some((_.tsMillis, ProbeAppend.horizonMs(horizon))))(pairOf)
   }
 
   /** History-aware sustained-ingestion form: arriving vectors probe
@@ -327,20 +147,7 @@ object SemanticStream {
     * surfacing as soon as its second member arrives. */
   def semanticPairsStream(spark: SparkSession, vecs: DataFrame): Dataset[SemPair] = {
     import spark.implicits._
-    graft.GraftExtensions.register(spark)
-    vecs
-      .select(col("vec_id"),
-        call_function("graft_q8cell", col("embedding")).as("s"))
-      .select(col("s.cell").as("cell"), col("vec_id"),
-        transform(col("s.q8"), x => coalesce(x, lit(0L))).as("q8"),
-        col("s.na2").as("na2"))
-      .as[(Long, Long, Seq[Long], Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, rows: Iterator[(Long, Long, Seq[Long], Long)],
-         state: GroupState[List[VecSig]]) =>
-          cellStep(rows.map(r => VecSig(r._2, r._3, r._4)), state)
-      }
+    ProbeAppend.pairs(cellRows(spark, vecs), cell, vec)(_.vecId, None)(pairOf)
   }
 
   /** HOT-CELL SHARDED form of [[semanticPairsStream]] — the 100 TB
@@ -362,24 +169,37 @@ object SemanticStream {
   def semanticPairsStreamSharded(spark: SparkSession, vecs: DataFrame,
       shards: Int = 8): Dataset[SemPair] = {
     import spark.implicits._
-    require(shards >= 1, s"shards must be >= 1, got $shards")
-    graft.GraftExtensions.register(spark)
-    vecs
-      .select(col("vec_id"),
-        call_function("graft_q8cell", col("embedding")).as("s"))
-      .select(col("s.cell").as("cell"), col("vec_id"),
-        transform(col("s.q8"), x => coalesce(x, lit(0L))).as("q8"),
-        col("s.na2").as("na2"),
-        pmod(xxhash64(col("vec_id")), lit(shards)).cast("int").as("home_shard"),
-        explode(sequence(lit(0), lit(shards - 1))).as("shard"))
-      .select(col("cell"), col("shard"), col("vec_id"), col("q8"), col("na2"),
-        (col("shard") === col("home_shard")).as("home"))
-      .as[(Long, Int, Long, Seq[Long], Long, Boolean)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Long, Int), rows: Iterator[(Long, Int, Long, Seq[Long], Long, Boolean)],
-         state: GroupState[List[VecSig]]) =>
-          cellShardStep(rows.map(r => ShardVecSig(r._3, r._4, r._5, r._6)), state)
-      }
+    ProbeAppend.pairs(shardCopies(cellRows(spark, vecs), shards), cellShard, vec)(
+      _.vecId, None)(pairOf)
   }
+
+  /** q8-cell signature rows: (cell, vec_id, q8, na2) plus the `keep`
+    * columns. State encodes q8 as Seq[Long], so null elements map to 0
+    * here, before they enter state. */
+  private def cellRows(spark: SparkSession, vecs: DataFrame, keep: String*): DataFrame = {
+    graft.GraftExtensions.register(spark)
+    vecs.select(col("vec_id") +: call_function("graft_q8cell", col("embedding")).as("s") +:
+        keep.map(col): _*)
+      .select(Seq(col("s.cell").as("cell"), col("vec_id"),
+        transform(col("s.q8"), x => coalesce(x, lit(0L))).as("q8"),
+        col("s.na2").as("na2")) ++ keep.map(col): _*)
+  }
+
+  /** Replicates each row to all `shards` (cell, shard) keys; `home`
+    * marks the copy in the vector's own shard hash(vec_id) % shards. */
+  private def shardCopies(rows: DataFrame, shards: Int): DataFrame = {
+    require(shards >= 1, s"shards must be >= 1, got $shards")
+    rows.withColumn("shard", explode(sequence(lit(0), lit(shards - 1))))
+      .withColumn("home",
+        col("shard") === pmod(xxhash64(col("vec_id")), lit(shards)).cast("int"))
+  }
+
+  private val cell: Row => Long = _.getAs[Long]("cell")
+  private val cellShard: Row => (Long, Int) =
+    r => (r.getAs[Long]("cell"), r.getAs[Int]("shard"))
+  private def vec(r: Row) =
+    VecSig(r.getAs[Long]("vec_id"), r.getSeq[Long](r.fieldIndex("q8")), r.getAs[Long]("na2"))
+  private def timedVec(r: Row) =
+    TimedVecSig(r.getAs[Long]("vec_id"), r.getSeq[Long](r.fieldIndex("q8")),
+      r.getAs[Long]("na2"), r.getAs[java.sql.Timestamp]("ingest_ts").getTime)
 }

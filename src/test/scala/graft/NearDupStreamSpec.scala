@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.api.java.Optional
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, TestGroupState}
 
-import graft.streaming.NearDupStream
+import graft.streaming.{NearDupStream, ProbeAppend}
+import graft.streaming.NearDupStream.{DocSig, TimedDocSig}
 
 /** Ingestion-time near-dup detection ≡ the batch poly-MinHash LSH
   * pipeline on the same corpus: streaming in docs (across several
@@ -93,28 +95,93 @@ class NearDupStreamSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("re-delivered doc adds no duplicate bucket member and re-emits no pairs") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val text = Seq.tabulate(30)(i => s"w$i").mkString(" ")
+    val input = MemoryStream[(Long, String)]
+    val q = NearDupStream.nearDupPairs(spark, input.toDF().toDF("doc_id", "text"))
+      .writeStream.format("memory").queryName("neardup_redeliver")
+      .outputMode(OutputMode.Append).start()
+    try {
+      input.addData((1L, text), (2L, text)); q.processAllAvailable()
+      // at-least-once source re-delivers doc 1, then a new member 3
+      // arrives: without the state guard, 3 would pair against TWO
+      // copies of 1 in every band
+      input.addData((1L, text)); q.processAllAvailable()
+      input.addData((3L, text)); q.processAllAvailable()
+      val counts = spark.table("neardup_redeliver").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+        .groupBy(identity).map { case (p, v) => p -> v.size }
+      // identical text collides in every band: one emission per band
+      val bands = operators.SimilarityOps.PolyBands
+      assert(counts == Map((1L, 2L) -> bands, (1L, 3L) -> bands, (2L, 3L) -> bands),
+        s"expected each pair once per band, got $counts")
+    } finally q.stop()
+  }
+
   test("bucketStep emits each cross-member pair once, in deterministic order") {
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    // pure-function check through the test harness-free path: prior
-    // state {1}, arrivals {3, 2} (out of order) → pairs (1,2),(1,3),
-    // (2,3) with id-sorted processing
+    // pure-function check of the shared step with the near-dup pair
+    // function: prior state {1}, arrivals {3, 2} (out of order) →
+    // pairs (1,2),(1,3),(2,3) with id-sorted processing
     val sig1 = Seq(1L, 2L, 3L, 4L)
     val sig2 = Seq(1L, 2L, 3L, 9L)
     val sig3 = Seq(1L, 8L, 8L, 8L)
-    val state = new TestGroupState(Some(List(NearDupStream.DocSig(1, sig1))))
-    val out = NearDupStream.bucketStep(
-      Iterator(NearDupStream.DocSig(3, sig3), NearDupStream.DocSig(2, sig2)),
-      state).toList
+    val state = unboundedState(Some(List(DocSig(1, sig1))))
+    val out = ProbeAppend.step(Iterator(DocSig(3, sig3) -> true, DocSig(2, sig2) -> true),
+      state)(_.docId, None)(NearDupStream.pairOf).toList
     assert(out.map(p => (p.a_id, p.b_id)).toSet ==
       Set((1L, 2L), (1L, 3L), (2L, 3L)))
     // id-sorted arrival processing: doc 2's pair precedes doc 3's
     assert(out.head.b_id == 2L)
-    // est over 4-perm stub sigs: 3/4 match → 188 with PolyPerms=16
-    // scaling is wrong — estMilli divides by PolyPerms(16), so a 4-slot
-    // sig yields 3/16 → 188‰; the unit here is "matching permutations
-    // out of PolyPerms", consistent because production sigs are 16-long
+    // docs 1 and 2 agree on 3 of their 4 stub slots; the estimate counts
+    // matching slots out of PolyPerms (16), the production signature
+    // length, so it reads 3/16 → 188‰
     assert(out.head.est_jaccard_milli == math.round(1000.0 * 3 / 16))
-    assert(state.updated.exists(_.map(_.docId).toSet == Set(1L, 2L, 3L)))
+    assert(state.getOption.exists(_.map(_.docId).toSet == Set(1L, 2L, 3L)))
+  }
+
+  test("a probe copy (home = false) pairs with the members but is not appended") {
+    val sig = Seq(1L, 2L)
+    val state = unboundedState(Some(List(DocSig(1, sig))))
+    val out = ProbeAppend.step(Iterator(DocSig(2, sig) -> false), state)(
+      _.docId, None)(NearDupStream.pairOf).toList
+    assert(out.map(p => (p.a_id, p.b_id)) == List((1L, 2L)))
+    assert(!state.isUpdated && state.getOption.contains(List(DocSig(1, sig))))
+    // a key that only sees probe copies never stores an empty list
+    val fresh = unboundedState(None)
+    assert(ProbeAppend.step(Iterator(DocSig(3, sig) -> false), fresh)(
+      _.docId, None)(NearDupStream.pairOf).isEmpty)
+    assert(!fresh.exists && !fresh.isUpdated)
+  }
+
+  test("bounded step evicts members below the watermark before probing") {
+    val sig = Seq(1L, 2L)
+    val state = boundedState(List(TimedDocSig(1, sig, 5000L), TimedDocSig(2, sig, 20000L)),
+      watermarkMs = 10000L)
+    val out = ProbeAppend.step(Iterator(TimedDocSig(3, sig, 25000L) -> true), state)(
+      _.docId, Some((_.tsMillis, 60000L)))(NearDupStream.pairOf).toList
+    assert(out.map(p => (p.a_id, p.b_id)) == List((2L, 3L)))
+    assert(state.getOption.map(_.map(_.docId)).contains(List(3L, 2L)))
+    assert(state.getTimeoutTimestampMs.get == 25000L + 60000L)
+    // every member evicted and nothing appended: the state is removed
+    val stale = boundedState(List(TimedDocSig(1, sig, 5000L)), watermarkMs = 10000L)
+    assert(ProbeAppend.step(Iterator(TimedDocSig(4, sig, 30000L) -> false), stale)(
+      _.docId, Some((_.tsMillis, 60000L)))(NearDupStream.pairOf).isEmpty)
+    assert(stale.isRemoved)
+  }
+
+  test("bounded step re-arms the event-time timeout on a probe-only call") {
+    // Spark clears an event-time timeout that a call does not set
+    // again, so a call that appends nothing must still re-arm it
+    val sig = Seq(1L, 2L)
+    val state = boundedState(List(TimedDocSig(2, sig, 20000L)), watermarkMs = 10000L)
+    val out = ProbeAppend.step(Iterator(TimedDocSig(4, sig, 30000L) -> false), state)(
+      _.docId, Some((_.tsMillis, 60000L)))(NearDupStream.pairOf).toList
+    assert(out.map(p => (p.a_id, p.b_id)) == List((2L, 4L)))
+    assert(state.getOption.contains(List(TimedDocSig(2, sig, 20000L))))
+    assert(state.getTimeoutTimestampMs.get == 20000L + 60000L)
   }
 
   test("stream-static index check ≡ batch dedup_incremental's dup_existing arm") {
@@ -151,24 +218,12 @@ class NearDupStreamSpec extends SparkSuite {
           s"batch-only: ${(batch.toSet -- got.toSet).take(5)}")
     } finally q.stop()
   }
-}
 
-/** Minimal GroupState stub for exercising bucketStep as a pure function. */
-class TestGroupState[S](initial: Option[S])
-    extends org.apache.spark.sql.streaming.GroupState[S] {
-  var updated: Option[S] = initial
-  override def exists: Boolean = updated.isDefined
-  override def get: S = updated.get
-  override def getOption: Option[S] = updated
-  override def update(newState: S): Unit = updated = Some(newState)
-  override def remove(): Unit = updated = None
-  override def hasTimedOut: Boolean = false
-  override def setTimeoutDuration(durationMs: Long): Unit = ()
-  override def setTimeoutDuration(duration: String): Unit = ()
-  override def setTimeoutTimestamp(timestampMs: Long): Unit = ()
-  override def setTimeoutTimestamp(timestampMs: Long, additionalDuration: String): Unit = ()
-  override def setTimeoutTimestamp(timestamp: java.sql.Date): Unit = ()
-  override def setTimeoutTimestamp(timestamp: java.sql.Date, additionalDuration: String): Unit = ()
-  override def getCurrentWatermarkMs(): Long = 0L
-  override def getCurrentProcessingTimeMs(): Long = 0L
+  private def unboundedState(members: Option[List[DocSig]]) =
+    TestGroupState.create[List[DocSig]](Optional.ofNullable(members.orNull),
+      GroupStateTimeout.NoTimeout, 0L, Optional.empty[Long], false)
+
+  private def boundedState(members: List[TimedDocSig], watermarkMs: Long) =
+    TestGroupState.create[List[TimedDocSig]](Optional.of(members),
+      GroupStateTimeout.EventTimeTimeout, 0L, Optional.of(watermarkMs), false)
 }
