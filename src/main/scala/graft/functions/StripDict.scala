@@ -29,10 +29,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * per stage via the task-binary broadcast, and the lookup set is
   * built lazily once per deserialized expression instance. That is the
   * right shape up to ~10⁵–10⁶ fps; past the inline ceiling the caller
-  * falls back to the anti-join form, whose dictionary side is the
-  * bucketed-table move ([[graft.operators.SimilarityOps.buildSigIndexBucketed]]
-  * precedent) — [[graft.operators.TextOps.stripAgainstDict]] documents
-  * the dispatch.
+  * falls back to the anti-join form, whose dictionary side scales as a
+  * catalog table bucketed by the join key —
+  * [[graft.operators.TextOps.stripAgainstDict]] documents the dispatch.
   *
   * Output is row-for-row equal to the join form's for every doc with
   * ≥1 surviving chunk, plus an explicit (null, 0) row where the join

@@ -21,12 +21,12 @@ object AggOps {
     * CAS counter accumulation (SURVEY.md §2.10). */
   object TokenStatsAgg extends Aggregator[DocTok, TokBuf, (Long, Long)] {
     import org.apache.spark.sql.{Encoder, Encoders}
-    def zero: TokBuf = TokBuf(0L, 0L)
-    def reduce(b: TokBuf, d: DocTok): TokBuf = { b.n += 1; b.tokens += d.n_tokens; b }
-    def merge(x: TokBuf, y: TokBuf): TokBuf = { x.n += y.n; x.tokens += y.tokens; x }
-    def finish(b: TokBuf): (Long, Long) = (b.n, b.tokens)
-    def bufferEncoder: Encoder[TokBuf] = Encoders.product[TokBuf]
-    def outputEncoder: Encoder[(Long, Long)] = Encoders.product[(Long, Long)]
+    override def zero: TokBuf = TokBuf(0L, 0L)
+    override def reduce(b: TokBuf, d: DocTok): TokBuf = { b.n += 1; b.tokens += d.n_tokens; b }
+    override def merge(x: TokBuf, y: TokBuf): TokBuf = { x.n += y.n; x.tokens += y.tokens; x }
+    override def finish(b: TokBuf): (Long, Long) = (b.n, b.tokens)
+    override def bufferEncoder: Encoder[TokBuf] = Encoders.product[TokBuf]
+    override def outputEncoder: Encoder[(Long, Long)] = Encoders.product[(Long, Long)]
   }
 
   /** Per-source token stats via the typed Aggregator (oracle: plain

@@ -38,23 +38,6 @@ object CatalogOps {
   private val ingestState =
     new java.util.concurrent.ConcurrentHashMap[String, GroupState]
 
-  /** EXTERNAL-RESET CONTRACT (round-11 advice): once a session has
-    * observed a generation for a group, [[ingestOnce]] skips the
-    * per-call tableExists probe — so a managed ingest table dropped or
-    * clobbered OUTSIDE this object mid-session (a test wiping the
-    * shared warehouse between suites, an external process) would no
-    * longer be detected and re-ingested. Nothing in this repo does
-    * that today (the suites drop only their own DDL-demo tables —
-    * `graft.ddl_tasks`, the streaming transitions sink — never the
-    * ingest groups'); anything that starts to MUST call this first to
-    * restore the probe-on-next-call behavior. Clears both the global
-    * group state (forces re-ingest) and every session's seen
-    * generation cannot be reached from here — per-session entries die
-    * with their Memo — so the global reset is the conservative one:
-    * the next caller re-ingests and bumps the generation, which makes
-    * every other session refresh. */
-  def invalidateIngests(): Unit = ingestState.clear()
-
   /** One ingest per (group, sfDir) against the SHARED metastore tables.
     * The guard matches the shared resource: skip only when the
     * JVM-global state says this group already holds `sfDir` AND the

@@ -391,112 +391,6 @@ object MultimodalOps {
     }
   }
 
-  /** Container-level metadata of a video payload ([[probeVideo]]). */
-  final case class VideoMeta(doc_id: Long, brand: String, duration_ms: Long,
-      width: Int, height: Int, n_tracks: Int, video_codec: String, ok: Boolean)
-
-  /** REAL video CONTAINER probe — a pure byte-level ISO-BMFF (MP4) box
-    * walk, no codec required (the walk is to MP4 what the zip+StAX walk
-    * in [[graft.sources.ExcelDataSource]] is to xlsx). At 100 TB a
-    * multimodal ingest needs duration/dimensions/codec-id/track-count
-    * for routing, capping and stats WITHOUT decoding frames; frame
-    * DECODE lives in [[decodeVideoFrames]] (real, for MJPEG AVIs) and
-    * quarantines for codecs the JDK lacks. Extracts: major brand (`ftyp`),
-    * movie duration (`mvhd`, both version 0 and 1 layouts), the first
-    * video track's display size (`tkhd` 16.16 fixed) and sample-entry
-    * fourcc (`stsd`, e.g. avc1/hev1), and the track count. Truncated,
-    * non-MP4 or otherwise malformed payloads quarantine via `ok=false`
-    * like every other decode path — a bad byte string must never kill
-    * a stage. */
-  def probeVideo(media: Dataset[MediaRecord]): Dataset[VideoMeta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map(r => parseMp4(r.doc_id, r.payload))
-    }
-  }
-
-  private def parseMp4(id: Long, b: Array[Byte]): VideoMeta = {
-    val bad = VideoMeta(id, "", 0L, 0, 0, 0, "", ok = false)
-    def u32(o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    def u64(o: Int): Long = (u32(o) << 32) | u32(o + 4)
-    def fourcc(o: Int): String =
-      new String(b, o, 4, java.nio.charset.StandardCharsets.US_ASCII)
-    /** Walk boxes in [from, until); returns (type, payloadStart,
-      * payloadEnd) triples. Box: u32 size, 4cc type; size==1 → u64
-      * largesize follows; size==0 → box runs to `until`. */
-    def boxes(from: Int, until: Int): List[(String, Int, Int)] = {
-      var o = from
-      var out = List.empty[(String, Int, Int)]
-      while (o + 8 <= until) {
-        val size = u32(o)
-        val typ = fourcc(o + 4)
-        val (start, end) =
-          if (size == 1L) {
-            if (o + 16 > until) return out.reverse
-            (o + 16, o + u64(o + 8))
-          } else if (size == 0L) (o + 8, until.toLong)
-          else (o + 8, o + size)
-        if (end > until || end <= start) return out.reverse
-        out = (typ, start, end.toInt) :: out
-        o = end.toInt
-      }
-      out.reverse
-    }
-    try {
-      val top = boxes(0, b.length)
-      val brand = top.collectFirst { case ("ftyp", s, e) if e - s >= 4 =>
-        fourcc(s)
-      }.getOrElse(return bad)
-      val (ms, me) = top.collectFirst { case ("moov", s, e) => (s, e) }
-        .getOrElse(return bad)
-      val moov = boxes(ms, me)
-      // mvhd: version/flags u32, then v0: ctime/mtime u32 ×2, timescale
-      // u32, duration u32; v1: ctime/mtime u64 ×2, timescale u32,
-      // duration u64
-      val durMs = moov.collectFirst { case ("mvhd", s, _) =>
-        val v = b(s) & 0xff
-        val (scale, dur) =
-          if (v == 1) (u32(s + 20), u64(s + 24)) else (u32(s + 12), u32(s + 16))
-        if (scale == 0) 0L else dur * 1000L / scale
-      }.getOrElse(return bad)
-      val traks = moov.filter(_._1 == "trak")
-      // first track whose hdlr handler_type is 'vide' (hdlr: version/
-      // flags u32, pre_defined u32, handler_type 4cc)
-      val video = traks.iterator.map { case (_, s, e) =>
-        val tk = boxes(s, e)
-        val isVideo = tk.collectFirst { case ("mdia", ms2, me2) =>
-          boxes(ms2, me2).collectFirst {
-            case ("hdlr", hs, he) if he - hs >= 12 => fourcc(hs + 8)
-          }.contains("vide")
-        }.getOrElse(false)
-        (tk, isVideo, s, e)
-      }.collectFirst { case (tk, true, _, _) =>
-        // tkhd: after version/flags — v0: u32 ×4 + u32[2] + i16 ×2 +
-        // i16 + matrix 36B → width at +76; v1 has three u64 fields →
-        // width at +88; width/height are 16.16 fixed point
-        val wh = tk.collectFirst { case ("tkhd", ts, _) =>
-          val off = if ((b(ts) & 0xff) == 1) ts + 88 else ts + 76
-          ((u32(off) >> 16).toInt, (u32(off + 4) >> 16).toInt)
-        }.getOrElse((0, 0))
-        // stsd: version/flags u32, entry_count u32, then first sample
-        // entry: u32 size + 4cc codec id
-        val codec = tk.collectFirst { case ("mdia", ms2, me2) =>
-          (for {
-            (_, is, ie) <- boxes(ms2, me2).find(_._1 == "minf")
-            (_, ss, se) <- boxes(is, ie).find(_._1 == "stbl")
-            (_, ds, de) <- boxes(ss, se).find(_._1 == "stsd")
-            if de - ds >= 16
-          } yield fourcc(ds + 12)).getOrElse("")
-        }.getOrElse("")
-        (wh, codec)
-      }
-      val ((w, h), codec) = video.getOrElse(((0, 0), ""))
-      VideoMeta(id, brand, durMs, w, h, traks.size, codec, ok = true)
-    } catch { case _: Exception => bad }
-  }
-
   /** One sampled frame of a "video" payload. */
   final case class MediaFrame(doc_id: Long, frame_idx: Int, frame_md5: String)
 
@@ -550,8 +444,7 @@ object MultimodalOps {
       height: Int, mean_luma_milli: Long, ok: Boolean)
 
   /** REAL video frame demux — a pure byte-level RIFF/AVI chunk walk
-    * (the little-endian sibling of [[parseMp4]]'s ISO-BMFF box walk;
-    * no external libs). Returns the video stream's frame payloads
+    * (no external libs). Returns the video stream's frame payloads
     * (`##dc`/`##db` chunks inside the `movi` LIST, including `rec `
     * sub-grouping) in stream order, or None for payloads that are not
     * RIFF-AVI. For MJPEG AVIs each returned payload is a complete JPEG

@@ -165,23 +165,4 @@ object PcaOps {
       round((dot - lit(offsets(c))) * 1e6).cast("long").as(s"pc${c + 1}_micro")
     }
   }
-
-  /** STREAM-STATIC projection — arriving vectors projected with the
-    * STORED basis the moment they land (the ingestion-time form, same
-    * shape as the stream-static signature/vector index probes):
-    * stateless, zero aggregation — the basis was trained offline from
-    * the batch corpus ([[pcaBasis]], memoized) and rides into the
-    * streaming plan as literals, so each micro-batch is one pure map.
-    * `arrivals` must carry (vec_id, embedding); quantization is the
-    * same native expression as the batch store. */
-  def projectStream(spark: SparkSession, sfDir: String,
-      arrivals: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(spark)
-    val basis = pcaBasis(spark, sfDir)
-    arrivals
-      .select(col("vec_id"),
-        call_function("graft_q8cell", col("embedding"))
-          .getField("q8").as("q8"))
-      .select(col("vec_id") +: projectionCols(basis): _*)
-  }
 }

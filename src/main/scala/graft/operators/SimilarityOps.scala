@@ -311,38 +311,10 @@ object SimilarityOps {
     * cid and searches prune to the nprobe cells at the FILE level;
     * centroids stays dim-table sized. */
   def buildIvfIndex(spark: SparkSession, sfDir: String, indexDir: String,
-      lloydRounds: Int = 2): Unit =
-    buildIvfIndexVecs(spark, ivfEmbeddings(spark, sfDir), indexDir, lloydRounds)
-
-  /** [[buildIvfIndex]] over any (vec_id, v) frame — the spec builds
-    * partial-corpus indexes here to pin [[ivfIndexInsert]]. */
-  private[graft] def buildIvfIndexVecs(spark: SparkSession, e: DataFrame,
-      indexDir: String, lloydRounds: Int = 2): Unit = {
-    val (centroids, cells) = ivfTrain(spark, e, lloydRounds)
+      lloydRounds: Int = 2): Unit = {
+    val (centroids, cells) = ivfTrain(spark, ivfEmbeddings(spark, sfDir), lloydRounds)
     centroids.write.mode("overwrite").parquet(s"$indexDir/centroids")
     cells.write.mode("overwrite").partitionBy("cid").parquet(s"$indexDir/cells")
-  }
-
-  /** Append new vectors to a [[buildIvfIndex]]-persisted index WITHOUT
-    * retraining: assign each to its nearest stored centroid and append
-    * the (vec_id, cid) rows to the cells table — the maintenance op a
-    * live vector store runs per ingestion batch (classic IVF add;
-    * centroids drift only at the next scheduled rebuild). The append
-    * is dynamic-partition-wise: only the cid partitions the batch
-    * lands in are touched. */
-  def ivfIndexInsert(spark: SparkSession, newVecs: DataFrame,
-      indexDir: String): Unit = {
-    graft.GraftExtensions.register(spark)
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-    val v = newVecs.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val d2 = -call_function("cosine_sim", col("v"), col("cv"))
-    v.crossJoin(broadcast(centroids))
-      .withColumn("d2", d2)
-      .groupBy("vec_id")
-      .agg(min_by(col("cid"), col("d2")).as("cid"))
-      .write.mode("append").partitionBy("cid").parquet(s"$indexDir/cells")
-    // the per-mutator re-arm hook (round-16): store-derived stats die
-    invalidateSaturationStats(spark, indexDir)
   }
 
   /** The ONLINE search over a [[buildIvfIndex]]-persisted index —
@@ -359,7 +331,7 @@ object SimilarityOps {
     // reader infers as int — cast back to the centroid table's long.
     // vec_id-dedup (round-8 advice, the PQ-probe convention): IVF
     // assignment is unique per vector, so duplicate rows can only be a
-    // retried ivfIndexInsert's double-append — any row is the right one.
+    // retried append's double write — any row is the right one.
     val cells = spark.read.parquet(s"$indexDir/cells")
       .select(col("vec_id"), col("cid").cast("long").as("cid"))
       .dropDuplicates("vec_id")
@@ -1476,41 +1448,19 @@ object SimilarityOps {
     cbRows.toDF("j", "k", "cw")
       .write.mode("overwrite").parquet(s"$indexDir/codebook")
     // REBUILD commit: the memoized driver codebook for this path is
-    // now stale by the [[readPqCodebook]] contract (an inserted batch
-    // keeps it; an overwrite at the same path must not) — round-16
+    // now stale by the [[readPqCodebook]] contract (an overwrite at
+    // the same path must not keep it) — round-16
     // advice: every mutating commit point re-arms what it invalidates
     Memo.invalidateKey(spark, s"pqCodebookAt:$indexDir")
     invalidateSaturationStats(spark, indexDir)
   }
 
-  /** Append new vectors to a [[buildIvfPqIndex]]-persisted index
-    * WITHOUT retraining — the per-ingestion-batch maintenance op,
-    * completing the PQ lifecycle like [[ivfIndexInsert]] does for IVF:
-    * encode the batch with the STORED codebook (codebooks drift only
-    * at the next scheduled rebuild — classic PQ add) and append the
-    * batch's band and code rows; only the band partitions the batch
-    * lands in are touched. `newVecs` carries (vec_id, embedding). */
-  def ivfPqIndexInsert(spark: SparkSession, newVecs: DataFrame,
-      indexDir: String): Unit = {
-    val cb = readPqCodebook(spark, indexDir)
-    val q8new = q8CellOf(spark, newVecs).select("vec_id", "q8")
-    latticeBandedOf(q8new)
-      .write.mode("append").partitionBy("band").parquet(s"$indexDir/bands")
-    q8new.select(col("vec_id"), pqCodesCol(cb).as("codes"))
-      .write.mode("append").parquet(s"$indexDir/codes")
-    // APPEND commit: the codebook memo stays valid by contract, but
-    // any ANALYZE statistic derived from this store is now stale —
-    // the same re-arm hook every store-mutating path calls (round-16)
-    invalidateSaturationStats(spark, indexDir)
-  }
-
-  /** The stored codebook as driver arrays (PqM·PqK rows — dim-sized),
-    * shared by the probe and the insert path. Memoized per (session,
+  /** The stored codebook as driver arrays (PqM·PqK rows — dim-sized)
+    * for the probe. Memoized per (session,
     * indexDir): the collect is a whole Spark job, and paying it on
     * every search is pure fixed overhead (a production searcher loads
     * the codebook once at startup). Staleness: [[Memo]] — a REBUILT
-    * index at the same path needs invalidate (an inserted batch does
-    * not touch the codebook by contract). */
+    * index at the same path needs invalidate. */
   private def readPqCodebook(spark: SparkSession,
       indexDir: String): Array[Array[Array[Long]]] =
     Memo.cached(spark, s"pqCodebookAt:$indexDir") {
@@ -1558,7 +1508,7 @@ object SimilarityOps {
     val bands = spark.read.parquet(s"$indexDir/bands")
       .select(col("vec_id"), col("band").cast("int").as("band"), col("key"))
     // vec_id-dedup on the codes read (round-8 advice): a RETRIED
-    // ivfPqIndexInsert appends duplicate rows per vec_id — bands
+    // append writes duplicate rows per vec_id — bands
     // duplicates are absorbed by candIds' distinct, but a duplicate
     // code row would surface as a duplicate (query_id, vec_id) in the
     // shortlist and violate the top-k contract. Codes are a pure
@@ -1629,7 +1579,6 @@ object SimilarityOps {
     * however hot a cell gets (at 100 TB: raise B and/or P; cells shard
     * by signature prefix exactly like an IVF index shards by
     * centroid). */
-  private val SemCellBits = 8
   private[graft] val SemTauE2 = 30L
   private val SemTiles = 8
 
@@ -1761,23 +1710,9 @@ object SimilarityOps {
 
   /** Persist the q8-cell vector index of the existing store — the
     * stored form [[semanticIncremental]]'s scaladoc promises
-    * (~600 B/vector of longs vs the float embedding's 256 B + text).
-    * The catalog variant bucketBy(cell) makes the nightly probe's
-    * index side exchange-free, exactly like [[buildSigIndexBucketed]]
-    * does for the text signature index. */
+    * (~600 B/vector of longs vs the float embedding's 256 B + text). */
   def buildVecIndex(spark: SparkSession, vecs: DataFrame, indexDir: String): Unit =
     q8CellOf(spark, vecs).write.mode("overwrite").parquet(indexDir)
-
-  /** [[semanticIncremental]] against a [[buildVecIndex]]-persisted
-    * index: signs ONLY `newVecs` — per-run signature compute is
-    * O(batch). Bit-identical verdicts to the in-plan derivation
-    * (SemanticDedupSpec pins it). */
-  def semanticIncrementalProbe(spark: SparkSession, newVecs: DataFrame,
-      indexDir: String): DataFrame = {
-    val batch = q8CellOf(spark, newVecs)
-    SemanticCells.verdict(batch, batch, spark.read.parquet(indexDir)
-      .select(col("vec_id"), col("q8"), col("na2"), col("cell")), SemTauE2)
-  }
 
   // ---------------------------------------------------------------
   // WIDE-lattice semantic dedup — the round-13 verdict's last
@@ -1795,7 +1730,6 @@ object SimilarityOps {
   // and the role probes keep partner-hash sharding.
   // ---------------------------------------------------------------
 
-  private[graft] val SemWideBands = 4
   private[graft] final val SemTau95 = 95L
 
   /** (vec_id, q8, na2, cells[4]) over any embedding frame — ONE native
@@ -2377,8 +2311,8 @@ object SimilarityOps {
 
   /** Re-arm EVERY memoized ANALYZE statistic of a store — called
     * wherever a maintenance job commits new artifacts for it (the
-    * cluster-index build, the IVF/PQ inserts, the bucketed signature
-    * build), so once-per-store verdicts track the store across
+    * cluster-index build, the PQ index build), so once-per-store
+    * verdicts track the store across
     * incremental growth instead of session lifetime. Round-16 (advice):
     * the round-15 form re-armed only the two dispatch detectors while
     * the same-policy memos added beside them stayed stale — every
@@ -2388,8 +2322,8 @@ object SimilarityOps {
     * vocabulary ANALYZE gates routing the LM broadcasts. The rule is
     * now categorical: a statistic DERIVED from the store dies at the
     * store's commit point; a built ARTIFACT (index dir, codebook,
-    * model frame) lives by its own lifecycle contract (rebuilds
-    * invalidate, appends don't — see [[buildIvfPqIndex]]). */
+    * model frame) lives by its own lifecycle contract (a rebuild
+    * invalidates it — see [[buildIvfPqIndex]]). */
   private[graft] def invalidateSaturationStats(spark: SparkSession,
       sfDir: String): Unit = {
     Memo.invalidateKey(spark, s"semanticWorkPerVec:$sfDir")
@@ -2637,47 +2571,6 @@ object SimilarityOps {
     * rows per document, appended as docs are admitted. */
   def buildSigIndex(spark: SparkSession, docs: DataFrame, indexDir: String): Unit =
     polyBandedBucketsOf(spark, docs).write.mode("overwrite").parquet(indexDir)
-
-  /** The catalog form of [[buildSigIndex]]: the band frame saved as a
-    * managed table bucketed BY THE PROBE'S JOIN KEY (band, bucket), so
-    * the nightly probe's sort-merge join consumes the index
-    * pre-partitioned — the corpus-sized side joins with NO exchange
-    * and only the batch side shuffles (IvfIndexSpec counts the
-    * exchanges). At 100 TB this is the difference between re-shuffling
-    * the whole signature table every night and shuffling one day's
-    * batch. */
-  def buildSigIndexBucketed(spark: SparkSession, docs: DataFrame,
-      table: String = "graft.sig_index"): Unit = {
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS ${table.split('.').head}")
-    polyBandedBucketsOf(spark, docs).write.mode("overwrite").format("parquet")
-      .bucketBy(32, "band", "bucket").sortBy("band", "bucket")
-      .saveAsTable(table)
-    // the per-mutator re-arm hook (round-16): the table name is the
-    // store key for anything a future probe memoizes against it
-    invalidateSaturationStats(spark, table)
-  }
-
-  /** [[dedupIncrementalProbe]] against a [[buildSigIndexBucketed]]
-    * table — identical verdicts, exchange-free index side. */
-  def dedupIncrementalProbeBucketed(spark: SparkSession, newDocs: DataFrame,
-      table: String = "graft.sig_index"): DataFrame =
-    polyVerdict(spark, newDocs, spark.table(table)
-      .select(col("doc_id"), col("sig"), col("band"), col("bucket")))
-
-  /** [[dedupIncremental]] against a [[buildSigIndex]]-persisted
-    * existing-corpus index: signs ONLY `newDocs` — per-run signature
-    * compute is O(batch) — and bucket-joins the stored band frame.
-    * The join still scans the index once, but it is the ~200 B/doc
-    * long-array table, not the multi-KB text corpus (and bucketing
-    * the index table by `bucket` would make even that scan prunable).
-    * Bit-identical verdicts to the in-plan derivation (IvfIndexSpec
-    * pins it). */
-  def dedupIncrementalProbe(spark: SparkSession, newDocs: DataFrame,
-      indexDir: String): DataFrame = {
-    val eband = spark.read.parquet(indexDir)
-      .select(col("doc_id"), col("sig"), col("band"), col("bucket"))
-    polyVerdict(spark, newDocs, eband)
-  }
 
   /** [[dedupIncremental]] over any (doc_id, text) frame — the spec
     * injects synthetic corpora here to pin all three verdict paths. */

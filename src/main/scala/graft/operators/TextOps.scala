@@ -1700,9 +1700,8 @@ object TextOps {
     * (BoilerplateStripSpec pins the equivalence). Correct up to the
     * inline ceiling (~10⁵–10⁶ fps, [[StripInlineMaxFps]]); a
     * 100 TB-corpus dictionary stays on the [[stripAgainstDict]] join
-    * plan, where the scalable move is the bucketed catalog table
-    * ([[SimilarityOps.buildSigIndexBucketed]] precedent) so only the
-    * batch side exchanges. */
+    * plan, where the scalable move is a catalog table bucketed by
+    * the join key, so only the batch side exchanges. */
   private[graft] def stripAgainstDictInline(spark: SparkSession,
       docs: DataFrame, fps: Seq[String]): DataFrame = {
     graft.GraftExtensions.register(spark)

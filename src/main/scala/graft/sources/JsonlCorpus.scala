@@ -108,24 +108,11 @@ object JsonlCorpus {
 
   /** Streaming form of [[docs]] — the ingestion feed for
     * [[graft.streaming.CurationStream]]: new JSONL files landing in
-    * `path` flow straight into the curation gates. Pair with
-    * [[streamQuarantine]] (its own query + checkpoint over the same
-    * files) so corrupt lines stay observable in streaming mode too. */
+    * `path` flow straight into the curation gates. */
   def stream(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     parseLines(spark.readStream.textFile(path))
       .filter(col("valid"))
       .select(col("doc_id"), col("source"), col("text"))
-  }
-
-  /** Streaming quarantine: the corrupt-line feed as its own stream —
-    * run it beside [[stream]] (separate checkpoint), sink it, alert on
-    * its rate. The same strict parse, so the two streams partition the
-    * input exactly. */
-  def streamQuarantine(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    parseLines(spark.readStream.textFile(path))
-      .filter(!col("valid"))
-      .select(col("raw_line"))
   }
 }

@@ -71,29 +71,12 @@ object MergeSink {
         max_by(col("cents"), col("event_id")).as("last_cents"),
         count(lit(1)).as("n_versions"))
 
-  /** TIME-TRAVEL view — the plain-log analog of Delta/Iceberg's
-    * `VERSION AS OF`: the last-writer-wins compaction over only the
-    * committed batches with id ≤ `maxBatch`. The checkpoint's
-    * monotonically increasing micro-batch ids double as the version
-    * ledger, so any historical ingest state is reconstructible for
-    * free from the batch-partitioned layout — what an audit or a
-    * reproducible-training-run pin actually needs. */
-  def compactedReadAsOf(spark: SparkSession, logDir: String,
-      maxBatch: Long): DataFrame =
-    committedRead(spark, logDir, Some(maxBatch))
-      .groupBy("user_id", "event_type")
-      .agg(max("event_id").as("last_event_id"),
-        max_by(col("cents"), col("event_id")).as("last_cents"),
-        count(lit(1)).as("n_versions"))
-
   /** The committed-batches view of a [[mergeBatch]] log, factored so
     * every sink built on the marker protocol (the CDC compaction
     * above, [[IngestPipeline]]'s curated landing) shares one reader:
-    * only marker-carrying batch dirs are read, optionally only those
-    * with batch id ≤ `asOf` (time travel); the result carries the
+    * only marker-carrying batch dirs are read; the result carries the
     * `batch` partition column. */
-  def committedRead(spark: SparkSession, logDir: String,
-      asOf: Option[Long] = None): DataFrame = {
+  def committedRead(spark: SparkSession, logDir: String): DataFrame = {
     val base = new org.apache.hadoop.fs.Path(logDir)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
     val MaxAttempts = 5
@@ -105,11 +88,8 @@ object MergeSink {
         val committed = fs.listStatus(base).filter(_.isDirectory)
           .map(_.getPath)
           .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d, CommitMarker)))
-          .filter(d => asOf.forall(m =>
-            d.getName.stripPrefix("batch=").toLong <= m))
           .map(_.toString).sorted
-        require(committed.nonEmpty, s"no committed batches under $logDir" +
-          asOf.fold("")(m => s" with batch <= $m"))
+        require(committed.nonEmpty, s"no committed batches under $logDir")
         result = spark.read
           .option("ignoreMissingFiles", "true")
           .option("basePath", logDir)

@@ -61,23 +61,6 @@ object SemanticStream {
     else None
   }
 
-  /** [[semanticPairsStreamSharded]] with [[semanticPairsWithinWatermark]]'s
-    * horizon — BOTH production bounds composed: hot-cell state splits
-    * across (cell, shard) keys AND members evict past the watermark
-    * horizon, so per-key state is ≤ |cell ∩ horizon|/shards however
-    * hot the cell and however long the stream runs. Same trade as the
-    * unsharded bounded form (a dup arriving later than `horizon` after
-    * its counterpart is not paired; compose with
-    * [[semanticAgainstIndex]] for full history). */
-  def semanticPairsWithinWatermarkSharded(spark: SparkSession, vecs: DataFrame,
-      horizon: String = "1 hour", shards: Int = 8): Dataset[SemPair] = {
-    import spark.implicits._
-    ProbeAppend.pairs(
-      shardCopies(cellRows(spark, vecs.withWatermark("ingest_ts", horizon), "ingest_ts"),
-        shards), cellShard, timedVec)(
-      _.vecId, Some((_.tsMillis, ProbeAppend.horizonMs(horizon))))(pairOf)
-  }
-
   /** The state-BOUNDED production form of [[semanticPairsStream]]:
     * identical signature/cell/verify, but cell members are kept only
     * within `horizon` of the watermark, so state is bounded by the

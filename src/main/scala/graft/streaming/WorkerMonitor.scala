@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming worker-liveness session (SURVEY.md ST4/ST5): the
@@ -50,30 +49,4 @@ object WorkerMonitor {
       .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
         processGroup(armTimeout = withTimeout))
   }
-
-  /** Streaming tumbling-window aggregation with a watermark — the
-    * event-time form of EventOps.eventsTumbling; late events beyond the
-    * 10-minute watermark are dropped (spec-verified via MemoryStream). */
-  def tumblingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-
-  /** Streaming SESSION windows with a watermark — the event-time form
-    * of EventOps.eventsSession (same 30-minute inactivity gap, same
-    * output shape). Stateful session merging: open sessions live in the
-    * state store, extend/merge as events arrive, and EMIT exactly when
-    * the watermark passes session_end (append mode) — so the closed
-    * sessions equal the batch computation over the same rows
-    * (StreamingSpec asserts the equality). At scale state is
-    * partitioned by user_id and bounded by the watermark horizon. */
-  def sessionCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col("n"))
 }

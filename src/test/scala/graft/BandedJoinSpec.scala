@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.operators.SimilarityOps
@@ -74,6 +74,15 @@ class BandedJoinSpec extends SparkSuite {
     // a row meets itself unless the family's cross guard forbids it.
     val sf = "/root/testdata/sf0.01"
     def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    // Each family's production verify as documented, read off its
+    // evidence columns alone: the role reference below reuses f.verify,
+    // so only this catches a changed threshold or comparison.
+    def n(r: Row, c: String): Long = r.getAs[Number](c).longValue
+    val hamming8: Row => Boolean = r => n(r, "hamming") <= 8
+    val cos95: Row => Boolean = r => n(r, "dot") > 0 && n(r, "cos2_e6") >= 95L * 95L * 100L
+    val documented = Map[String, Row => Boolean]("simhash" -> hamming8,
+      "simhash_wide" -> hamming8, "semantic" -> cos95, "semantic_wide" -> cos95,
+      "minhash_poly" -> (r => n(r, "est_jaccard_milli") >= 500L))
     for (f <- SimilarityOps.pairFamilies) {
       val banded = f.frame(spark, sf).localCheckpoint()
       for (tau <- Seq(None, Some(f.tau))) {
@@ -81,6 +90,18 @@ class BandedJoinSpec extends SparkSuite {
         assert(untiled.nonEmpty || tau.nonEmpty, s"${f.name}: no candidates")
         assert(rows(f.selfPairs(banded, 4, tau)) == untiled, s"${f.name} self, tau = $tau")
       }
+      // self candidates are the plain id-ordered self-join's, and the
+      // verify keeps exactly the documented ones
+      val plain = banded.alias("a").join(banded.alias("b"),
+        f.keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+          col(s"a.${f.id}") < col(s"b.${f.id}"))
+      val plainPairs = plain.select(col("*") +: f.kernel("a", "b"): _*)
+        .select(col(s"a.${f.id}") +: col(s"b.${f.id}") +: f.evidence("a", "b"): _*)
+      val candidates = f.selfPairs(banded, 1, None)
+      assert(rows(candidates) == rows(plainPairs.distinct()), s"${f.name} self candidates")
+      assert(rows(f.selfPairs(banded, 1, Some(f.tau))) ==
+        candidates.collect().filter(documented(f.name)).map(_.toString).toSeq.sorted,
+        s"${f.name} verify")
       val batch = banded.filter(col(f.id) % 5 === 0)
       for ((partner, within) <- Seq((banded, false), (batch, true))) {
         val guard =

@@ -206,4 +206,18 @@ class BoilerplateStripSpec extends SparkSuite {
       (3L, "", 1L),
       (4L, "fresh text only", 1L)))
   }
+
+  test("batch strip shares the executed query's pipeline on the fixture") {
+    // stripAgainstDict with the full-corpus dictionary IS
+    // boilerplate_strip_text (same helper) — pin the wiring on real
+    // fixture data so the stream path and the oracle-gated query can
+    // never diverge.
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val viaHelper = TextOps.stripAgainstDict(spark, docs,
+        TextOps.chunkDictionary(spark, docs))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    val viaQuery = TextOps.boilerplateStripText(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    assert(viaHelper == viaQuery)
+  }
 }

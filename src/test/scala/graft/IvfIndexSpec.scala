@@ -70,106 +70,4 @@ class IvfIndexSpec extends SparkSuite {
     assert(got == SimilarityOps.annIvfProbeQuery(spark, sf).collect().map(_.toSeq).toSeq,
       "second (memoized) invocation diverged")
   }
-
-  test("incremental dedup against a persisted signature index ≡ the in-plan form") {
-    import org.apache.spark.sql.functions._
-    val docs = sources.Tables.documents(spark, sf)
-      .select(col("doc_id"), col("text"))
-    val isNew = pmod(col("doc_id"), lit(5)) === 0
-    val dir = tempDir("graft-sigidx").toString
-    // ingestion-side: the existing corpus's signatures persisted once
-    SimilarityOps.buildSigIndex(spark, docs.filter(!isNew), dir)
-    // nightly-side: sign only the batch, probe the stored index
-    val probe = SimilarityOps.dedupIncrementalProbe(spark, docs.filter(isNew), dir)
-      .collect().map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getBoolean(3))).toSeq
-    val inPlan = SimilarityOps.dedupIncremental(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getBoolean(3))).toSeq
-    assert(probe == inPlan, "stored-index verdicts diverged from the in-plan form")
-    assert(probe.nonEmpty)
-  }
-
-  test("bucketed signature index: identical verdicts, index side joins with no exchange") {
-    import org.apache.spark.sql.functions._
-    val docs = sources.Tables.documents(spark, sf)
-      .select(col("doc_id"), col("text"))
-    val isNew = pmod(col("doc_id"), lit(5)) === 0
-    val dir = tempDir("graft-sigidx-b").toString
-    SimilarityOps.buildSigIndex(spark, docs.filter(!isNew), dir)
-    SimilarityOps.buildSigIndexBucketed(spark, docs.filter(!isNew), "graft.sig_index_spec")
-
-    def verdicts(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getBoolean(3))).toSeq
-    val bucketed = SimilarityOps
-      .dedupIncrementalProbeBucketed(spark, docs.filter(isNew), "graft.sig_index_spec")
-    assert(verdicts(bucketed) ==
-      verdicts(SimilarityOps.dedupIncrementalProbe(spark, docs.filter(isNew), dir)),
-      "bucketed-index verdicts diverged from the plain-index probe")
-
-    // With broadcast + AQE pinned off, the existing-match join is a
-    // sort-merge join on (band, bucket): the plain parquet index
-    // shuffles BOTH sides; the bucketed table's scan satisfies the
-    // join's partitioning, so exactly one exchange disappears.
-    val conf = spark.conf
-    val (bcast, aqe) = (conf.get("spark.sql.autoBroadcastJoinThreshold"),
-      conf.get("spark.sql.adaptive.enabled"))
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.enabled", "false")
-      def shuffles(df: org.apache.spark.sql.DataFrame): Int =
-        "Exchange hashpartitioning".r.findAllIn(
-          df.queryExecution.executedPlan.toString).length
-      val nPlain = shuffles(SimilarityOps
-        .dedupIncrementalProbe(spark, docs.filter(isNew), dir))
-      val nBucketed = shuffles(SimilarityOps
-        .dedupIncrementalProbeBucketed(spark, docs.filter(isNew), "graft.sig_index_spec"))
-      info(s"shuffle exchanges: plain-index probe $nPlain, bucketed $nBucketed")
-      assert(nBucketed == nPlain - 1,
-        s"expected exactly one fewer exchange, got $nPlain -> $nBucketed")
-    } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-      conf.set("spark.sql.adaptive.enabled", aqe)
-    }
-  }
-
-  test("ivfIndexInsert appends a batch without retraining; assignments verified independently") {
-    import org.apache.spark.sql.functions._
-    val dir = tempDir("graft-ivf-ins").toString
-    val e = SimilarityOps.ivfEmbeddings(spark, sf)
-    val isBatch = pmod(col("vec_id"), lit(7)) === 0
-    // build on the standing corpus, then insert the day's batch
-    SimilarityOps.buildIvfIndexVecs(spark, e.filter(!isBatch), dir)
-    val rawBatch = sources.Tables.embeddings(spark, sf).filter(isBatch)
-      .select(col("vec_id"), col("embedding"))
-    SimilarityOps.ivfIndexInsert(spark, rawBatch, dir)
-
-    // the cells table now covers every vector exactly once
-    val cells = spark.read.parquet(s"$dir/cells")
-      .select(col("vec_id"), col("cid").cast("long")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-    val total = e.count()
-    assert(cells.length == total, s"cells has ${cells.length} rows, corpus $total")
-    assert(cells.map(_._1).distinct.length == total, "duplicate vec_id in cells")
-
-    // independent plain-Scala argmax-cosine against the STORED
-    // centroids must reproduce every stored assignment (same
-    // sequential fold order as the native expression → same doubles)
-    val cent = spark.read.parquet(s"$dir/centroids").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-    val vecs = e.collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      d / (math.sqrt(na) * math.sqrt(nb))
-    }
-    cells.foreach { case (vid, cid) =>
-      val best = cent.minBy { case (ccid, cv) => (-cos(vecs(vid), cv), ccid) }._1
-      assert(best == cid, s"vec $vid stored in cell $cid but nearest centroid is $best")
-    }
-
-    // search still answers over the post-insert index
-    assert(SimilarityOps.annIvfProbe(spark, sf, dir).collect().nonEmpty)
-  }
 }

@@ -75,53 +75,4 @@ class IvfPqSpec extends SparkSuite {
       assert(got == want, s"vec $vid: got $got want $want")
     }
   }
-
-  test("ivfPqIndexInsert appends a batch without retraining") {
-    val dir = tempDir("graft-ivfpq3").toString
-    val existing = spark.read.parquet(s"$sf/embeddings.parquet")
-      .filter(col("vec_id") % 5 =!= 0)
-    val batch = spark.read.parquet(s"$sf/embeddings.parquet")
-      .filter(col("vec_id") % 5 === 0)
-      .select(col("vec_id"), col("embedding"))
-    // build from the existing slice only, then insert the batch
-    // (buildIvfPqIndex reads a fixture DIR; write the slice as one)
-    val sliceDir = tempDir("graft-ivfpq3s").toString
-    existing.write.mode("overwrite").parquet(s"$sliceDir/embeddings.parquet")
-    SimilarityOps.buildIvfPqIndex(spark, sliceDir, dir)
-    SimilarityOps.ivfPqIndexInsert(spark, batch, dir)
-    // every vector — existing and inserted — has exactly one code row
-    val codes = spark.read.parquet(s"$dir/codes")
-    assert(codes.count() ==
-      spark.read.parquet(s"$sf/embeddings.parquet").count())
-    val batchIds = batch.select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(batchIds.nonEmpty)
-    val insertedCodes = codes.collect()
-      .filter(r => batchIds(r.getLong(0)))
-      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(insertedCodes.keySet == batchIds)
-    // inserted codes use the STORED (existing-slice) codebook — the
-    // no-retrain contract: encode one batch vector on the driver with
-    // that codebook and compare
-    val cb = spark.read.parquet(s"$dir/codebook").collect()
-      .map(r => (r.getAs[Int]("j"), r.getAs[Int]("k")) -> r.getSeq[Long](2))
-      .toMap
-    val sub = cb((0, 0)).length
-    val probe = batch.orderBy("vec_id").limit(1).collect().head
-    val v = probe.getSeq[Float](1).map(_.toDouble)
-    val mx = v.map(math.abs).max
-    val q = v.map(x =>
-      if (mx == 0) 0L else math.floor(x * 127.0 / mx + 0.5).toLong).toArray
-    val want = (0 until SimilarityOps.PqM).map { j =>
-      val sv = q.slice(j * sub, (j + 1) * sub)
-      (0 until SimilarityOps.PqK).minBy { k =>
-        (sv.zip(cb((j, k))).map { case (x, c) => (x - c) * (x - c) }.sum, k)
-      }.toLong
-    }
-    assert(insertedCodes(probe.getLong(0)) == want)
-    // and the appended bands make inserted vectors findable: probing
-    // the updated index returns some inserted ids among results
-    val hits = SimilarityOps.annIvfPqProbe(spark, sf, dir)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(hits.nonEmpty)
-  }
 }

@@ -60,17 +60,6 @@ class JsonlCorpusSpec extends SparkSuite {
       "numeric source must quarantine, not coerce to \"42\"")
   }
 
-  test("streaming quarantine partitions the input exactly with the docs stream") {
-    val dir = writeFixture()
-    val q = JsonlCorpus.streamQuarantine(spark, dir)
-      .writeStream.format("memory").queryName("jsonl_quarantine")
-      .outputMode(OutputMode.Append).start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table("jsonl_quarantine").count() == 8)
-    } finally q.stop()
-  }
-
   test("curation dedup state survives a restart: duplicate across the restart is dropped") {
     val dir = tempDir("graft-jsonl-restart").toString
     val in = s"$dir/in"; val out = s"$dir/out"; val ckpt = s"$dir/ckpt"

@@ -120,10 +120,8 @@ class MemoSpec extends SparkSuite {
   test("every store-mutating commit point re-arms that store's ANALYZE stats") {
     // round-16 (verdict item 8 + advice): seed the full family of
     // store-derived statistic memos for a store key, run each mutator,
-    // assert the stats died — while artifacts governed by their own
-    // lifecycle (the PQ codebook under APPEND) survive.
+    // assert the stats died.
     import graft.operators.SimilarityOps
-    import org.apache.spark.sql.functions._
     val statKeys = Seq("semanticWorkPerVec", "simhashWorkPerDoc",
       "polyBucketMoments", "simhashTileFanout", "simhashWideTileFanout",
       "semWideTileFanout", "embTileFanout", "vocabApprox",
@@ -137,44 +135,19 @@ class MemoSpec extends SparkSuite {
       !built
     }
 
-    // 1. the PQ lifecycle: build (rebuild semantics) then insert
+    // 1. the PQ lifecycle: a rebuild at the same path
     val dir = tempDir("graft-memo-rearm").toString
     SimilarityOps.buildIvfPqIndex(spark, sf, dir)
-
     seed(dir)
-    val batch = sources.Tables.embeddings(spark, sf)
-      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-      .limit(8)
-    SimilarityOps.ivfPqIndexInsert(spark, batch, dir)
-    assert(alive(dir).isEmpty,
-      s"ivfPqIndexInsert left stats alive: ${alive(dir)}")
-    var cbAfterInsert = false
-    Memo.cached[Any](spark, s"pqCodebookAt:$dir") { cbAfterInsert = true; 0L }
-    assert(!cbAfterInsert,
-      "APPEND must keep the codebook memo (readPqCodebook contract)")
-    // rebuild at the same path must kill it
+    Memo.cached[Any](spark, s"pqCodebookAt:$dir") { 0L }
     SimilarityOps.buildIvfPqIndex(spark, sf, dir)
+    assert(alive(dir).isEmpty,
+      s"buildIvfPqIndex left stats alive: ${alive(dir)}")
     var cbRebuilt = false
     Memo.cached[Any](spark, s"pqCodebookAt:$dir") { cbRebuilt = true; 0L }
     assert(cbRebuilt, "REBUILD at the same path must re-arm the codebook memo")
 
-    // 2. IVF insert
-    val dir2 = tempDir("graft-memo-rearm-ivf").toString
-    SimilarityOps.buildIvfIndex(spark, sf, dir2)
-    seed(dir2)
-    SimilarityOps.ivfIndexInsert(spark, batch, dir2)
-    assert(alive(dir2).isEmpty,
-      s"ivfIndexInsert left stats alive: ${alive(dir2)}")
-
-    // 3. bucketed signature build (store key = table name)
-    val tbl = "graft.sig_index_memospec"
-    seed(tbl)
-    SimilarityOps.buildSigIndexBucketed(spark,
-      sources.Tables.documents(spark, sf).limit(20), tbl)
-    assert(alive(tbl).isEmpty,
-      s"buildSigIndexBucketed left stats alive: ${alive(tbl)}")
-
-    // 4. the cluster-index build path (the round-15 hook, now broader)
+    // 2. the cluster-index build path (the round-15 hook, now broader)
     seed(sf + "-rearm-probe")
     SimilarityOps.invalidateSaturationStats(spark, sf + "-rearm-probe")
     assert(alive(sf + "-rearm-probe").isEmpty,

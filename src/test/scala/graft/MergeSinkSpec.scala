@@ -48,40 +48,6 @@ class MergeSinkSpec extends SparkSuite {
       && r.getLong(3) == 90L))
   }
 
-  test("compactedReadAsOf reconstructs the historical ingest state") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val logDir = tmp("asoflog")
-    val ckpt = tmp("asofckpt")
-    val input = MemoryStream[(Long, String, Long, Long)]
-    val q = MergeSink.start(
-      input.toDF().toDF("user_id", "event_type", "event_id", "cents"),
-      logDir, ckpt)
-    val b0 = Seq((1L, "click", 10L, 100L), (2L, "view", 5L, 70L))
-    val b1 = Seq((1L, "click", 11L, 150L)) // supersedes event 10
-    try {
-      input.addData(b0: _*); q.processAllAvailable()
-      input.addData(b1: _*); q.processAllAvailable()
-    } finally q.stop()
-    // as of batch 0: the superseding click 11 is not yet visible
-    val asOf0 = MergeSink.compactedReadAsOf(spark, logDir, 0L)
-      .orderBy("user_id", "event_type").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    assert(asOf0.toSeq == Seq((1L, "click", 10L, 100L), (2L, "view", 5L, 70L)))
-    // as of the head: identical to the plain compacted view
-    val head = MergeSink.compactedRead(spark, logDir)
-      .orderBy("user_id", "event_type").collect().map(_.toSeq).toSeq
-    val asOf1 = MergeSink.compactedReadAsOf(spark, logDir, 1L)
-      .orderBy("user_id", "event_type").collect().map(_.toSeq).toSeq
-    assert(asOf1 == head)
-    assert(head.exists(r => r(2) == 11L), "head must see the superseder")
-    // asking for a version before the first commit fails loudly
-    intercept[Exception] {
-      MergeSink.compactedReadAsOf(spark, logDir, -1L).collect()
-    }
-  }
-
   test("batch replay is idempotent (retry overwrites its own partition)") {
     val s = spark
     import s.implicits._

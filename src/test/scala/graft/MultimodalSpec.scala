@@ -171,62 +171,6 @@ class MultimodalSpec extends SparkSuite {
       "corrupt payload must quarantine, not throw")
   }
 
-  // --- REAL video container probe (pure ISO-BMFF byte walk) ---
-
-  private def u32be(v: Long): Array[Byte] =
-    java.nio.ByteBuffer.allocate(4).putInt(v.toInt).array()
-
-  private def mp4box(typ: String, payload: Array[Byte]*): Array[Byte] = {
-    val body = payload.flatten.toArray
-    u32be(8L + body.length) ++ typ.getBytes("US-ASCII") ++ body
-  }
-
-  /** Minimal-but-real MP4: ftyp + moov{mvhd, trak{tkhd, mdia{hdlr,
-    * minf{stbl{stsd(avc1)}}}}} assembled per the ISO-BMFF box layout. */
-  private def mp4Bytes(mvhdV1: Boolean): Array[Byte] = {
-    val mvhd =
-      if (mvhdV1)
-        mp4box("mvhd", Array[Byte](1, 0, 0, 0),
-          new Array[Byte](16),            // 64-bit ctime + mtime
-          u32be(1000), u32be(0), u32be(90000)) // scale + 64-bit duration
-      else
-        mp4box("mvhd", new Array[Byte](4), // version 0 + flags
-          new Array[Byte](8),              // ctime + mtime
-          u32be(1000), u32be(90000))       // timescale, duration (90 s)
-    val tkhd = mp4box("tkhd",
-      new Array[Byte](24),                 // v/f, times, id, rsvd, duration
-      new Array[Byte](16),                 // reserved, layer/alt, vol/rsvd
-      new Array[Byte](36),                 // identity-free matrix (zeros ok)
-      u32be(1280L << 16), u32be(720L << 16)) // 16.16 fixed width × height
-    val hdlr = mp4box("hdlr", new Array[Byte](8),
-      "vide".getBytes("US-ASCII"), new Array[Byte](13))
-    val stsd = mp4box("stsd", new Array[Byte](4), u32be(1),
-      u32be(16), "avc1".getBytes("US-ASCII"), new Array[Byte](8))
-    val trak = mp4box("trak", tkhd,
-      mp4box("mdia", hdlr, mp4box("minf", mp4box("stbl", stsd))))
-    mp4box("ftyp", "isom".getBytes("US-ASCII"), u32be(0)) ++
-      mp4box("moov", mvhd, trak)
-  }
-
-  test("probeVideo walks real MP4 boxes: brand, duration, dims, codec") {
-    val s = spark
-    import s.implicits._
-    val recs = Seq(
-      MultimodalOps.MediaRecord(1L, mp4Bytes(mvhdV1 = false), "video/mp4", 0L),
-      MultimodalOps.MediaRecord(2L, mp4Bytes(mvhdV1 = true), "video/mp4", 0L),
-      MultimodalOps.MediaRecord(3L, "not a video at all".getBytes, "video/mp4", 0L),
-      MultimodalOps.MediaRecord(4L, mp4Bytes(mvhdV1 = false).take(40), "video/mp4", 0L))
-    val got = MultimodalOps.probeVideo(recs.toDS())
-      .collect().map(v => v.doc_id -> v).toMap
-    val want = MultimodalOps.VideoMeta(1L, "isom", 90000L, 1280, 720, 1,
-      "avc1", ok = true)
-    assert(got(1L) == want)
-    assert(got(2L) == want.copy(doc_id = 2L),
-      "64-bit mvhd (version 1) duration must parse identically")
-    assert(!got(3L).ok, "non-MP4 payload must quarantine, not throw")
-    assert(!got(4L).ok, "truncated moov must quarantine, not throw")
-  }
-
   // --- REAL video frame path (RIFF/AVI MJPEG demux + JDK JPEG codec) ---
 
   test("muxMjpegAvi ∘ demuxAviFrames is the identity on the frame list") {

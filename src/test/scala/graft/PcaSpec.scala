@@ -66,36 +66,6 @@ class PcaSpec extends SparkSuite {
     assert(lambdas.head > 0, "top eigenvalue must be positive")
   }
 
-  test("stream-static projection equals the batch query per vector, micro-exact") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val vecs = sources.Tables.embeddings(spark, sf)
-      .selectExpr("vec_id",
-        "transform(embedding, x -> CAST(x AS FLOAT)) AS embedding")
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-      .toSeq
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = operators.PcaOps.projectStream(spark, sf,
-        input.toDF().toDF("vec_id", "embedding"))
-      .writeStream.format("memory").queryName("pcastream")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // two micro-batches so the basis literal serves across batches
-      val (b1, b2) = vecs.splitAt(vecs.size / 2)
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-      val streamed = spark.table("pcastream").collect()
-        .map(r => r.getLong(0) -> (1 to 8).map(i => r.getLong(i))).toMap
-      val batch = operators.PcaOps.embeddingPcaProject(spark, sf).collect()
-        .map(r => r.getLong(0) -> (1 to 8).map(i => r.getLong(i))).toMap
-      assert(streamed.size == batch.size)
-      assert(streamed == batch)
-    } finally q.stop()
-  }
-
   test("embedding_pca_project equals the reference projection, micro-exact") {
     val (comps, offsets) = operators.PcaOps.pcaBasis(spark, sf)
     val got = operators.PcaOps.embeddingPcaProject(spark, sf).collect()

@@ -130,20 +130,6 @@ class SemanticDedupSpec extends SparkSuite {
     }
   }
 
-  test("stored vector index probe is bit-identical to the in-plan derivation") {
-    import graft.sources.Tables
-    val dir = tempDir("graft-vecidx").toString
-    val all = Tables.embeddings(spark, sf)
-    SimilarityOps.buildVecIndex(spark,
-      all.filter(pmod(col("vec_id"), lit(5)) =!= 0), s"$dir/idx")
-    val probed = SimilarityOps.semanticIncrementalProbe(spark,
-      all.filter(pmod(col("vec_id"), lit(5)) === 0), s"$dir/idx")
-      .collect().map(_.toSeq).toSeq
-    val inPlan = SimilarityOps.semanticIncremental(spark, sf)
-      .collect().map(_.toSeq).toSeq
-    assert(probed == inPlan)
-  }
-
   test("degenerate vectors sign to cell 255 / na2 0 (oracle COALESCE contract)") {
     // The oracle CTE COALESCEs every plane SUM and na2 to 0 so an
     // empty, all-null, or all-zero embedding lands where the native

@@ -147,49 +147,6 @@ class SemanticStreamSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("sharded+bounded form: hot-cell pairs, horizon eviction, re-seed — ≡ unsharded bounded") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dup: Seq[Float] = Seq.fill(8)(1.0f)
-    val other: Seq[Float] = Seq.tabulate(8)(i => if (i % 2 == 0) 1.0f else -1.0f)
-    def ts(t: String) = java.sql.Timestamp.valueOf(t)
-    // same scenario as the unsharded watermark test, plus an in-batch
-    // burst (4 dups at once) so the sharded in-batch ordering is hit
-    val feed: Seq[Seq[(Long, java.sql.Timestamp, Seq[Float])]] = Seq(
-      Seq((1L, ts("2024-01-01 10:00:00"), dup)),
-      Seq((2L, ts("2024-01-01 10:05:00"), dup),
-        (3L, ts("2024-01-01 10:05:30"), dup),
-        (4L, ts("2024-01-01 10:06:00"), dup),
-        (5L, ts("2024-01-01 10:06:30"), dup)),
-      Seq((6L, ts("2024-01-01 11:00:00"), other)), // advance watermark
-      Seq((7L, ts("2024-01-01 11:01:00"), dup)),   // past-horizon: no pair
-      Seq((8L, ts("2024-01-01 11:02:00"), dup)))   // re-seeded: pairs with 7
-    def run(name: String, sharded: Boolean): Set[(Long, Long)] = {
-      val input = MemoryStream[(Long, java.sql.Timestamp, Seq[Float])]
-      val df = input.toDF().toDF("vec_id", "ingest_ts", "embedding")
-      val ds =
-        if (sharded) SemanticStream.semanticPairsWithinWatermarkSharded(
-          spark, df, horizon = "10 minutes", shards = 4)
-        else SemanticStream.semanticPairsWithinWatermark(
-          spark, df, horizon = "10 minutes")
-      val q = ds.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
-      try {
-        feed.foreach { c => input.addData(c: _*); q.processAllAvailable() }
-        spark.table(name).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-      } finally q.stop()
-    }
-    val unsharded = run("semwb_u", sharded = false)
-    val sharded = run("semwb_s", sharded = true)
-    // full clique over 1-5, no pairs touching 7 from before the gap,
-    // the (7,8) re-seed pair
-    val expect = (for { a <- 1L to 5L; b <- (a + 1) to 5L } yield (a, b)).toSet + ((7L, 8L))
-    assert(unsharded == expect, s"unsharded: $unsharded")
-    assert(sharded == expect, s"sharded: $sharded")
-  }
-
   test("stream-static index probe matches every replayed vector to its original") {
     import org.apache.spark.sql.functions._
     val dir = tempDir("graft-semidx").toString

@@ -10,11 +10,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.streaming.TaskEngine._
-import graft.streaming.TaskEngineTws
 
 /** End-to-end streaming against REAL sources and sinks (VERDICT r01
-  * gap #2): file readStream → transformWithState lifecycle engine →
-  * checkpointed parquet writeStream, killed and restarted mid-stream.
+  * gap #2): file readStream → the production lifecycle engine
+  * ([[TaskHive.start]]) → checkpointed parquet writeStream, killed and
+  * restarted mid-stream.
   * The reference is watch-driven end to end
   * (/root/reference/tasks/dispatcher.go:297-309); the checkpoint's
   * offset log + state store give the Spark form its exactly-once
@@ -36,13 +36,11 @@ class StreamingE2ESpec extends SparkSuite {
     Files.move(tmp, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE)
   }
 
-  test("file source → TaskEngineTws → checkpointed parquet survives kill+restart exactly-once") {
+  test("file source → TaskHive.start → checkpointed parquet survives kill+restart exactly-once") {
     val root = tempDir("graft-e2e").toString
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     Files.createDirectories(Paths.get(in))
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val hive = TaskHive(spark, sf)
 
     def startQuery() = {
       val s = spark
@@ -51,12 +49,7 @@ class StreamingE2ESpec extends SparkSuite {
         .schema(Encoders.product[TaskEvent].schema)
         .json(in)
         .as[TaskEvent]
-      TaskEngineTws.transitions(spark, events, backoffScaleMs = 1L)
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.ProcessingTime(100))
-        .start()
+      hive.start(events, ckpt, out)
     }
     def transitions(): Seq[(String, Int, Int)] = {
       val s = spark
@@ -100,47 +93,7 @@ class StreamingE2ESpec extends SparkSuite {
       assert(all.distinct.size == 6)
       assert(!all.contains(("t1", Completed, Pending)))
       assert(all.count(_._1 == "t1") == 3)
-    } finally {
-      spark.streams.active.foreach(_.stop())
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("foreachBatch catalog sink is idempotent under batch replay") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    spark.sql(s"DROP TABLE IF EXISTS ${graft.streaming.CatalogSink.TransitionsTable}")
-    val input = MemoryStream[TaskEvent]
-    val q = graft.streaming.TaskEngine.transitions(spark, input.toDS())
-      .writeStream
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[TaskTransition], id: Long) =>
-        graft.streaming.CatalogSink.writeBatch(batch.toDF(), id))
-      .outputMode(OutputMode.Append)
-      .start()
-    try {
-      input.addData(TaskEvent("s1", "submit", null, 1),
-        TaskEvent("s2", "submit", null, 2))
-      q.processAllAvailable()
-      input.addData(TaskEvent("s1", "assign", "w1", 3))
-      q.processAllAvailable()
-      val tbl = graft.streaming.CatalogSink.TransitionsTable
-      val before = spark.table(tbl).collect().map(_.toSeq).toSet
-      assert(before.size == 3) // 2 submits + 1 assign, batch-partitioned
-      // simulate the replay a restart-after-sink-write produces: same
-      // batch content, same batchId → the partition overwrites itself
-      val batchIds = spark.table(tbl).select("batch_id")
-        .distinct().as[Long].collect().sorted
-      val replayed = spark.table(tbl)
-        .filter(col("batch_id") === batchIds.last)
-        .drop("batch_id")
-      graft.streaming.CatalogSink.writeBatch(replayed, batchIds.last)
-      val after = spark.table(tbl).collect().map(_.toSeq).toSet
-      assert(after == before, "replayed batch must not duplicate rows")
-    } finally q.stop()
+    } finally spark.streams.active.foreach(_.stop())
   }
 
   test("batch-stream unification: streamed tumbling agg equals the batch query") {

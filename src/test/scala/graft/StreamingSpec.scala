@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.WorkerMonitor
 import graft.streaming.WorkerMonitor._
 
-/** ST4 worker sessions + watermark semantics via MemoryStream. */
+/** ST4 worker sessions via MemoryStream. */
 class StreamingSpec extends SparkSuite {
 
   test("worker monitor emits 'up' once per worker") {
@@ -44,85 +44,5 @@ class StreamingSpec extends SparkSuite {
       "w1", Iterator.empty, timedOut).toList
     assert(out == List(WorkerEvent("w1", "down")))
     assert(timedOut.isRemoved)
-  }
-
-  test("streaming session windows ≡ batch session_window on the same data") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String)]
-    val df = input.toDF().toDF("ts", "user_id")
-    val q = WorkerMonitor.sessionCounts(df)
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode(OutputMode.Append).start()
-    // u1: two events 10 min apart (one session), then a third 40 min
-    // later (new session: gap > 30 min). u2: one event. Exactly-gap
-    // boundary: u3's second event lands at first + 30 min exactly →
-    // MERGES (an event at session_end extends the session; verified
-    // identical in batch and stream below).
-    val data = Seq(
-      ("2024-01-01 10:00:00", "u1"), ("2024-01-01 10:10:00", "u1"),
-      ("2024-01-01 10:50:00", "u1"),
-      ("2024-01-01 10:05:00", "u2"),
-      ("2024-01-01 10:00:00", "u3"), ("2024-01-01 10:30:00", "u3"))
-      .map { case (t, u) => (Timestamp.valueOf(t), u) }
-    try {
-      input.addData(data: _*)
-      q.processAllAvailable()
-      // sentinel far in the future: watermark passes every session_end
-      // above, so all real sessions close and emit (the sentinel's own
-      // session stays open and must NOT appear)
-      input.addData((Timestamp.valueOf("2024-01-02 00:00:00"), "zz"))
-      q.processAllAvailable()
-      val streamed = spark.table("sessions").collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).toString,
-          r.getTimestamp(2).toString, r.getLong(3))).toSet
-      val batch = data.toDF("ts", "user_id")
-        .groupBy(org.apache.spark.sql.functions.session_window(
-          org.apache.spark.sql.functions.col("ts"), "30 minutes").as("w"),
-          org.apache.spark.sql.functions.col("user_id"))
-        .count()
-        .select("user_id", "w.start", "w.end", "count").collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).toString,
-          r.getTimestamp(2).toString, r.getLong(3))).toSet
-      assert(streamed == batch,
-        s"stream $streamed\n!= batch $batch")
-      assert(streamed.count(_._1 == "u3") == 1 &&
-        streamed.exists(t => t._1 == "u3" && t._4 == 2L),
-        "exactly-gap boundary must merge into one 2-event session")
-      assert(!streamed.exists(_._1 == "zz"), "open sentinel session leaked")
-    } finally q.stop()
-  }
-
-  test("watermark drops events later than 10 minutes behind max ts") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String)]
-    val df = input.toDF().toDF("ts", "event_type")
-    val q = WorkerMonitor.tumblingCounts(df)
-      .writeStream.format("memory").queryName("tumbling")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // batch 1: events in hour 10; max ts 12:00 pushes watermark to 11:50
-      input.addData(
-        (Timestamp.valueOf("2024-01-01 10:15:00"), "click"),
-        (Timestamp.valueOf("2024-01-01 10:45:00"), "click"),
-        (Timestamp.valueOf("2024-01-01 12:00:00"), "view"))
-      q.processAllAvailable()
-      // batch 2: a late event for hour 10 (behind watermark) — dropped;
-      // advance max ts so hour-10/11/12 windows all close and emit
-      input.addData(
-        (Timestamp.valueOf("2024-01-01 10:20:00"), "click"), // LATE
-        (Timestamp.valueOf("2024-01-01 14:00:00"), "view"))
-      q.processAllAvailable()
-      input.addData((Timestamp.valueOf("2024-01-01 16:00:00"), "view"))
-      q.processAllAvailable()
-      val rows = spark.table("tumbling").collect()
-        .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2)))
-      // hour-10 click count must be 2 — the late event did NOT count
-      assert(rows.contains(("2024-01-01 10:00:00.0", "click", 2L)))
-      assert(!rows.contains(("2024-01-01 10:00:00.0", "click", 3L)))
-    } finally q.stop()
   }
 }

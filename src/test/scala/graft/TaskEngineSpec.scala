@@ -139,35 +139,4 @@ class TaskEngineSpec extends SparkSuite {
     } finally q.stop()
     }
   }
-
-  test("transformWithState engine requires the RocksDB provider (pinned Spark contract)") {
-    // the TWS engine (TaskEngineTws) cannot be dual-provider: Spark
-    // rejects transformWithState on the HDFS-backed store — state
-    // variables/timers need RocksDB's column families. Pin that here so
-    // the provider matrix is explicit: fMGWS runs on both (above), TWS
-    // on RocksDB only (TaskEngineTwsSpec / StreamingE2ESpec).
-    withProvider(
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider") {
-      val s = spark
-      import s.implicits._
-      implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[TaskEvent]
-      val err = intercept[Exception] {
-        val q = graft.streaming.TaskEngineTws
-          .transitions(spark, input.toDS(), backoffScaleMs = 1L)
-          .writeStream.format("memory").queryName("tws_hdfs_reject")
-          .outputMode(OutputMode.Append).start()
-        try {
-          input.addData(TaskEvent("t1", "submit", null, 1))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      def messages(t: Throwable): Seq[String] =
-        if (t == null) Seq.empty
-        else Option(t.getMessage).toSeq ++ messages(t.getCause)
-      assert(messages(err).exists(m =>
-        m.contains("RocksDB") || m.contains("STATE_STORE")),
-        s"expected a state-store provider rejection, got: $err")
-    }
-  }
 }
